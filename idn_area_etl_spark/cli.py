@@ -24,7 +24,10 @@ import signal
 import sys
 import time
 from collections.abc import Iterator, Sequence
+from functools import reduce
 from pathlib import Path
+
+from pyspark.sql import DataFrame
 
 from idn_area_etl_spark.config import ConfigError, load_config
 from idn_area_etl_spark.operators.registry import extract_all
@@ -134,14 +137,6 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _union_entities(
-    acc: dict | None, new: dict
-) -> dict:
-    if acc is None:
-        return dict(new)
-    return {k: acc[k].unionByName(new[k]) for k in acc}
-
-
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     if args.version:
@@ -181,7 +176,10 @@ def main(argv: list[str] | None = None) -> int:
         # The reference's chunk loop (cli.py:170-195): page chunks are
         # processed one at a time; a SIGINT finishes the CURRENT chunk,
         # skips the rest, and still flushes + reports what it has.
-        entities = None
+        # Chunks are unioned before extraction, so first-seen province
+        # dedup is run-global like the reference's ``_seen_provinces``
+        # (extractors.py:110-112), not per chunk.
+        raws = []
         if args.fixture_json is not None:
             grids = [
                 (int(p), int(t), g)
@@ -192,8 +190,7 @@ def main(argv: list[str] | None = None) -> int:
                 if interrupted:
                     break
                 chunk_grids = [g for g in grids if g[0] in set(chunk)]
-                raw = raw_from_cell_grids(spark, chunk_grids)
-                entities = _union_entities(entities, extract_all(raw))
+                raws.append(raw_from_cell_grids(spark, chunk_grids))
         else:
             total_pages = probe_page_count(str(args.pdf_path))
             pages = (
@@ -204,16 +201,15 @@ def main(argv: list[str] | None = None) -> int:
             for chunk in chunked(pages, args.chunk_size):
                 if interrupted:
                     break
-                raw = pdf_to_raw_tables(
+                raws.append(pdf_to_raw_tables(
                     spark, str(args.pdf_path), chunk, args.chunk_size
-                )
-                entities = _union_entities(entities, extract_all(raw))
+                ))
 
-        if entities is None:
+        if not raws:
             # interrupted before the first chunk: still emit the
             # header-only files (open-handles contract) and exit 1
-            raw = raw_from_cell_grids(spark, [])
-            entities = extract_all(raw)
+            raws.append(raw_from_cell_grids(spark, []))
+        entities = extract_all(reduce(DataFrame.unionByName, raws))
         counts = write_all_entities(
             entities, args.destination, output_name, config,
             exact=not args.distributed,

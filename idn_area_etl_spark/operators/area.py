@@ -106,7 +106,8 @@ def extract_areas(routed: DataFrame) -> dict[str, DataFrame]:
     """Full area dataflow → four entity DataFrames.
 
     The classified stream is split by four filters off one plan; the
-    caller should ``persist()`` upstream when materializing all four
+    exact CSV sink (writer.py) unions the four back into one query, so
+    the shared upstream executes once with nothing persisted
     (multi-sink fan-out, SURVEY.md §2.1 S6).  Province codes dedup
     first-seen in document order (A1).
     """

@@ -152,8 +152,10 @@ def extract_all(raw: DataFrame) -> dict[str, DataFrame]:
 
     Returns the five entity DataFrames keyed 'province', 'regency',
     'district', 'village', 'island' (reference Area literal,
-    config.py:7).  The routed intermediate is cached by the caller if
-    multiple sinks follow (SURVEY.md §2.1 S6).
+    config.py:7).  They share one routed plan and nothing is cached:
+    the exact CSV sink runs all five as one query (writer.py), and
+    other consumers that act on each frame separately re-execute the
+    shared plan per action (SURVEY.md §2.1 S6).
     """
     from idn_area_etl_spark.operators.area import extract_areas
     from idn_area_etl_spark.operators.island import extract_islands

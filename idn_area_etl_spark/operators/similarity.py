@@ -257,7 +257,7 @@ def lsh_bucket_expr(vec: Column, table_planes: list[list[float]]) -> Column:
 
 
 def lsh_ann_topk(
-    queries: DataFrame,
+    queries: DataFrame | None,
     corpus: DataFrame,
     k: int = 3,
     n_planes: int = 8,
@@ -288,7 +288,10 @@ def lsh_ann_topk(
     (pass ``queries=None``); the query side is then DERIVED from the
     staged corpus projection — same rows, same per-row expressions —
     so the corpus parquet is scanned exactly once for the whole query.
+    Exactly one of ``queries`` and ``query_pred`` must be given.
     """
+    if (queries is None) == (query_pred is None):
+        raise ValueError("pass exactly one of queries and query_pred")
     planes = _deterministic_planes(n_tables, n_planes, dim)
     from idn_area_etl_spark.operators.dedup import _stage
 

@@ -25,8 +25,10 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 RAW_TABLE_SCHEMA = T.StructType(
     [
@@ -36,6 +38,8 @@ RAW_TABLE_SCHEMA = T.StructType(
         T.StructField("cells", T.ArrayType(T.StringType()), False),
     ]
 )
+
+_RAW_ARROW_SCHEMA = to_arrow_schema(RAW_TABLE_SCHEMA)
 
 
 def raw_from_cell_grids(
@@ -49,9 +53,19 @@ def raw_from_cell_grids(
     ``astype(str)``).  This is the test-side stand-in for the PDF
     ingestion stage, mirroring how the reference tests fabricate
     camelot frames instead of parsing PDFs.
+
+    The rows travel to the JVM as one Arrow table, so the plan leaf is
+    a ``LocalRelation``: every scan of it reads JVM memory, where a
+    list of tuples would become a pickled Python RDD that each scan
+    re-reads through Python workers.
     """
-    rows = []
+    columns: dict[str, list] = {name: [] for name in _RAW_ARROW_SCHEMA.names}
     for page_no, table_no, grid in tables:
         for row_no, row in enumerate(grid):
-            rows.append((page_no, table_no, row_no, [str(c) for c in row]))
-    return spark.createDataFrame(rows, RAW_TABLE_SCHEMA)
+            columns["page_no"].append(page_no)
+            columns["table_no"].append(table_no)
+            columns["row_no"].append(row_no)
+            columns["cells"].append([str(c) for c in row])
+    return spark.createDataFrame(
+        pa.table(columns, schema=_RAW_ARROW_SCHEMA), RAW_TABLE_SCHEMA
+    )

@@ -57,6 +57,29 @@ def test_cli_end_to_end_with_fixture(spark, tmp_path: Path):
     assert "11.01.01,11.01,Bakongan" in (dest / "doc.district.csv").read_text()
 
 
+def test_cli_dedups_provinces_across_chunks(spark, tmp_path: Path):
+    """With one page per chunk, page 2's repeat of province '11' is
+    still dropped: first-seen is run-global (reference
+    ``_seen_provinces``, extractors.py:110-112)."""
+    page2 = [
+        ["K O D E", "NAMA PROVINSI", "", "", "", "", ""],
+        ["", "", "", "", "", "", ""],
+        ["11", "Aceh Duplikat", "", "", "", "", ""],
+        ["12", "Sumatera Utara", "", "", "", "", ""],
+    ]
+    fixture = tmp_path / "tables.json"
+    fixture.write_text(json.dumps([[1, 0, AREA_GRID], [2, 0, page2]]))
+    dest = tmp_path / "out"
+    rc = main([
+        "doc.pdf", "-d", str(dest), "-o", "doc", "-c", "1",
+        "--fixture-json", str(fixture),
+    ])
+    assert rc == 0
+    assert (dest / "doc.province.csv").read_bytes() == (
+        b"code,name\r\n11,Aceh\r\n12,Sumatera Utara\r\n"
+    )
+
+
 def test_cli_zero_rows_exits_1(spark, tmp_path: Path):
     fixture = tmp_path / "empty.json"
     fixture.write_text(json.dumps([[1, 0, [["NO", "DATA"], ["1", "x"]]]]))

@@ -86,6 +86,29 @@ def test_write_all_entities_golden_bytes(spark, tmp_path: Path):
     )
 
 
+#: Spark jobs the exact sink may run for the fixture above.  The five
+#: entity files come from one query, which runs 6 jobs (its shuffle map
+#: stages, the routing broadcasts and the result); a sort and an
+#: iterator per entity ran 22.
+EXACT_SINK_JOB_BUDGET = 7
+
+
+def test_write_all_entities_runs_one_query_within_job_budget(spark, tmp_path: Path):
+    sc = spark.sparkContext
+    group = "test-exact-sink-job-budget"
+    raw = raw_from_cell_grids(spark, [(1, 0, AREA_GRID), (2, 0, ISLAND_GRID)])
+    sc.setJobGroup(group, "exact sink job budget")
+    try:
+        counts = write_all_entities(
+            extract_all(raw), tmp_path, "out", default_config(), exact=True
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sum(counts.values()) == 3
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= EXACT_SINK_JOB_BUDGET, sorted(jobs)
+
+
 def test_exact_writer_orders_by_document_position(spark, tmp_path: Path):
     df = spark.createDataFrame(
         [(2, 0, 5, "b"), (1, 0, 3, "a"), (2, 1, 0, "c")],

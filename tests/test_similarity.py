@@ -87,6 +87,13 @@ def test_lsh_ann_finds_identical_vector(spark, emb):
     assert out[0]["cosine"] == 1.0
 
 
+def test_lsh_ann_requires_exactly_one_query_side(spark, emb):
+    with pytest.raises(ValueError, match="exactly one"):
+        lsh_ann_topk(emb, emb, dim=DIM, query_pred=lambda c: c < 2)
+    with pytest.raises(ValueError, match="exactly one"):
+        lsh_ann_topk(None, emb, dim=DIM)
+
+
 def test_lsh_recall_vs_brute_force(spark, emb):
     brute = cosine_topk(emb, emb, k=1).collect()
     approx = lsh_ann_topk(emb, emb, k=1, n_planes=2, n_tables=6, dim=DIM).collect()
