@@ -18,9 +18,7 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import re
-import signal
 import sys
 import time
 from collections.abc import Iterator, Sequence
@@ -44,26 +42,6 @@ from idn_area_etl_spark.writer import write_all_entities
 OUTPUT_NAME_PATTERN = re.compile(r"^[\w-]+$")
 
 PACKAGE_NAME = "idn-area-etl-spark"
-
-#: Graceful-shutdown state (reference cli.py:26-37): SIGINT flips the
-#: flag; the chunk loop finishes the CURRENT chunk, then stops pulling
-#: new chunks, flushes what was extracted, and reports partial counts.
-MAIN_PID = os.getpid()
-interrupted = False
-
-
-def handle_sigint(signum: int, frame) -> None:
-    """Reference ``handle_sigint`` semantics (cli.py:29-34): set the
-    flag everywhere, but only the main process echoes the notice."""
-    global interrupted
-    interrupted = True
-    if os.getpid() == MAIN_PID:
-        print("\n⛔ Aborted by user. Finishing current chunk and exiting...")
-
-
-def install_sigint_handler() -> None:
-    signal.signal(signal.SIGINT, handle_sigint)
-
 
 def version_string() -> str:
     """Package version: installed metadata first, falling back to the
@@ -126,9 +104,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--parallel", action="store_true",
                    help="accepted for compatibility; Spark is always parallel")
     p.add_argument("--config", type=Path, default=None)
-    p.add_argument("--distributed", action="store_true",
-                   help="scale-mode multi-part CSV output instead of "
-                   "golden-exact single files")
     p.add_argument("--fixture-json", type=Path, default=None,
                    help="JSON [[page_no, table_no, grid], ...] to run without "
                    "a PDF parser")
@@ -169,16 +144,13 @@ def main(argv: list[str] | None = None) -> int:
     stem = args.pdf_path.stem if args.pdf_path is not None else "fixture"
     output_name = args.output or stem
 
-    install_sigint_handler()
     started = time.perf_counter()
     spark = get_spark(app_name="idnareaetl-spark")
     try:
         # The reference's chunk loop (cli.py:170-195): page chunks are
-        # processed one at a time; a SIGINT finishes the CURRENT chunk,
-        # skips the rest, and still flushes + reports what it has.
-        # Chunks are unioned before extraction, so first-seen province
-        # dedup is run-global like the reference's ``_seen_provinces``
-        # (extractors.py:110-112), not per chunk.
+        # read one at a time.  Chunks are unioned before extraction, so
+        # first-seen province dedup is run-global like the reference's
+        # ``_seen_provinces`` (extractors.py:110-112), not per chunk.
         raws = []
         if args.fixture_json is not None:
             grids = [
@@ -187,8 +159,6 @@ def main(argv: list[str] | None = None) -> int:
             ]
             pages = sorted({p for p, _, _ in grids})
             for chunk in chunked(pages, args.chunk_size):
-                if interrupted:
-                    break
                 chunk_grids = [g for g in grids if g[0] in set(chunk)]
                 raws.append(raw_from_cell_grids(spark, chunk_grids))
         else:
@@ -199,27 +169,29 @@ def main(argv: list[str] | None = None) -> int:
                 else list(range(1, total_pages + 1))
             )
             for chunk in chunked(pages, args.chunk_size):
-                if interrupted:
-                    break
                 raws.append(pdf_to_raw_tables(
                     spark, str(args.pdf_path), chunk, args.chunk_size
                 ))
 
         if not raws:
-            # interrupted before the first chunk: still emit the
-            # header-only files (open-handles contract) and exit 1
+            # no tables at all: still emit the header-only files
+            # (open-handles contract) and exit 1 below
             raws.append(raw_from_cell_grids(spark, []))
         entities = extract_all(reduce(DataFrame.unionByName, raws))
         counts = write_all_entities(
-            entities, args.destination, output_name, config,
-            exact=not args.distributed,
+            entities, args.destination, output_name, config
         )
     except RuntimeError as exc:
         print(f"error: {exc}", file=sys.stderr)
         return 1
+    except KeyboardInterrupt:
+        # Ctrl-C; PySpark's SIGINT handler cancels the running jobs
+        # before raising this
+        print("\n⛔ Aborted by user.", file=sys.stderr)
+        return 130
 
-    total = sum(c for c in counts.values() if c > 0)
-    if total == 0 and not args.distributed:
+    total = sum(counts.values())
+    if total == 0:
         print("error: no rows extracted", file=sys.stderr)
         return 1
     print(

@@ -5,9 +5,9 @@ idnareaetl.toml): per-entity output headers, filename suffix, and
 flush batch size, loaded through a swappable ``FileLoader`` protocol
 (kept for test injection, mirroring tests/test_config.py:9-22).
 
-In the Spark engine ``batch_size`` has no buffering role (executors
-buffer writes natively); it is retained for config compatibility and
-mapped to ``maxRecordsPerFile`` in the distributed sink.
+In the Spark engine ``batch_size`` has no role (the CSV sink streams
+rows through one buffered writer); it is still parsed and validated so
+the reference's TOML files load unchanged.
 """
 
 from __future__ import annotations

@@ -215,14 +215,6 @@ def staged_scope(spark: SparkSession):
                 pass
 
 
-def shingles_expr(text: Column, n: int = 3) -> Column:
-    """Distinct character n-gram shingles of a string column."""
-    positions = F.sequence(F.lit(1), F.length(text) - F.lit(n - 1))
-    return F.array_distinct(
-        F.transform(positions, lambda i: F.substring(text, i, F.lit(n)))
-    )
-
-
 def token_shingles_expr(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles (w-shingling) — far more
     discriminative than char shingles on shared-vocabulary corpora,

@@ -1,23 +1,19 @@
-"""Entity CSV sinks: golden-exact single-file mode + distributed mode.
+"""Entity CSV sink: golden-exact single files.
 
 The reference writes each entity to one CSV via Python's ``csv``
 module with minimal quoting, doubled quotes, CRLF line endings, and a
 header row even for zero-row runs (writer.py:34-46, golden fixtures).
 Spark's CSV writer differs in quoting details and produces multi-part
-output, so two sinks exist:
-
-- :func:`_write_csvs_exact` — Python ``csv.writer``s fed by ONE
-  query: the entity frames are unioned as (sink, lineage, stringified
-  values), sorted in one single-partition sort and streamed once
-  through ``toLocalIterator()``; each row goes to its entity's file.
-  The shared upstream (classify → route → extract) therefore runs
-  once for all five files instead of once per file.  Byte parity with
-  the reference; use for golden comparison / modest outputs (every
-  row passes through one task and this Python process).
-  :func:`write_entity_csv_exact` is its one-file case.
-- :func:`write_entity_csv_distributed` — ``df.write.csv`` with header,
-  for scale: one file per partition, ``maxRecordsPerFile`` mapped from
-  the config's batch_size heritage.
+output, so :func:`_write_csvs_exact` uses Python ``csv.writer``s fed
+by ONE query: the entity frames are unioned as (sink, lineage,
+stringified values), sorted in one single-partition sort and streamed
+once through ``toLocalIterator()``; each row goes to its entity's
+file.  The shared upstream (classify → route → extract) therefore
+runs once for all five files instead of once per file.  Byte parity
+with the reference; every row passes through one task and this Python
+process, so outputs at scale go through
+:func:`idn_area_etl_spark.sinks.write_partitioned_parquet` instead.
+:func:`write_entity_csv_exact` is its one-file case.
 """
 
 from __future__ import annotations
@@ -92,35 +88,14 @@ def write_entity_csv_exact(
     return _write_csvs_exact([(df, path, headers)], order)[0]
 
 
-def write_entity_csv_distributed(
-    df: DataFrame,
-    path: Path | str,
-    headers: list[str],
-    order: list[str] | None = None,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Scale-mode CSV sink: parallel writers, optional within-partition
-    ordering (sortWithinPartitions keeps document order per file
-    without a global sort barrier)."""
-    order = ORDER_COLS if order is None else order
-    ordered = df.sortWithinPartitions(*order) if order else df
-    out = ordered.select(*[_as_csv_cell(h).alias(h) for h in headers])
-    writer = out.write.mode("overwrite").option("header", True)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.csv(str(path))
-
-
 def write_all_entities(
     entities: dict[str, DataFrame],
     destination: Path | str,
     output_name: str,
     config,
-    exact: bool = True,
 ) -> dict[str, int]:
     """Multi-sink fan-out (SURVEY.md §2.1 S6): write every entity from
-    one extraction pass.  Returns per-entity row counts (-1 each in
-    distributed mode, which does not count)."""
+    one extraction pass.  Returns per-entity row counts."""
     destination = Path(destination)
     destination.mkdir(parents=True, exist_ok=True)
     sinks = []
@@ -132,11 +107,4 @@ def write_all_entities(
             df = df.withColumnRenamed("parent_code", dc.output_headers[1])
         target = destination / f"{output_name}.{dc.filename_suffix}.csv"
         sinks.append((df, target, dc.output_headers))
-    if exact:
-        return dict(zip(entities, _write_csvs_exact(sinks)))
-    for (df, target, headers), area in zip(sinks, entities):
-        write_entity_csv_distributed(
-            df, target, headers,
-            max_records_per_file=config.data[area].batch_size,
-        )
-    return {area: -1 for area in entities}
+    return dict(zip(entities, _write_csvs_exact(sinks)))

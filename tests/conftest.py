@@ -17,8 +17,9 @@ from idn_area_etl_spark.session import get_spark
 #: verification and any CI able to afford them MUST set the variable
 #: (the full gated suite is re-run and recorded every round — see
 #: OPTIMIZATION_r09.md).  Coverage is not weakened, only split: the
-#: fast surface still runs every oracle-parity, operator and
-#: streaming test.
+#: fast surface still runs every operator and streaming test, and
+#: ``test_oracle_parity.py`` checks every oracle-backed spec against
+#: DuckDB.
 _SLOW_MODULES = {
     "test_plan_quality",
     "test_scaling",

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import signal
 from pathlib import Path
 
 from idn_area_etl_spark.cli import build_parser, main, validate_args
@@ -124,94 +125,46 @@ def test_streaming_micro_batches_dedup_across_chunks(spark, tmp_path: Path):
 
 
 # ---------------------------------------------------------------------------
-# Graceful SIGINT shutdown (reference cli.py:26-37, test_cli.py:401-508)
+# Ctrl-C and zero-table inputs
 # ---------------------------------------------------------------------------
 
 
-def test_handle_sigint_sets_flag_and_echoes_in_main_pid(monkeypatch, capsys):
-    import os
-    import signal as _signal
-
-    from idn_area_etl_spark import cli as cli_mod
-
-    cli_mod.interrupted = False
-    monkeypatch.setattr(os, "getpid", lambda: cli_mod.MAIN_PID)
-    try:
-        cli_mod.handle_sigint(_signal.SIGINT, None)
-        assert cli_mod.interrupted is True
-        assert "Aborted by user" in capsys.readouterr().out
-    finally:
-        cli_mod.interrupted = False
-
-
-def test_handle_sigint_other_pid_sets_flag_silently(monkeypatch, capsys):
-    import os
-    import signal as _signal
-
-    from idn_area_etl_spark import cli as cli_mod
-
-    cli_mod.interrupted = False
-    monkeypatch.setattr(os, "getpid", lambda: cli_mod.MAIN_PID + 1)
-    try:
-        cli_mod.handle_sigint(_signal.SIGINT, None)
-        assert cli_mod.interrupted is True
-        assert capsys.readouterr().out == ""
-    finally:
-        cli_mod.interrupted = False
-
-
-def test_extract_breaks_on_interrupt_and_flushes_partial(
-    spark, tmp_path: Path, monkeypatch
-):
-    """Flag flipped during chunk 1 of 4 -> exactly one chunk ingested,
-    its rows flushed, summary printed, exit 0 (reference
-    test_extract_breaks_on_interrupt_branch)."""
-    from idn_area_etl_spark import cli as cli_mod
-
-    fixture = tmp_path / "tables.json"
-    fixture.write_text(
-        json.dumps([[p, 0, AREA_GRID] for p in (1, 2, 3, 4)])
-    )
-    calls = {"n": 0}
-    real = cli_mod.raw_from_cell_grids
-
-    def flip_after_first(spark_, grids):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            cli_mod.interrupted = True
-        return real(spark_, grids)
-
-    cli_mod.interrupted = False
-    monkeypatch.setattr(cli_mod, "raw_from_cell_grids", flip_after_first)
-    dest = tmp_path / "out"
-    try:
-        rc = cli_mod.main([
-            "doc.pdf", "-d", str(dest), "-o", "x", "-c", "1",
-            "--fixture-json", str(fixture),
-        ])
-    finally:
-        cli_mod.interrupted = False
-    assert calls["n"] == 1, "expected the loop to break after chunk 1"
-    assert rc == 0
-    assert (dest / "x.province.csv").read_bytes() == b"code,name\r\n11,Aceh\r\n"
-
-
-def test_interrupt_before_first_chunk_writes_headers_and_exits_1(
-    spark, tmp_path: Path
+def test_cli_keyboard_interrupt_exits_130(
+    spark, tmp_path: Path, monkeypatch, capsys
 ):
     from idn_area_etl_spark import cli as cli_mod
+
+    def interrupted(*args, **kwargs):
+        raise KeyboardInterrupt
 
     fixture = tmp_path / "tables.json"
     fixture.write_text(json.dumps([[1, 0, AREA_GRID]]))
+    monkeypatch.setattr(cli_mod, "write_all_entities", interrupted)
+    rc = cli_mod.main([
+        "doc.pdf", "-d", str(tmp_path / "out"), "--fixture-json", str(fixture),
+    ])
+    assert rc == 130
+    assert "Aborted by user" in capsys.readouterr().err
+
+
+def test_cli_leaves_sigint_handler_alone(spark, tmp_path: Path):
+    fixture = tmp_path / "tables.json"
+    fixture.write_text(json.dumps([[1, 0, AREA_GRID]]))
+    before = signal.getsignal(signal.SIGINT)
+    rc = main([
+        "doc.pdf", "-d", str(tmp_path / "out"), "--fixture-json", str(fixture),
+    ])
+    assert rc == 0
+    assert signal.getsignal(signal.SIGINT) is before
+
+
+def test_cli_zero_tables_writes_headers_and_exits_1(spark, tmp_path: Path):
+    fixture = tmp_path / "tables.json"
+    fixture.write_text("[]")
     dest = tmp_path / "out"
-    cli_mod.interrupted = True
-    try:
-        rc = cli_mod.main([
-            "doc.pdf", "-d", str(dest), "-o", "x",
-            "--fixture-json", str(fixture),
-        ])
-    finally:
-        cli_mod.interrupted = False
+    rc = main([
+        "doc.pdf", "-d", str(dest), "-o", "x", "--fixture-json", str(fixture),
+    ])
     assert rc == 1
     assert (dest / "x.province.csv").read_bytes() == b"code,name\r\n"
 

@@ -67,7 +67,7 @@ ISLAND_GRID = [
 def test_write_all_entities_golden_bytes(spark, tmp_path: Path):
     raw = raw_from_cell_grids(spark, [(1, 0, AREA_GRID), (2, 0, ISLAND_GRID)])
     counts = write_all_entities(
-        extract_all(raw), tmp_path, "out", default_config(), exact=True
+        extract_all(raw), tmp_path, "out", default_config()
     )
     assert counts == {
         "province": 1, "regency": 1, "district": 0, "village": 0, "island": 1,
@@ -100,7 +100,7 @@ def test_write_all_entities_runs_one_query_within_job_budget(spark, tmp_path: Pa
     sc.setJobGroup(group, "exact sink job budget")
     try:
         counts = write_all_entities(
-            extract_all(raw), tmp_path, "out", default_config(), exact=True
+            extract_all(raw), tmp_path, "out", default_config()
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -1,64 +1,16 @@
-"""Eleventh-wave tests: oracle parity at sf0.001 plus the dataset-prep
-invariants (entropy bounds, split determinism/ratios, packing budget)."""
+"""Eleventh-wave tests: the dataset-prep invariants (entropy bounds,
+split determinism/ratios, packing budget)."""
 
 from __future__ import annotations
 
 import math
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import all_specs, wave11
+from idn_area_etl_spark.plans import all_specs
 from idn_area_etl_spark.plans.wave11 import PACK_BUDGET
-from idn_area_etl_spark.sources.tables import TABLE_NAMES, load_table
-
-ORACLE_NAMES = [s.name for s in wave11.SPECS if s.oracle is not None]
-
-
-def _norm(v) -> str:
-    if v is None:
-        return "<null>"
-    if isinstance(v, float):
-        return "<null>" if math.isnan(v) else repr(v)
-    return str(v)
-
-
-def _canonical(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return (
-        [cols[i] for i in order],
-        sorted(tuple(_norm(r[i]) for i in order) for r in rows),
-    )
-
-
-@pytest.fixture(scope="module")
-def oracle(sf_dir):
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-def test_all_wave11_registered():
-    specs = all_specs()
-    for spec in wave11.SPECS:
-        assert spec.name in specs
-
-
-@pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_wave11_matches_duckdb_oracle(spark, sf_dir, oracle, name):
-    spec = all_specs()[name]
-    sdf = spec.builder(spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = oracle.sql(spec.oracle)
-    orows = rel.fetchall()
-    s_cols, s_can = _canonical(srows, sdf.columns)
-    o_cols, o_can = _canonical(orows, rel.columns)
-    assert s_cols == o_cols
-    assert len(s_can) == len(o_can)
-    assert s_can == o_can
+from idn_area_etl_spark.sources.tables import load_table
 
 
 # --------------------------------------------------------------------------
@@ -73,7 +25,7 @@ def test_entropy_bounds(spark, sf_dir):
         assert 0.0 <= r.char_entropy <= math.log2(r.n_distinct_chars) + 1e-9
 
 
-def test_entropy_degenerate_and_uniform(spark, sf_dir, oracle):
+def test_entropy_degenerate_and_uniform(spark, sf_dir):
     # swap the documents view for planted fixtures and reuse the oracle SQL
     con = duckdb.connect()
     con.sql(

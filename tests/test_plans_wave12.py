@@ -1,51 +1,10 @@
-"""Flagship curation-pipeline tests: sf0.001 oracle parity, pipeline
-conservation invariants, and the map-side-combinable dedup plan shape."""
+"""Flagship curation-pipeline tests: pipeline conservation
+invariants and the map-side-combinable dedup plan shape."""
 
 from __future__ import annotations
 
-import math
-
-import duckdb
-import pytest
-
-from idn_area_etl_spark.plans import all_specs, wave12
-from idn_area_etl_spark.sources.tables import TABLE_NAMES, load_table
-
-
-def _norm(v) -> str:
-    if v is None:
-        return "<null>"
-    if isinstance(v, float):
-        return "<null>" if math.isnan(v) else repr(v)
-    return str(v)
-
-
-def _canonical(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return (
-        [cols[i] for i in order],
-        sorted(tuple(_norm(r[i]) for i in order) for r in rows),
-    )
-
-
-def test_registered():
-    assert "p_curation_pipeline" in all_specs()
-
-
-def test_pipeline_matches_duckdb_oracle(spark, sf_dir):
-    spec = all_specs()["p_curation_pipeline"]
-    sdf = spec.builder(spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    rel = con.sql(spec.oracle)
-    orows = rel.fetchall()
-    s_cols, s_can = _canonical(srows, sdf.columns)
-    o_cols, o_can = _canonical(orows, rel.columns)
-    con.close()
-    assert s_cols == o_cols
-    assert s_can == o_can
+from idn_area_etl_spark.plans import all_specs
+from idn_area_etl_spark.sources.tables import load_table
 
 
 def test_pipeline_conservation(spark, sf_dir):

@@ -1,57 +1,10 @@
-"""Thirty-ninth-wave tests: oracle parity at sf0.001 plus tile-plan
-geometry identities and cross-modal join coverage."""
+"""Thirty-ninth-wave tests: tile-plan geometry identities and
+cross-modal join coverage."""
 
 from __future__ import annotations
 
-import math
-
-import duckdb
-import pytest
-from pyspark.sql import functions as F
-
-from idn_area_etl_spark.plans import all_specs, wave39
-from idn_area_etl_spark.sources.tables import TABLE_NAMES, load_table
-
-ORACLE_NAMES = [s.name for s in wave39.SPECS if s.oracle is not None]
-
-
-def _norm(v) -> str:
-    if v is None:
-        return "<null>"
-    if isinstance(v, float):
-        return "<null>" if math.isnan(v) else repr(v)
-    return str(v)
-
-
-def _canonical(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return (
-        [cols[i] for i in order],
-        sorted(tuple(_norm(r[i]) for i in order) for r in rows),
-    )
-
-
-def test_all_wave39_registered():
-    specs = all_specs()
-    for spec in wave39.SPECS:
-        assert spec.name in specs
-
-
-@pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_wave39_matches_duckdb_oracle(spark, sf_dir, name):
-    spec = all_specs()[name]
-    sdf = spec.builder(spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    rel = con.sql(spec.oracle)
-    orows = rel.fetchall()
-    s_cols, s_can = _canonical(srows, sdf.columns)
-    o_cols, o_can = _canonical(orows, rel.columns)
-    con.close()
-    assert s_cols == o_cols
-    assert s_can == o_can
+from idn_area_etl_spark.plans import wave39
+from idn_area_etl_spark.sources.tables import load_table
 
 
 def test_tile_plan_geometry(spark, sf_dir):

@@ -1,70 +1,13 @@
-"""Fifth-wave queries: oracle parity at sf0.001 plus the sketch- and
-sampling-specific invariants that SQL can't express."""
+"""Fifth-wave queries: the sketch- and sampling-specific invariants
+that SQL can't express."""
 
 from __future__ import annotations
 
-import math
-from datetime import datetime
-from decimal import Decimal
-
-import duckdb
-import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import all_specs, wave5
+from idn_area_etl_spark.plans import all_specs
 from idn_area_etl_spark.plans.wave5 import hash_sample_predicate
-from idn_area_etl_spark.sources.tables import TABLE_NAMES, load_table
-
-ORACLE_NAMES = [s.name for s in wave5.SPECS if s.oracle is not None]
-
-
-def _norm(v) -> str:
-    if v is None:
-        return "<null>"
-    if isinstance(v, float):
-        return "<null>" if math.isnan(v) else repr(v)
-    if isinstance(v, Decimal):
-        return repr(float(v))
-    if isinstance(v, datetime):
-        return v.isoformat()
-    return str(v)
-
-
-def _canonical(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return (
-        [cols[i] for i in order],
-        sorted(tuple(_norm(r[i]) for i in order) for r in rows),
-    )
-
-
-@pytest.fixture(scope="module")
-def oracle(sf_dir):
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-def test_all_wave5_registered():
-    specs = all_specs()
-    for spec in wave5.SPECS:
-        assert spec.name in specs
-
-
-@pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_wave5_matches_duckdb_oracle(spark, sf_dir, oracle, name):
-    spec = all_specs()[name]
-    sdf = spec.builder(spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = oracle.sql(spec.oracle)
-    orows = rel.fetchall()
-    s_cols, s_can = _canonical(srows, sdf.columns)
-    o_cols, o_can = _canonical(orows, rel.columns)
-    assert s_cols == o_cols
-    assert len(s_can) == len(o_can)
-    assert s_can == o_can
+from idn_area_etl_spark.sources.tables import load_table
 
 
 def test_hash_sample_is_partition_invariant(spark, sf_dir):

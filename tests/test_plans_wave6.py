@@ -1,70 +1,12 @@
-"""Sixth-wave queries: oracle parity at sf0.001 plus the
-connected-components invariants that make cluster dedup trustworthy."""
+"""Sixth-wave queries: the connected-components invariants that make
+cluster dedup trustworthy."""
 
 from __future__ import annotations
 
-import math
-from datetime import datetime
-from decimal import Decimal
-
-import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.graph import connected_components
-from idn_area_etl_spark.plans import all_specs, wave6
-from idn_area_etl_spark.sources.tables import TABLE_NAMES
-
-ORACLE_NAMES = [s.name for s in wave6.SPECS if s.oracle is not None]
-
-
-def _norm(v) -> str:
-    if v is None:
-        return "<null>"
-    if isinstance(v, float):
-        return "<null>" if math.isnan(v) else repr(v)
-    if isinstance(v, Decimal):
-        return repr(float(v))
-    if isinstance(v, datetime):
-        return v.isoformat()
-    return str(v)
-
-
-def _canonical(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return (
-        [cols[i] for i in order],
-        sorted(tuple(_norm(r[i]) for i in order) for r in rows),
-    )
-
-
-@pytest.fixture(scope="module")
-def oracle(sf_dir):
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-def test_all_wave6_registered():
-    specs = all_specs()
-    for spec in wave6.SPECS:
-        assert spec.name in specs
-
-
-@pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_wave6_matches_duckdb_oracle(spark, sf_dir, oracle, name):
-    spec = all_specs()[name]
-    sdf = spec.builder(spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = oracle.sql(spec.oracle)
-    orows = rel.fetchall()
-    s_cols, s_can = _canonical(srows, sdf.columns)
-    o_cols, o_can = _canonical(orows, rel.columns)
-    assert s_cols == o_cols
-    assert len(s_can) == len(o_can)
-    assert s_can == o_can
+from idn_area_etl_spark.plans import all_specs
 
 
 def _cc_map(spark, edges):

@@ -1,60 +1,12 @@
-"""Sixty-fifth-wave tests: oracle parity for the oracle-backed spec
-plus structural invariants for the greedy facility-location subset
-(monotone non-decreasing objective, distinct selections, k-cap
-behavior when k exceeds the input size)."""
+"""Sixty-fifth-wave tests: structural invariants for the greedy
+facility-location subset (monotone non-decreasing objective,
+distinct selections, k-cap behavior when k exceeds the input size)."""
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pytest
 
-from idn_area_etl_spark.plans import all_specs, wave65
-from idn_area_etl_spark.sources.tables import TABLE_NAMES
-
-WAVE_ORACLE = ("q_rec_mrr_hitrate",)
-
-
-def _norm(v) -> str:
-    if v is None:
-        return "<null>"
-    if isinstance(v, float):
-        return "<null>" if math.isnan(v) else repr(v)
-    return str(v)
-
-
-def _canonical(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return (
-        [cols[i] for i in order],
-        sorted(tuple(_norm(r[i]) for i in order) for r in rows),
-    )
-
-
-def test_registered():
-    specs = all_specs()
-    for name in WAVE_ORACLE:
-        assert name in specs
-        assert specs[name].oracle is not None
-    assert "s_facility_location" in specs  # rows-only by design
-
-
-@pytest.mark.parametrize("name", WAVE_ORACLE)
-def test_matches_duckdb_oracle(spark, sf_dir, name):
-    spec = all_specs()[name]
-    sdf = spec.builder(spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    rel = con.sql(spec.oracle)
-    orows = rel.fetchall()
-    s_cols, s_can = _canonical(srows, sdf.columns)
-    o_cols, o_can = _canonical(orows, rel.columns)
-    con.close()
-    assert s_cols == o_cols
-    assert s_can == o_can
+from idn_area_etl_spark.plans import wave65
 
 
 def test_facility_selection_structure(spark, sf_dir):

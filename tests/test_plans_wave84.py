@@ -1,58 +1,9 @@
-"""Eighty-fourth-wave tests: oracle parity plus invariants (vintage
-partition, Benford probabilities sum to 1, matched histogram
-dominance)."""
+"""Eighty-fourth-wave tests: invariants (vintage partition, Benford
+probabilities sum to 1, matched histogram dominance)."""
 
 from __future__ import annotations
 
-import math
-
-import duckdb
-import pytest
-
-from idn_area_etl_spark.plans import all_specs, wave84
-from idn_area_etl_spark.sources.tables import TABLE_NAMES
-
-WAVE = ("q_vintage_analysis", "a_benford_second", "s_length_matched_sample")
-
-
-def _norm(v) -> str:
-    if v is None:
-        return "<null>"
-    if isinstance(v, float):
-        return "<null>" if math.isnan(v) else repr(v)
-    return str(v)
-
-
-def _canonical(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return (
-        [cols[i] for i in order],
-        sorted(tuple(_norm(r[i]) for i in order) for r in rows),
-    )
-
-
-def test_registered():
-    specs = all_specs()
-    for name in WAVE:
-        assert name in specs
-        assert specs[name].oracle is not None
-
-
-@pytest.mark.parametrize("name", WAVE)
-def test_matches_duckdb_oracle(spark, sf_dir, name):
-    spec = all_specs()[name]
-    sdf = spec.builder(spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    rel = con.sql(spec.oracle)
-    orows = rel.fetchall()
-    s_cols, s_can = _canonical(srows, sdf.columns)
-    o_cols, o_can = _canonical(orows, rel.columns)
-    con.close()
-    assert s_cols == o_cols
-    assert s_can == o_can
+from idn_area_etl_spark.plans import wave84
 
 
 def test_vintage_partitions_customers(spark, sf_dir):

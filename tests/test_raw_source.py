@@ -58,7 +58,7 @@ def test_empty_table_list_keeps_schema_and_header_only_files(spark, tmp_path: Pa
     assert raw.schema == RAW_TABLE_SCHEMA
     assert raw.count() == 0
     counts = write_all_entities(
-        extract_all(raw), tmp_path, "empty", default_config(), exact=True
+        extract_all(raw), tmp_path, "empty", default_config()
     )
     assert set(counts.values()) == {0}
     assert (tmp_path / "empty.province.csv").read_bytes() == b"code,name\r\n"

@@ -11,12 +11,11 @@ SQL instead of the DataFrame API.
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from idn_area_etl_spark.plans import all_specs
 from idn_area_etl_spark.sources.tables import register_views
+from tools.check_oracle import canonical
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -42,32 +41,16 @@ ANSI_PORTABLE = [
 ]
 
 
-def _norm(v) -> str:
-    if v is None:
-        return "<null>"
-    if isinstance(v, float):
-        return "<null>" if math.isnan(v) else repr(v)
-    return str(v)
-
-
-def _canonical(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return (
-        [cols[i] for i in order],
-        sorted(tuple(_norm(r[i]) for i in order) for r in rows),
-    )
-
-
 @pytest.mark.parametrize("name", ANSI_PORTABLE)
 def test_spark_sql_runs_oracle_and_matches_builder(spark, name):
     spec = all_specs()[name]
     register_views(spark, SF_DIR)
     via_sql = spark.sql(spec.oracle)
     via_df = spec.builder(spark, SF_DIR)
-    sql_cols, sql_rows = _canonical(
+    sql_cols, sql_rows = canonical(
         [tuple(r) for r in via_sql.collect()], via_sql.columns
     )
-    df_cols, df_rows = _canonical(
+    df_cols, df_rows = canonical(
         [tuple(r) for r in via_df.collect()], via_df.columns
     )
     assert sql_cols == df_cols
