@@ -2,9 +2,13 @@ from __future__ import annotations
 
 import os
 
+import duckdb
 import pytest
 
+from idn_area_etl_spark.plans import all_specs
 from idn_area_etl_spark.session import get_spark
+from idn_area_etl_spark.sources.tables import TABLE_NAMES
+from tools.check_oracle import canonical
 
 #: Registry-wide sweep / stress modules whose fixtures build all ~370
 #: plans or run multi-config invariance jobs.  They dominate the
@@ -19,7 +23,7 @@ from idn_area_etl_spark.session import get_spark
 #: OPTIMIZATION_r09.md).  Coverage is not weakened, only split: the
 #: fast surface still runs every operator and streaming test, and
 #: ``test_oracle_parity.py`` checks every oracle-backed spec against
-#: DuckDB.
+#: DuckDB (through the ``oracle_parity`` fixture below).
 _SLOW_MODULES = {
     "test_plan_quality",
     "test_scaling",
@@ -59,3 +63,42 @@ def sf01_dir() -> str:
     if not os.path.isdir(path):
         pytest.skip("sf0.1 testdata not available on this machine")
     return path
+
+
+@pytest.fixture(scope="session")
+def oracle(sf_dir):
+    """One DuckDB connection with a view per sf0.001 table."""
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.fixture(scope="session")
+def oracle_parity(spark, sf_dir, oracle):
+    """``oracle_parity(name)`` asserts that spec ``name`` matches its
+    DuckDB oracle at sf0.001 under the strict ``tools/check_oracle.py``
+    contract: equal column names, row count and ``canonical`` values.
+
+    ``test_oracle_parity.py`` asks this for every oracle-backed spec and
+    the per-wave ``*_matches_duckdb_oracle`` tests for their own specs,
+    so each spec is compared once per session: a spec that already
+    matched is not built again.  A failed compare is not remembered."""
+    specs = all_specs()
+    matched: set[str] = set()
+
+    def check(name: str) -> None:
+        if name in matched:
+            return
+        spec = specs[name]
+        sdf = spec.builder(spark, sf_dir)
+        s_cols, s_rows = canonical([tuple(r) for r in sdf.collect()], sdf.columns)
+        rel = oracle.sql(spec.oracle)
+        o_cols, o_rows = canonical(rel.fetchall(), rel.columns)
+        assert s_cols == o_cols
+        assert len(s_rows) == len(o_rows)
+        assert s_rows == o_rows
+        matched.add(name)
+
+    return check

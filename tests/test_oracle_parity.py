@@ -2,16 +2,14 @@
 oracle SQL must match its DuckDB oracle under the strict
 ``tools/check_oracle.py`` contract (column names, row count and
 ``norm_cell``-canonical values, order-insensitive) — the same compare
-the full-registry ``check_oracle.py`` sweep applies."""
+the full-registry ``check_oracle.py`` sweep applies.  The compare is the
+``oracle_parity`` fixture in ``conftest.py``."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from idn_area_etl_spark.plans import all_specs
-from idn_area_etl_spark.sources.tables import TABLE_NAMES
-from tools.check_oracle import canonical
 
 SPECS = all_specs()
 
@@ -34,26 +32,10 @@ ROWS_ONLY = {
 }
 
 
-@pytest.fixture(scope="module")
-def oracle(sf_dir):
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
 def test_rows_only_specs_are_pinned():
     assert set(SPECS) - set(ORACLE_NAMES) == ROWS_ONLY
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_matches_duckdb_oracle(spark, sf_dir, oracle, name):
-    spec = SPECS[name]
-    sdf = spec.builder(spark, sf_dir)
-    s_cols, s_rows = canonical([tuple(r) for r in sdf.collect()], sdf.columns)
-    rel = oracle.sql(spec.oracle)
-    o_cols, o_rows = canonical(rel.fetchall(), rel.columns)
-    assert s_cols == o_cols
-    assert len(s_rows) == len(o_rows)
-    assert s_rows == o_rows
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)

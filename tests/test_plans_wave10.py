@@ -8,6 +8,7 @@ import hashlib
 import unicodedata
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.multimodal import (
@@ -16,6 +17,19 @@ from idn_area_etl_spark.operators.multimodal import (
     frame_sample,
 )
 from idn_area_etl_spark.operators.text import nfc_normalize_udf
+from idn_area_etl_spark.plans import all_specs, wave10
+
+
+def test_all_wave10_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave10.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave10.SPECS if s.oracle is not None]
+)
+def test_wave10_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 # --------------------------------------------------------------------------

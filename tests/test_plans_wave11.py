@@ -6,11 +6,24 @@ from __future__ import annotations
 import math
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import all_specs
+from idn_area_etl_spark.plans import all_specs, wave11
 from idn_area_etl_spark.plans.wave11 import PACK_BUDGET
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave11_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave11.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave11.SPECS if s.oracle is not None]
+)
+def test_wave11_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 # --------------------------------------------------------------------------

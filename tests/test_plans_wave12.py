@@ -3,8 +3,17 @@ invariants and the map-side-combinable dedup plan shape."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import all_specs
+from idn_area_etl_spark.plans import all_specs, wave12
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave12.SPECS)
+
+
+def test_pipeline_matches_duckdb_oracle(oracle_parity):
+    oracle_parity("p_curation_pipeline")
 
 
 def test_pipeline_conservation(spark, sf_dir):

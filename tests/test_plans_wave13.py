@@ -3,7 +3,21 @@ check."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import all_specs
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave13
+
+
+def test_all_wave13_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave13.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave13.SPECS if s.oracle is not None]
+)
+def test_wave13_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_hll_merge_is_lossless_and_accurate(spark, sf_dir):

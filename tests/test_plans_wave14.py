@@ -3,7 +3,21 @@ equality alone doesn't prove."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave14
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave14
+
+
+def test_all_wave14_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave14.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave14.SPECS if s.oracle is not None]
+)
+def test_wave14_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_scd2_intervals_are_well_formed(spark, sf_dir):

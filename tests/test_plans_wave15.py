@@ -3,14 +3,27 @@ recall, and triangle identities."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.bloom import (
     build_bloom_words,
     might_contain_expr,
 )
-from idn_area_etl_spark.plans import wave15
+from idn_area_etl_spark.plans import all_specs, wave15
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave15_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave15.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave15.SPECS if s.oracle is not None]
+)
+def test_wave15_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_bloom_never_false_negative_and_prunes(spark, sf_dir):

@@ -13,8 +13,20 @@ from idn_area_etl_spark.operators.pq import (
     pq_fit,
     pq_topk_reranked,
 )
-from idn_area_etl_spark.plans import wave16
+from idn_area_etl_spark.plans import all_specs, wave16
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave16_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave16.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave16.SPECS if s.oracle is not None]
+)
+def test_wave16_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_association_rule_identities(spark, sf_dir):

@@ -3,10 +3,23 @@ and funnel-monotonicity invariants."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave17
+from idn_area_etl_spark.plans import all_specs, wave17
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave17_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave17.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave17.SPECS if s.oracle is not None]
+)
+def test_wave17_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_incremental_refresh_equals_full_recompute(spark, sf_dir):

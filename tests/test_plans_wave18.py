@@ -3,10 +3,23 @@ and LPA determinism."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave18
+from idn_area_etl_spark.plans import all_specs, wave18
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave18_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave18.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave18.SPECS if s.oracle is not None]
+)
+def test_wave18_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def _dominates(a, b) -> bool:

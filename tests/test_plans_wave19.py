@@ -3,10 +3,23 @@ invariants."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave19
+from idn_area_etl_spark.plans import all_specs, wave19
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave19_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave19.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave19.SPECS if s.oracle is not None]
+)
+def test_wave19_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_twap_lies_within_value_range(spark, sf_dir):

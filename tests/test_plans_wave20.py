@@ -5,10 +5,23 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave20
+from idn_area_etl_spark.plans import all_specs, wave20
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave20_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave20.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave20.SPECS if s.oracle is not None]
+)
+def test_wave20_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_quality_report_clean_data_all_pass(spark, sf_dir):

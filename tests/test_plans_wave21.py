@@ -7,8 +7,20 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from idn_area_etl_spark.plans import wave21
+from idn_area_etl_spark.plans import all_specs, wave21
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave21_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave21.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave21.SPECS if s.oracle is not None]
+)
+def test_wave21_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_ols_agrees_with_numpy_lstsq(spark, sf_dir):

@@ -9,8 +9,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.text import soundex_expr, tokens_expr
-from idn_area_etl_spark.plans import wave22
+from idn_area_etl_spark.plans import all_specs, wave22
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave22_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave22.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave22.SPECS if s.oracle is not None]
+)
+def test_wave22_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_soundex_known_codes(spark):

@@ -10,8 +10,20 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave23
+from idn_area_etl_spark.plans import all_specs, wave23
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave23_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave23.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave23.SPECS if s.oracle is not None]
+)
+def test_wave23_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_drawdown_matches_sequential_reference(spark, sf_dir):

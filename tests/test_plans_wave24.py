@@ -8,8 +8,20 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave24
+from idn_area_etl_spark.plans import all_specs, wave24
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave24_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave24.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave24.SPECS if s.oracle is not None]
+)
+def test_wave24_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_journey_classification_first_match_wins():

@@ -4,8 +4,22 @@ PMI count floor, and k-core peeling semantics on a planted graph."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave25
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave25
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave25_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave25.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave25.SPECS if s.oracle is not None]
+)
+def test_wave25_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_prorata_allocation_is_exact_and_proportional(spark, sf_dir):

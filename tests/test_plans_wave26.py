@@ -8,10 +8,23 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave26
+from idn_area_etl_spark.plans import all_specs, wave26
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave26_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave26.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave26.SPECS if s.oracle is not None]
+)
+def test_wave26_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_moments_match_numpy(spark, sf_dir):

@@ -4,8 +4,22 @@ balance, Zipf slope sanity."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave27
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave27
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave27_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave27.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave27.SPECS if s.oracle is not None]
+)
+def test_wave27_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_rfm_partitions_all_customers(spark, sf_dir):

@@ -4,10 +4,23 @@ weighted-mean-one, Lorenz share shape, nearest-join symmetry bounds."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave28
+from idn_area_etl_spark.plans import all_specs, wave28
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave28_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave28.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave28.SPECS if s.oracle is not None]
+)
+def test_wave28_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_attribution_credit_conserved(spark, sf_dir):

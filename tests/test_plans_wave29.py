@@ -4,10 +4,23 @@ and partition invariance."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave29
+from idn_area_etl_spark.plans import all_specs, wave29
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave29_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave29.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave29.SPECS if s.oracle is not None]
+)
+def test_wave29_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_winsorized_mean_between_raw_bounds(spark, sf_dir):

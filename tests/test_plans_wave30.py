@@ -5,10 +5,23 @@ new/returning identities, planted density clusters."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave30
+from idn_area_etl_spark.plans import all_specs, wave30
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave30_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave30.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave30.SPECS if s.oracle is not None]
+)
+def test_wave30_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_loyal_customers_brute_force(spark, sf_dir):

@@ -4,10 +4,23 @@ own exact-reference suite in test_bpe.py.)"""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave31
+from idn_area_etl_spark.plans import all_specs, wave31
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave31_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave31.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave31.SPECS if s.oracle is not None]
+)
+def test_wave31_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_skew_report_identities(spark, sf_dir):

@@ -4,9 +4,22 @@ reference, calibration partitioning, Kaplan-Meier monotonicity."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
-from idn_area_etl_spark.plans import wave32
+from idn_area_etl_spark.plans import all_specs, wave32
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave32_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave32.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave32.SPECS if s.oracle is not None]
+)
+def test_wave32_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_auc_matches_numpy_rank_reference(spark, sf_dir):

@@ -6,8 +6,22 @@ from __future__ import annotations
 
 import math
 
-from idn_area_etl_spark.plans import wave33
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave33
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave33_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave33.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave33.SPECS if s.oracle is not None]
+)
+def test_wave33_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_bm25_matches_python_reference(spark, sf_dir):

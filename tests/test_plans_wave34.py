@@ -6,10 +6,23 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave34
+from idn_area_etl_spark.plans import all_specs, wave34
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave34_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave34.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave34.SPECS if s.oracle is not None]
+)
+def test_wave34_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_reconciliation_partitions_orders(spark, sf_dir):

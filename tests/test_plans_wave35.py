@@ -4,10 +4,23 @@ non-negativity and independence-zero check."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave35
+from idn_area_etl_spark.plans import all_specs, wave35
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave35_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave35.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave35.SPECS if s.oracle is not None]
+)
+def test_wave35_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_psi_small_on_stationary_stream(spark, sf_dir):

@@ -3,8 +3,22 @@ are non-edges, Apriori downward closure, decay-score bounds."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave36
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave36
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave36_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave36.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave36.SPECS if s.oracle is not None]
+)
+def test_wave36_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_link_candidates_are_nonedges_with_common_neighbors(spark, sf_dir):

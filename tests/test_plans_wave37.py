@@ -4,7 +4,21 @@ percent-rank bounds."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave37
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave37
+
+
+def test_all_wave37_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave37.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave37.SPECS if s.oracle is not None]
+)
+def test_wave37_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_gapfill_interpolates_linearly(spark, sf_dir):

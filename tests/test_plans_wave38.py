@@ -5,8 +5,22 @@ from __future__ import annotations
 
 import math
 
-from idn_area_etl_spark.plans import wave38
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave38
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave38_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave38.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave38.SPECS if s.oracle is not None]
+)
+def test_wave38_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_js_divergence_bounds(spark, sf_dir):

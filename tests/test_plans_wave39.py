@@ -3,8 +3,22 @@ cross-modal join coverage."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave39
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave39
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave39_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave39.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave39.SPECS if s.oracle is not None]
+)
+def test_wave39_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_tile_plan_geometry(spark, sf_dir):

@@ -1,69 +1,22 @@
-"""Oracle parity for the fourth-wave queries (windows, higher-order
-array functions, unpivot) at sf0.001 — same contract as the driver's
-per-round gate (row count + column names + order-insensitive values).
-"""
+"""Fourth-wave queries (windows, higher-order array functions,
+unpivot): registration and oracle parity at sf0.001."""
 
 from __future__ import annotations
 
-import math
-from datetime import datetime
-from decimal import Decimal
-
-import duckdb
 import pytest
 
-from idn_area_etl_spark.plans import all_specs
-from idn_area_etl_spark.plans import wave4
-from idn_area_etl_spark.sources.tables import TABLE_NAMES
-
-WAVE4_NAMES = [spec.name for spec in wave4.SPECS]
-
-
-def _norm(v) -> str:
-    if v is None:
-        return "<null>"
-    if isinstance(v, float):
-        return "<null>" if math.isnan(v) else repr(v)
-    if isinstance(v, Decimal):
-        return repr(float(v))
-    if isinstance(v, datetime):
-        return v.isoformat()
-    return str(v)
-
-
-def _canonical(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return (
-        [cols[i] for i in order],
-        sorted(tuple(_norm(r[i]) for i in order) for r in rows),
-    )
-
-
-@pytest.fixture(scope="module")
-def oracle(sf_dir):
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
+from idn_area_etl_spark.plans import all_specs, wave4
 
 
 def test_all_wave4_registered_with_oracles():
     specs = all_specs()
-    for name in WAVE4_NAMES:
-        assert name in specs
-        assert specs[name].oracle is not None
+    for spec in wave4.SPECS:
+        assert specs[spec.name] is spec
+        assert spec.oracle is not None
 
 
-@pytest.mark.parametrize("name", WAVE4_NAMES)
-def test_wave4_matches_duckdb_oracle(spark, sf_dir, oracle, name):
-    spec = all_specs()[name]
-    sdf = spec.builder(spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = oracle.sql(spec.oracle)
-    orows = rel.fetchall()
-    s_cols, s_can = _canonical(srows, sdf.columns)
-    o_cols, o_can = _canonical(orows, rel.columns)
-    assert s_cols == o_cols
-    assert len(s_can) == len(o_can)
-    assert s_can == o_can
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave4.SPECS if s.oracle is not None]
+)
+def test_wave4_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)

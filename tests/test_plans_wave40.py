@@ -6,6 +6,16 @@ from __future__ import annotations
 from datetime import datetime
 
 from idn_area_etl_spark.operators.joins import asof_join
+from idn_area_etl_spark.plans import all_specs, wave40
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave40.SPECS)
+
+
+def test_pit_matches_duckdb_oracle(oracle_parity):
+    oracle_parity("j_point_in_time")
 
 
 def test_pit_no_leakage_planted(spark):

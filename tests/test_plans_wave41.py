@@ -5,9 +5,22 @@ anomaly-flag bound."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
-from idn_area_etl_spark.plans import wave41
+from idn_area_etl_spark.plans import all_specs, wave41
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave41_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave41.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave41.SPECS if s.oracle is not None]
+)
+def test_wave41_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_kcenter_matches_numpy_greedy(spark, sf_dir):

@@ -4,10 +4,23 @@ distribution checks."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave42
+from idn_area_etl_spark.plans import all_specs, wave42
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave42_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave42.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave42.SPECS if s.oracle is not None]
+)
+def test_wave42_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_canonical_dedup_collapses_reformatted_copies(spark):

@@ -3,7 +3,16 @@ row vs per-language sums)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave43
+from idn_area_etl_spark.plans import all_specs, wave43
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave43.SPECS)
+
+
+def test_card_matches_duckdb_oracle(oracle_parity):
+    oracle_parity("d_dataset_card")
 
 
 def test_card_all_row_consistent(spark, sf_dir):

@@ -3,11 +3,24 @@ and DSIR / mixture sanity."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.dedup import prefix_jaccard_join
-from idn_area_etl_spark.plans import wave44
+from idn_area_etl_spark.plans import all_specs, wave44
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave44.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave44.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_prefix_join_equals_brute_force(spark, sf_dir):

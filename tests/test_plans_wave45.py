@@ -3,7 +3,21 @@ share the query label; coverage bounded by event count x window)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave45
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave45
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave45.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave45.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_hard_negatives_cross_label_only(spark, sf_dir):

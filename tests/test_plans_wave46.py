@@ -3,7 +3,21 @@ partition, Murphy identity direction)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave46
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave46
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave46.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave46.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_stickiness_bounds(spark, sf_dir):

@@ -5,9 +5,22 @@ arm totals' direction while shrinking variance).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave47
+from idn_area_etl_spark.plans import all_specs, wave47
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave47.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave47.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_copurchase_similarity_properties(spark, sf_dir):

@@ -4,7 +4,21 @@ bounds bracket the rate, Heaps growth concave-ish).
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave48
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave48
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave48.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave48.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_gains_monotone_and_bounded(spark, sf_dir):

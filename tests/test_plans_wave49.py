@@ -4,7 +4,21 @@ keeps en more often than other languages)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave49
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave49
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave49.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave49.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_seq_support_properties(spark, sf_dir):

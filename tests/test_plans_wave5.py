@@ -3,11 +3,24 @@ that SQL can't express."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import all_specs
+from idn_area_etl_spark.plans import all_specs, wave5
 from idn_area_etl_spark.plans.wave5 import hash_sample_predicate
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave5_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave5.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave5.SPECS if s.oracle is not None]
+)
+def test_wave5_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_hash_sample_is_partition_invariant(spark, sf_dir):

@@ -3,7 +3,21 @@ cents conserved exactly, coverage bounded)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave50
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave50
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave50.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave50.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_polygon_share_plausible(spark, sf_dir):

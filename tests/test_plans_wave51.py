@@ -8,7 +8,19 @@ from math import factorial
 
 import pytest
 
-from idn_area_etl_spark.plans import wave51
+from idn_area_etl_spark.plans import all_specs, wave51
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave51.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave51.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def _python_shapley(spark, sf_dir):

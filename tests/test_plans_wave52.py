@@ -3,14 +3,27 @@ recall cross-check against the exact prefix join."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.dedup import (
     minhash_candidates,
     prefix_jaccard_join,
 )
-from idn_area_etl_spark.plans import wave52
+from idn_area_etl_spark.plans import all_specs, wave52
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave52.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave52.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_bootstrap_ci_brackets_true_mean(spark, sf_dir):

@@ -9,7 +9,19 @@ import math
 import numpy as np
 import pytest
 
-from idn_area_etl_spark.plans import wave54
+from idn_area_etl_spark.plans import all_specs, wave54
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave54.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave54.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_keep_best_retention_structure(spark, sf_dir):

@@ -3,7 +3,21 @@ Chapman estimate near truth, support bounds)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave55
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave55
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave55.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave55.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_quality_buckets_ordered(spark, sf_dir):

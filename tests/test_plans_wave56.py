@@ -6,7 +6,19 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from idn_area_etl_spark.plans import wave56
+from idn_area_etl_spark.plans import all_specs, wave56
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave56.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave56.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_mmd_matches_numpy(spark, sf_dir):

@@ -5,7 +5,21 @@ from __future__ import annotations
 
 import math
 
-from idn_area_etl_spark.plans import wave57
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave57
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave57.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave57.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_price_indices_positive(spark, sf_dir):

@@ -4,7 +4,21 @@ bracketed by the raw lift magnitudes)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave59
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave59
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave59.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave59.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_msprt_structure(spark, sf_dir):

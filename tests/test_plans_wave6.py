@@ -3,10 +3,23 @@ cluster dedup trustworthy."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.graph import connected_components
-from idn_area_etl_spark.plans import all_specs
+from idn_area_etl_spark.plans import all_specs, wave6
+
+
+def test_all_wave6_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave6.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave6.SPECS if s.oracle is not None]
+)
+def test_wave6_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def _cc_map(spark, edges):

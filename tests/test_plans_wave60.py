@@ -6,7 +6,19 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave60
+from idn_area_etl_spark.plans import all_specs, wave60
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave60.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave60.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_funnel_monotone(spark, sf_dir):

@@ -6,8 +6,20 @@ from __future__ import annotations
 
 import pytest
 
-from idn_area_etl_spark.plans import wave61
+from idn_area_etl_spark.plans import all_specs, wave61
 from idn_area_etl_spark.plans.wave49 import q_seq_pattern_support
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave61.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave61.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_win_ratio_accounting(spark, sf_dir):

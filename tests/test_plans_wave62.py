@@ -6,7 +6,19 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave62
+from idn_area_etl_spark.plans import all_specs, wave62
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave62.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave62.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_ht_estimate_near_truth(spark, sf_dir):

@@ -3,11 +3,24 @@ SQL can't express."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import all_specs
+from idn_area_etl_spark.plans import all_specs, wave7
 from idn_area_etl_spark.sinks import zvalue
 from idn_area_etl_spark.sources.tables import load_table
+
+
+def test_all_wave7_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave7.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave7.SPECS if s.oracle is not None]
+)
+def test_wave7_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_weighted_sample_partition_invariant(spark, sf_dir):

@@ -6,7 +6,19 @@ from __future__ import annotations
 
 import pytest
 
-from idn_area_etl_spark.plans import wave70
+from idn_area_etl_spark.plans import all_specs, wave70
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave70.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave70.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_eigenvector_unit_norm_and_sign(spark, sf_dir):

@@ -5,7 +5,19 @@ from __future__ import annotations
 
 import pytest
 
-from idn_area_etl_spark.plans import wave71
+from idn_area_etl_spark.plans import all_specs, wave71
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave71.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave71.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_growth_accounting_identity(spark, sf_dir):

@@ -3,7 +3,21 @@ catalog curve monotone and complete, churn flags bounded)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave73
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave73
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave73.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave73.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_burstiness_range(spark, sf_dir):

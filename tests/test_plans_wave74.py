@@ -6,7 +6,19 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.plans import wave74
+from idn_area_etl_spark.plans import all_specs, wave74
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave74.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave74.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_frequency_cap_accounting(spark, sf_dir):

@@ -3,7 +3,21 @@ property, evenness range, range-frame symmetry)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave75
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave75
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave75.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave75.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_bh_discovery_prefix(spark, sf_dir):

@@ -6,7 +6,19 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from idn_area_etl_spark.plans import wave76
+from idn_area_etl_spark.plans import all_specs, wave76
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave76.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave76.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_repeat_rate_bounds(spark, sf_dir):

@@ -3,7 +3,21 @@ kappa below po, positional totals reconcile)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave77
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave77
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave77.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave77.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_ego_density_range(spark, sf_dir):

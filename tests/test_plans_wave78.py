@@ -8,7 +8,19 @@ import math
 import numpy as np
 import pytest
 
-from idn_area_etl_spark.plans import wave78
+from idn_area_etl_spark.plans import all_specs, wave78
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave78.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave78.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_simpson_structure(spark, sf_dir):

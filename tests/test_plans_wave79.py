@@ -5,7 +5,19 @@ from __future__ import annotations
 
 import pytest
 
-from idn_area_etl_spark.plans import wave79
+from idn_area_etl_spark.plans import all_specs, wave79
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave79.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave79.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_noise_sanity(spark, sf_dir):

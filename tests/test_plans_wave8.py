@@ -4,6 +4,7 @@ outliers) that the synthetic corpus alone exercises only trivially."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.dedup import contamination_overlap
@@ -14,7 +15,19 @@ from idn_area_etl_spark.operators.text import (
     pii_stats,
     repetition_stats,
 )
-from idn_area_etl_spark.plans import all_specs
+from idn_area_etl_spark.plans import all_specs, wave8
+
+
+def test_all_wave8_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave8.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave8.SPECS if s.oracle is not None]
+)
+def test_wave8_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 # --------------------------------------------------------------------------

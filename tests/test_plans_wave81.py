@@ -8,7 +8,19 @@ import math
 import numpy as np
 import pytest
 
-from idn_area_etl_spark.plans import wave81
+from idn_area_etl_spark.plans import all_specs, wave81
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave81.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave81.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_chunk_counts_match_formula(spark, sf_dir):

@@ -4,7 +4,21 @@ contamination actually found, Borda bounds, Theil >= 0).
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave83
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave83
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave83.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave83.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_decontamination_accounting(spark, sf_dir):

@@ -3,7 +3,21 @@ probabilities sum to 1, matched histogram dominance)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave84
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave84
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave84.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave84.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_vintage_partitions_customers(spark, sf_dir):

@@ -3,7 +3,21 @@ hockey shares bounded, cluster split leaks NOTHING)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave85
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave85
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave85.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave85.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_rank_biserial_range(spark, sf_dir):

@@ -7,7 +7,19 @@ import math
 
 import pytest
 
-from idn_area_etl_spark.plans import wave87
+from idn_area_etl_spark.plans import all_specs, wave87
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave87.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave87.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_wilcoxon_range(spark, sf_dir):

@@ -6,7 +6,19 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from idn_area_etl_spark.plans import wave88
+from idn_area_etl_spark.plans import all_specs, wave88
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave88.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave88.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_xbar_chart_structure(spark, sf_dir):

@@ -3,7 +3,21 @@ band coverage, rate bounds)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave89
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave89
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave89.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave89.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_mcc_structure(spark, sf_dir):

@@ -4,13 +4,26 @@ that SQL comparison alone doesn't pin."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.dedup import winnow_substring_pairs
 from idn_area_etl_spark.operators.graph import pagerank
 from idn_area_etl_spark.operators.sketch import count_min_topk
 from idn_area_etl_spark.operators.text import winnow_fingerprints_expr
-from idn_area_etl_spark.plans import all_specs
+from idn_area_etl_spark.plans import all_specs, wave9
+
+
+def test_all_wave9_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave9.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave9.SPECS if s.oracle is not None]
+)
+def test_wave9_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 # --------------------------------------------------------------------------

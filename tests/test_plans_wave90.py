@@ -5,7 +5,21 @@ from __future__ import annotations
 
 import math
 
-from idn_area_etl_spark.plans import wave90
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave90
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave90.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave90.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_oversample_balances(spark, sf_dir):

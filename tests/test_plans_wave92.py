@@ -3,7 +3,21 @@ positive and clubs shrink)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave92
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave92
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave92.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave92.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_null_split_reasonably_balanced(spark, sf_dir):

@@ -3,7 +3,21 @@ gap in window, 2x2 totals + null non-rejection)."""
 
 from __future__ import annotations
 
-from idn_area_etl_spark.plans import wave93
+import pytest
+
+from idn_area_etl_spark.plans import all_specs, wave93
+
+
+def test_registered():
+    specs = all_specs()
+    assert all(specs[spec.name] is spec for spec in wave93.SPECS)
+
+
+@pytest.mark.parametrize(
+    "name", [s.name for s in wave93.SPECS if s.oracle is not None]
+)
+def test_matches_duckdb_oracle(oracle_parity, name):
+    oracle_parity(name)
 
 
 def test_second_order_structure(spark, sf_dir):
