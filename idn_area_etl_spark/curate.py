@@ -110,7 +110,17 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--val-pct", type=int, default=10)
     args = parser.parse_args(argv)
 
-    num, den = (int(x) for x in args.threshold.split("/", 1))
+    try:
+        num, den = (int(x) for x in args.threshold.split("/", 1))
+    except ValueError:
+        parser.error(f"--threshold must be NUM/DEN integers, got {args.threshold!r}")
+    if den <= 0 or not 0 <= num <= den:
+        parser.error(f"--threshold needs DEN > 0 and 0 <= NUM <= DEN, got {num}/{den}")
+    for flag, pct in (("--train-pct", args.train_pct), ("--val-pct", args.val_pct)):
+        if not 0 <= pct <= 100:
+            parser.error(f"{flag} must be in 0..100, got {pct}")
+    if args.train_pct + args.val_pct > 100:
+        parser.error("--train-pct + --val-pct must not exceed 100")
 
     from idn_area_etl_spark.session import get_spark
 

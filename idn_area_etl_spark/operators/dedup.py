@@ -17,11 +17,10 @@ aggregate/transform) — no Python in the row path.
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from idn_area_etl_spark.operators.stage import _stage
 
 #: Mersenne-ish prime keeping (P-1)*A + B within int64.
 MINHASH_PRIME = 2_147_483_647
@@ -32,187 +31,6 @@ _MINHASH_PARAMS = [
     ((i * 2_654_435_761 + 0x9E3779B9) % MINHASH_PRIME or 1, (i * 40_503 + 12_345) % MINHASH_PRIME)
     for i in range(1, 65)
 ]
-
-
-def _stage(df: DataFrame) -> DataFrame:
-    """Materialize an intermediate stage once (lazy local checkpoint)
-    so multiple downstream consumers read stored blocks instead of
-    re-running the expensive lineage (regex shingle scans, Python
-    fingerprint passes).  Serialized storage: sketch rows carry long
-    arrays, and deserialized Java object caching at millions of rows
-    is GC-hostile; Tungsten-serialized blocks are ~4× smaller.  This
-    is the same stage separation a 100 TB pipeline gets by writing the
-    sketch stage to a table between jobs; lazy, so plan building stays
-    action-free.
-
-    Trade-offs of the localCheckpoint default — deliberate, but real:
-    blocks are pinned with no unpersist (they live until RDD GC /
-    session end, so a long-lived session accumulates storage across
-    operator calls), and lineage is TRUNCATED, so losing an executor
-    (dynamic allocation, spot kills) makes downstream jobs fail
-    unrecoverably instead of recomputing.  Right for bounded batch
-    jobs; for long-lived sessions or preemptible clusters set
-
-        spark.conf.set("spark.idnareaetl.stageMaterialization", ...)
-
-    to ``persist`` (recomputable lineage kept, unpersistable) or
-    ``checkpoint`` (reliable checkpoint to ``sc.setCheckpointDir``'s
-    fault-tolerant storage).  For a MECHANICAL release of the staged
-    blocks — so a long-lived session calling many staged operators
-    doesn't accumulate pinned full-data copies — wrap the calls in
-    :func:`staged_scope`, which forces ``persist`` mode for its
-    duration and unpersists every frame staged inside it on exit."""
-    from pyspark.storagelevel import StorageLevel
-
-    mode = df.sparkSession.conf.get(
-        "spark.idnareaetl.stageMaterialization", "localCheckpoint"
-    )
-    if mode == "persist":
-        staged = df.persist(StorageLevel.MEMORY_AND_DISK)
-    elif mode == "checkpoint":
-        staged = df.checkpoint(eager=False)
-    elif mode == "localCheckpoint":
-        staged = df.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-    elif mode == "none":
-        # Audit facility: staging replaces a subtree with an opaque
-        # `Scan ExistingRDD`, which the plan-shape audits
-        # (tools/broadcast_audit.py and the test_plan_quality.py
-        # sweeps) cannot classify — a data-scaled frame behind the
-        # checkpoint would mechanically look "bounded".  Audits set
-        # this mode so every pass judges the FULL pre-staging
-        # dataflow; staging never changes values, only where the
-        # pipeline is cut, so the un-staged plan is the correct
-        # object to audit for 100 TB boundedness.
-        return df
-    else:
-        # a typo ('Persist', 'persistent') must not silently fall back
-        # to the lineage-truncating mode the caller was opting OUT of
-        raise ValueError(
-            "spark.idnareaetl.stageMaterialization must be one of "
-            f"'localCheckpoint', 'persist', 'checkpoint', 'none'; "
-            f"got {mode!r}"
-        )
-    stack = _scope_stack()
-    if stack:
-        stack[-1].append(staged)
-    return staged
-
-
-#: Per-thread stack of active :func:`staged_scope` buckets;
-#: :func:`_stage` appends every frame it materializes to the CALLING
-#: thread's innermost scope, so concurrent driver threads can hold
-#: scopes simultaneously without cross-registering frames.
-_SCOPE_STACKS = threading.local()
-
-
-def _scope_stack() -> list[list[DataFrame]]:
-    stack = getattr(_SCOPE_STACKS, "stack", None)
-    if stack is None:
-        stack = _SCOPE_STACKS.stack = []
-    return stack
-
-
-#: Per-session ref-count of live :func:`staged_scope` blocks (across
-#: ALL threads) plus the ``stageMaterialization`` value captured by the
-#: OUTERMOST scope.  Only the outermost live scope touches the
-#: session-global conf: without the ref-count, two overlapping scopes
-#: on one session restore each other's value out of order (A enters
-#: with prev=None, B enters capturing prev='persist', A exits
-#: unsetting, B exits re-setting 'persist' PERMANENTLY) — silently
-#: leaving the session in persist mode for every later helper call.
-#: Keyed by id(session); entries are removed when the count hits 0, so
-#: the map never outlives its scopes.
-_SCOPE_CONF_LOCK = threading.Lock()
-_SCOPE_CONF_REFS: dict[int, list] = {}
-
-
-@contextmanager
-def staged_scope(spark: SparkSession):
-    """Bound the lifetime of staged intermediates to a ``with`` block.
-
-    Inside the block, ``stageMaterialization`` is forced to ``persist``
-    (recomputable lineage — the only mode whose blocks CAN be released:
-    a lazy ``localCheckpoint`` truncates lineage and exposes no
-    unpersist hook, its blocks live until RDD garbage collection).  On
-    exit, every frame staged inside the block is unpersisted, so
-    long-lived sessions (notebooks, services) can call rank helpers and
-    dedup sketch builders repeatedly without accumulating pinned
-    full-dataset copies::
-
-        with staged_scope(spark):
-            ranked = global_row_number(df, [F.col("k")]).collect()
-        # staged blocks released here
-
-    Results must be consumed (or themselves persisted) inside the
-    block: after exit a returned DataFrame recomputes its staged
-    lineage from scratch on the next action — correct, just no longer
-    cached.  Scopes nest; each releases only its own frames.  The
-    previous ``stageMaterialization`` setting is restored on exit.
-
-    Thread-safety (round 6): the scope stack is THREAD-LOCAL — each
-    driver thread's scopes register only the frames staged by that
-    thread, so concurrent threads can hold scopes simultaneously
-    without cross-registering (pinned by
-    ``test_staged_scope_is_thread_local``).  The one remaining shared
-    piece is the session CONF toggle: ``stageMaterialization`` lives in
-    the (session-global) SQL conf, so while any thread holds a scope,
-    OTHER threads staging on the same session also stage in ``persist``
-    mode.  That is benign — persist keeps recomputable lineage and
-    evictable blocks; those frames simply aren't auto-released.  The
-    conf toggle itself is REF-COUNTED per session (round 7): only the
-    outermost live scope across all threads captures and restores the
-    previous value, so overlapping scopes on one session can no longer
-    restore each other's value out of order and durably flip the
-    session into persist mode (pinned by
-    ``test_staged_scope_overlap_restores_conf``).  Threads wanting
-    full conf isolation should still use separate sessions
-    (``spark.newSession()``), which have separate SQL confs.
-    """
-    key = id(spark)
-    with _SCOPE_CONF_LOCK:
-        ref = _SCOPE_CONF_REFS.get(key)
-        if ref is None:
-            prev = spark.conf.get(
-                "spark.idnareaetl.stageMaterialization", None
-            )
-            _SCOPE_CONF_REFS[key] = [1, prev]
-            spark.conf.set(
-                "spark.idnareaetl.stageMaterialization", "persist"
-            )
-        else:
-            ref[0] += 1
-    bucket: list[DataFrame] = []
-    stack = _scope_stack()
-    stack.append(bucket)
-    try:
-        yield
-    finally:
-        stack.pop()
-        with _SCOPE_CONF_LOCK:
-            ref = _SCOPE_CONF_REFS[key]
-            ref[0] -= 1
-            if ref[0] == 0:
-                del _SCOPE_CONF_REFS[key]
-                prev = ref[1]
-                if prev is None:
-                    spark.conf.unset(
-                        "spark.idnareaetl.stageMaterialization"
-                    )
-                else:
-                    spark.conf.set(
-                        "spark.idnareaetl.stageMaterialization", prev
-                    )
-        for staged in bucket:
-            try:
-                # blocking: block removal is otherwise asynchronous, so
-                # "released on exit" would be eventually-true only (and
-                # storage-count assertions could race); the wait is
-                # negligible next to the staged computation itself
-                staged.unpersist(blocking=True)
-            except Exception:  # noqa: BLE001 — best-effort release
-                pass
 
 
 def token_shingles_expr(text: Column, n: int = 3) -> Column:

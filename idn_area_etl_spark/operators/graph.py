@@ -65,7 +65,7 @@ def co_purchase_edges(
     100 TB that converts the family's dominant cost from
     O(consumers) full scans+shuffles to O(1).
     """
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     op = _stage(lineitem.select("l_orderkey", "l_partkey").distinct())
     a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p1"))

@@ -131,7 +131,7 @@ def edit1_candidate_pairs(
     times per run.  Renames are metadata-only, so the staged blocks
     back all six legs; values unchanged.
     """
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     base = _stage(
         df.select(

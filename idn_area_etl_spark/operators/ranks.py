@@ -30,25 +30,14 @@ consumer coalesces its shuffle read independently; see
 ``_ranged_with_position``).
 
 Staging cost — read this before ranking a billion-row table: each
-helper call materializes its FULL ranged input once.  Under the
-default ``localCheckpoint`` mode the blocks are pinned until session
-end (no unpersist hook exists on a lazy plan) and lineage is
-truncated, so a long-lived session calling several helpers pins
-several full-dataset copies, and an executor loss mid-job is
-unrecoverable.  For long-lived sessions, dynamic allocation, or
-preemptible/spot clusters set
-
-    spark.conf.set("spark.idnareaetl.stageMaterialization", "persist")
-
-(recomputable lineage, evictable MEMORY_AND_DISK blocks) or
-``"checkpoint"`` (reliable checkpoint to ``sc.setCheckpointDir``'s
-fault-tolerant storage) — same escape hatch, same trade-offs as
-documented on :func:`idn_area_etl_spark.operators.dedup._stage`.
-For a mechanical release, wrap helper calls in
-:func:`idn_area_etl_spark.operators.dedup.staged_scope`: it forces
-``persist`` mode for the block's duration and unpersists every staged
-frame on exit, so repeated helper calls in a long-lived session don't
-accumulate pinned copies.
+helper call materializes its FULL ranged input once.  By default
+(lazy ``localCheckpoint``) the blocks are pinned until session end and
+lineage is truncated, so a long-lived session calling several helpers
+pins several full-dataset copies, and an executor loss mid-job is
+unrecoverable.  Long-lived sessions and preemptible clusters wrap
+helper calls in :func:`idn_area_etl_spark.operators.stage.staged_scope`:
+inside it the staged frames persist with recomputable lineage and are
+unpersisted on exit (see :mod:`idn_area_etl_spark.operators.stage`).
 
 Reference semantics: SQL window functions over a global ORDER BY
 (reference engines run these single-node; this is the 1000-executor
@@ -86,9 +75,9 @@ def _ranged_with_position(
     partition).
 
     The result is MATERIALIZED (``_stage``: lazy localCheckpoint, or
-    persist/checkpoint via ``spark.idnareaetl.stageMaterialization``)
-    because every helper here joins the row side back to a per-``_pid``
-    offset histogram derived from this same frame, and ``_pid``/
+    persist inside a ``staged_scope``) because every helper here joins
+    the row side back to a per-``_pid`` offset histogram derived from
+    this same frame, and ``_pid``/
     ``_lpos`` come from ``monotonically_increasing_id`` — a function
     of the PHYSICAL partition layout at evaluation time.  Without
     pinning, the two consumers can evaluate the exchange under
@@ -107,7 +96,7 @@ def _ranged_with_position(
         .sortWithinPartitions(*order_cols)
         .withColumn("_mid", F.monotonically_increasing_id())
     )
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     d = _stage(d)
     return d.withColumn(
@@ -297,7 +286,7 @@ def grouped_row_number(
     )
     # materialized for the same layout-stability reason as
     # _ranged_with_position (offsets join back on _pid)
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     d = _stage(d).withColumn("_pid", F.shiftright("_mid", 33))
     lw = Window.partitionBy("_pid", *partition_cols).orderBy("_mid")

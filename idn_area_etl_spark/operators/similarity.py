@@ -293,7 +293,7 @@ def lsh_ann_topk(
     if (queries is None) == (query_pred is None):
         raise ValueError("pass exactly one of queries and query_pred")
     planes = _deterministic_planes(n_tables, n_planes, dim)
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     def bucketize(prep: DataFrame, id_alias: str) -> DataFrame:
         vec = F.col(f"_vec_{id_alias}")

@@ -66,7 +66,7 @@ def count_min_topk(
     # the previous shape ran three independent passes over the
     # exploded stream (2 duplicate source scans).  Staged: the rollup
     # is distinct-keys × d rows.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     kc = _stage(
         long.groupBy("key", "h", "bucket").agg(F.count("*").alias("c"))

@@ -37,7 +37,7 @@ from idn_area_etl_spark.operators.text import (
     quality_score_expr,
     token_stats,
 )
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 

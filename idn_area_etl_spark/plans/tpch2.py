@@ -198,7 +198,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): rev feeds the max probe and the winner
     # filter; unstaged, the lineitem rollup re-ran per consumer (2
     # duplicate scans).  Supplier-cardinality staged frame.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     rev = _stage(
         li.groupBy("l_suppkey").agg(dsum(_revenue(), "total_revenue"))

@@ -43,7 +43,7 @@ from idn_area_etl_spark.operators.multimodal import (
     frame_sample,
 )
 from idn_area_etl_spark.operators.text import nfc_normalize_udf
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 

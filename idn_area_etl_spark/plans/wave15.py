@@ -102,7 +102,7 @@ def e_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): vec feeds the scale fit and the quantize
     # pass; quant feeds both scoring sides — unstaged, the parquet
     # scan re-ran per consumer (3 duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     vec = _stage(
         emb.select(

@@ -40,7 +40,7 @@ from idn_area_etl_spark.operators.similarity import (
     norm_expr,
 )
 from idn_area_etl_spark.operators.text import soundex_expr, tokens_expr
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 

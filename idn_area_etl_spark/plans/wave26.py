@@ -300,7 +300,7 @@ def d_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): the tokenized corpus feeds the bigram
     # degree pass and the unigram frequency pass; unstaged, the scan
     # + tokenize re-ran per consumer (2 duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     toks = _stage(docs.select(tokens_expr(F.col("text")).alias("t")))
     n_bg = F.greatest(F.lit(0), F.size("t") - F.lit(1))

@@ -195,7 +195,7 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): per_key feeds the p99 rollup, the stats
     # aggregate and the hot-key probe; unstaged, the lineitem scan +
     # rollup re-ran per consumer (2 duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     per_key = _stage(
         li.groupBy("l_orderkey").agg(F.count("*").alias("cnt"))

@@ -227,7 +227,7 @@ def q_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.3/§2.4): the horizon derives from the staged
     # per-user rollup (max over per-user maxes = the global max date,
     # exactly) instead of a second full events scan.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     per_user = _stage(
         ev.groupBy("user_id").agg(

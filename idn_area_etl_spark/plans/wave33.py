@@ -53,7 +53,7 @@ BM25_TOP_K = 10
 
 def d_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 ranking of documents for a fixed term query."""
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
     from idn_area_etl_spark.plans.wave44 import doc_token_counts
 
     docs = load_table(spark, sf_dir, "documents")

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 
@@ -202,7 +202,7 @@ def q_recency_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a second full scan, and the decayed sum is cnt exact-decimal
     # copies of the identical per-day weight (sum of cnt copies of a
     # decimal = the decimal × cnt, exactly).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     ud = _stage(
         ev.groupBy(

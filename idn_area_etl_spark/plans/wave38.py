@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.operators.text import tokens_expr
 from idn_area_etl_spark.operators.ranks import discrete_quantiles
 from idn_area_etl_spark.plans.registry import QuerySpec, discrete_thresholds_sql
@@ -295,7 +295,7 @@ def e_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): emb feeds both the centroid rollup and the
     # scoring crossJoin; unstaged, the parquet scan re-ran per
     # consumer (2 duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     emb = _stage(
         load_table(spark, sf_dir, "embeddings").select(

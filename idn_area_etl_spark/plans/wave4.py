@@ -168,7 +168,7 @@ def w_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): the projection feeds the rank rollup and
     # the join-back; unstaged, the supplier scan re-ran per consumer
     # (2 duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     supp = _stage(
         load_table(spark, sf_dir, "supplier").select(

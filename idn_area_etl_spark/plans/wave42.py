@@ -127,7 +127,7 @@ def a_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): pooled feeds both arm legs; unstaged, the
     # events scan + per-user rollup re-ran per consumer (2 duplicate
     # scans).  2-row staged frame.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     pooled = _stage(
         counts.select(

@@ -63,7 +63,7 @@ def d_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): the tokenize + canonical-md5 enrichment
     # feeds both label groupings; unstaged, the corpus scan + regex
     # passes re-ran per grouping (2 duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     canon = F.trim(
         F.regexp_replace(

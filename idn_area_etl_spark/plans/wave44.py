@@ -36,10 +36,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.dedup import (
-    _stage,
     prefix_jaccard_join,
     token_shingles_expr,
 )
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 
@@ -306,7 +306,7 @@ def d_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): ex feeds the duplicate-shingle vocabulary
     # and the per-doc fraction; unstaged, the corpus scan + shingle
     # explode re-ran per consumer (2 duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     ex = _stage(tok.select("doc_id", "lang", F.explode("sh").alias("s")))
     dupset = (

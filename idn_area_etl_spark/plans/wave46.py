@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.dedup import _stage, token_ngrams_expr
+from idn_area_etl_spark.operators.dedup import token_ngrams_expr
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.plans.wave32 import _score_expr, _score_sql
 from idn_area_etl_spark.sources.tables import load_table

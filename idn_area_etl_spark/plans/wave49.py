@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 
@@ -177,7 +177,7 @@ def s_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # occurrences instead of distinct (doc, w) pairs.  Exactness: rc /
     # tc / n_toks are sums of cnt (= the occurrence counts); the score
     # is sum(cnt copies of lr) = lr·cnt in exact decimal.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
     from idn_area_etl_spark.plans.wave44 import doc_token_counts
 
     tok = _stage(doc_token_counts(docs))

@@ -32,7 +32,7 @@ from math import factorial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 
@@ -200,7 +200,7 @@ def q_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): stats feeds both arm legs; unstaged, the
     # events scan + rollup re-ran per consumer (2 duplicate scans).
     # 2-row staged frame.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     stats = _stage(
         armed.groupBy("arm").agg(

@@ -111,7 +111,7 @@ def a_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): daily feeds both pairwise-slope sides;
     # unstaged, the events rollup re-ran per side (2 duplicate
     # scans).  Day-cardinality staged frame.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     daily = _stage(
         ev.groupBy(

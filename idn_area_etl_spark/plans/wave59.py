@@ -58,7 +58,7 @@ def a_msprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global N/S/SS are bit-identical to the direct pass) instead of
     # re-scanning events; the two cumulative arms read the same
     # staged frame (2 duplicate scans before).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     daily = _stage(
         ev.select(

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.dedup import jaccard_edges
 from idn_area_etl_spark.operators.graph import connected_components
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 

@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.dedup import _stage, prefix_jaccard_join
+from idn_area_etl_spark.operators.dedup import prefix_jaccard_join
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.operators.graph import connected_components
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table

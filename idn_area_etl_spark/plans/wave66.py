@@ -42,7 +42,7 @@ def a_best_split_sse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): daily feeds the prefix-sum pass and the
     # grand totals; unstaged, the events rollup re-ran per consumer
     # (2 duplicate scans).  30-row staged frame.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     daily = _stage(
         ev.groupBy(

@@ -133,7 +133,7 @@ def a_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # r9-opt (guide §2.4): daily feeds both pairwise sides; unstaged,
     # the events rollup re-ran per side (2 duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     daily = _stage(
         ev.groupBy(

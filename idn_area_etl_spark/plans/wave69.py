@@ -46,7 +46,7 @@ def a_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): per_user feeds the observed-arm rollup and
     # the 24-way permutation explode; unstaged, the events scan +
     # rollup re-ran per consumer (2 duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     per_user = _stage(
         ev.groupBy("user_id").agg(

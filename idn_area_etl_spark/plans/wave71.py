@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 
@@ -154,7 +154,7 @@ def a_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # log-excess pass; unstaged, the orders scan + global top-(K+1)
     # window re-ran per consumer (2 duplicate scans).  ≤K+1-row
     # staged frame.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     ranked = _stage(
         orders.select(

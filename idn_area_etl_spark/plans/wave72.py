@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 

@@ -98,7 +98,7 @@ def a_dow_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): per_dow feeds the grand totals and the
     # within-group pass; unstaged, the events rollup re-ran per
     # consumer (2 duplicate scans).  7-row staged frame.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     per_dow = _stage(
         daily.groupBy("dow").agg(

@@ -152,7 +152,7 @@ def a_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    tests/test_plan_quality.py::test_probe_label_nn_subtree_shape
     #    (the final plan no longer contains those nodes, so the
     #    broadcast_audit whitelists dropped their entries).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     nn = _stage(probe_label_nn(emb))
     counts = nn.groupBy("truth", "pred").agg(F.count("*").alias("c"))

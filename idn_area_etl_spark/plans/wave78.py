@@ -27,7 +27,7 @@ from idn_area_etl_spark.operators.similarity import (
     dot_expr,
     norm_expr,
 )
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 

@@ -174,7 +174,7 @@ def q_revenue_pacing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): daily feeds the month total and the
     # cumulative pass; unstaged, the events scan + rollup re-ran per
     # consumer (2 duplicate scans).  ≤31-row staged frame.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     daily = _stage(
         ev.groupBy(

@@ -312,7 +312,7 @@ def q_price_endings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): the 100-row histogram feeds totals, chi²
     # and top-3; unstaged, the orders scan re-ran per consumer (2
     # duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     hist = _stage(
         orders.select(cents.alias("cents")).groupBy("cents").agg(

@@ -73,7 +73,7 @@ def s_decontaminate_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle explode re-ran per consumer.  The train accounting leg
     # keeps its own column-pruned (doc_id, lang) scan — staging raw
     # text to merge it would materialize the whole corpus.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     sh = _stage(
         base.filter(F.size("ws") >= 8).select(

@@ -29,7 +29,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.dedup import _stage
+from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.operators.ranks import grouped_running_multi
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table

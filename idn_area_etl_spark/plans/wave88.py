@@ -40,7 +40,7 @@ def a_xbar_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value and squared-value sums, so the global 3-sigma limits roll
     # up from the day cells (decimal sums are associative →
     # bit-identical N/S/SS) instead of re-scanning events.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     cells = _stage(
         ev.groupBy(F.to_date("ts").alias("day")).agg(

@@ -101,7 +101,7 @@ def a_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): daily feeds the mean probe and the
     # centered/lagged series; unstaged, the events rollup re-ran per
     # consumer (2 duplicate scans).  Day-cardinality staged frame.
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     daily = _stage(
         ev.groupBy(

@@ -40,7 +40,7 @@ def a_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9-opt (guide §2.4): the three-covariate long-form union reads
     # per_user three times; unstaged, the events scan + per-user
     # rollup re-ran per leg (2 duplicate scans).
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
 
     per_user = _stage(
         pre.groupBy("user_id").agg(

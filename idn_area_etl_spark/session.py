@@ -12,6 +12,7 @@ below are the ones that also make sense on a real cluster:
 - Arrow enabled for the few Pandas-UDF paths (multimodal decode).
 - Session timezone pinned UTC so results compare exactly against the
   DuckDB oracle (DuckDB timestamps are UTC-naive).
+- Driver heap from ``SPARK_DRIVER_MEM``, else ``min(16g, RAM/2)``.
 """
 
 from __future__ import annotations
@@ -19,6 +20,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: half of physical
+    memory, at most 16g, so a local JVM never gets more heap than the
+    host has (or than two concurrent sessions can share)."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, ram // 2 // 2**20)}m"
 
 
 def get_spark(
@@ -47,7 +56,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

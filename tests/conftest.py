@@ -10,25 +10,18 @@ from idn_area_etl_spark.session import get_spark
 from idn_area_etl_spark.sources.tables import TABLE_NAMES
 from tools.check_oracle import canonical
 
-#: Registry-wide sweep / stress modules whose fixtures build all ~370
-#: plans or run multi-config invariance jobs.  They dominate the
-#: suite's wall clock (the three slowest fixture setups alone are
-#: ~16 min under load), which made the round driver's time-boxed
-#: pytest run end mid-suite with no verdict (VERIFY_r08
-#: ``tests_ok: false`` with zero failures shown — a truncated run,
-#: not a failure).  They are OPT-IN via ``SPARK_GRAFT_SLOW_TESTS=1``
-#: so the driver-run surface completes inside its budget; local
-#: verification and any CI able to afford them MUST set the variable
-#: (the full gated suite is re-run and recorded every round — see
-#: OPTIMIZATION_r09.md).  Coverage is not weakened, only split: the
-#: fast surface still runs every operator and streaming test, and
-#: ``test_oracle_parity.py`` checks every oracle-backed spec against
-#: DuckDB (through the ``oracle_parity`` fixture below).
-_SLOW_MODULES = {
-    "test_plan_quality",
-    "test_scaling",
-    "test_invariance",
-}
+#: Registry-wide sweep / stress tests: they build all ~370 plans or run
+#: multi-config invariance jobs, and dominate the suite's wall clock
+#: (the ``hint_forced_plans`` fixture alone takes ~100 s on 4 cores),
+#: which made a time-boxed pytest run end mid-suite with no verdict.
+#: They are OPT-IN via ``SPARK_GRAFT_SLOW_TESTS=1``; local verification
+#: and any CI able to afford them MUST set the variable.  Gated are the
+#: two stress modules whole, and in ``test_plan_quality`` only the
+#: tests that use a registry-wide fixture: its focused plan-shape gates
+#: run by default.  ``test_oracle_parity.py`` still checks every
+#: oracle-backed spec against DuckDB (through ``oracle_parity`` below).
+_SLOW_MODULES = {"test_scaling", "test_invariance"}
+_SLOW_FIXTURES = {"all_built", "hint_forced_plans"}
 
 
 def pytest_collection_modifyitems(config, items):
@@ -38,7 +31,8 @@ def pytest_collection_modifyitems(config, items):
         reason="slow plan-sweep/stress suite; set SPARK_GRAFT_SLOW_TESTS=1"
     )
     for item in items:
-        if item.module.__name__ in _SLOW_MODULES:
+        fixtures = set(getattr(item, "fixturenames", ()))
+        if item.module.__name__ in _SLOW_MODULES or fixtures & _SLOW_FIXTURES:
             item.add_marker(skip)
 
 

@@ -73,3 +73,37 @@ def test_cli_end_to_end(corpus, tmp_path, capsys):
     out = spark.read.parquet(out_dir)
     assert {r.doc_id for r in out.select("doc_id").collect()} == {1, 4}
     assert "split" in out.columns  # partition column round-trips
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [
+        ["--threshold", "3"],
+        ["--threshold", "0.6"],
+        ["--threshold", "3/0"],
+        ["--threshold", "6/5"],
+        ["--threshold", "-1/5"],
+        ["--train-pct", "101"],
+        ["--val-pct", "-1"],
+        ["--train-pct", "80", "--val-pct", "30"],
+    ],
+)
+def test_cli_rejects_bad_arguments(flags, tmp_path, capsys):
+    """Bad flags end in a usage error (exit 2), before any Spark work."""
+    with pytest.raises(SystemExit) as exc:
+        main([str(tmp_path / "in"), str(tmp_path / "out"), *flags])
+    assert exc.value.code == 2
+    assert flags[0] in capsys.readouterr().err
+
+
+def test_cli_accepts_boundary_arguments(corpus, tmp_path, capsys):
+    """The edge values NUM == DEN and a 100/0 split are accepted."""
+    in_dir = str(tmp_path / "in.parquet")
+    corpus.write.parquet(in_dir)
+    rc = main(
+        [in_dir, str(tmp_path / "out"), "--threshold", "1/1",
+         "--train-pct", "100", "--val-pct", "0"]
+    )
+    assert rc == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["splits"] == {"train": stats["kept"]}

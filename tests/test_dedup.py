@@ -140,32 +140,15 @@ def test_token_shingles_edge_semantics(spark):
 
 
 def test_stage_materialization_escape_hatch(spark, corpus):
-    """spark.idnareaetl.stageMaterialization=persist swaps the pinned
-    localCheckpoint for a recomputable persist (the dynamic-allocation
-    / spot-instance deployment mode) with identical results."""
+    """Inside staged_scope() the pinned localCheckpoint is swapped for a
+    recomputable persist (the long-lived-session / spot-instance
+    deployment mode) with identical results."""
     from idn_area_etl_spark.operators.dedup import minhash_verified_pairs
+    from idn_area_etl_spark.operators.stage import staged_scope
 
     baseline = sorted(map(tuple, minhash_verified_pairs(corpus).collect()))
-    spark.conf.set("spark.idnareaetl.stageMaterialization", "persist")
-    try:
+    with staged_scope():
         out = minhash_verified_pairs(corpus)
         assert sorted(map(tuple, out.collect())) == baseline
-        # persist mode keeps lineage: the plan has a real InMemoryRelation
+        # persist keeps lineage: the plan has a real InMemoryRelation
         assert "InMemoryTableScan" in out._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.unset("spark.idnareaetl.stageMaterialization")
-
-
-def test_stage_materialization_rejects_unknown_mode(spark, corpus):
-    """A typo'd mode must raise, not silently fall back to the
-    lineage-truncating localCheckpoint the caller was opting out of."""
-    import pytest
-
-    from idn_area_etl_spark.operators.dedup import minhash_verified_pairs
-
-    spark.conf.set("spark.idnareaetl.stageMaterialization", "Persist")
-    try:
-        with pytest.raises(ValueError, match="stageMaterialization"):
-            minhash_verified_pairs(corpus)
-    finally:
-        spark.conf.unset("spark.idnareaetl.stageMaterialization")

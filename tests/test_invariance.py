@@ -39,7 +39,7 @@ from pathlib import Path
 
 import pytest
 
-import idn_area_etl_spark.operators.dedup as dedup
+import idn_area_etl_spark.operators.stage as stage
 from idn_area_etl_spark.plans import all_specs
 
 pytestmark = pytest.mark.invariance
@@ -123,8 +123,8 @@ def test_harness_detects_stage_removal(spark, sf01_dir):
     specs = all_specs()
     names = ["d_vocab_growth", "a_spearman_corr"]
     sf01 = sf01_dir
-    orig = dedup._stage
-    dedup._stage = lambda df: df  # simulate the regression
+    orig = stage._stage
+    stage._stage = lambda df: df  # simulate the regression
     try:
         diverged = False
         for name in names:
@@ -141,7 +141,7 @@ def test_harness_detects_stage_removal(spark, sf01_dir):
             if diverged:
                 break
     finally:
-        dedup._stage = orig
+        stage._stage = orig
     assert diverged, (
         "removing _stage no longer breaks invariance — the gate lost "
         "its sensitivity to layout-derived-column drift"

@@ -10,10 +10,10 @@ into a cartesian product.
 from __future__ import annotations
 
 import re
-from contextlib import contextmanager
 
 import pytest
 
+from idn_area_etl_spark.operators.stage import staging_disabled
 from idn_area_etl_spark.plans import all_specs
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -28,31 +28,6 @@ def specs():
     return all_specs()
 
 
-_STAGE_KEY = "spark.idnareaetl.stageMaterialization"
-
-
-@contextmanager
-def _staging_disabled(spark):
-    """Build plans with _stage() as a no-op: staging replaces a
-    subtree with an opaque `Scan ExistingRDD` the sweep classifiers
-    cannot see through (a data-scaled frame behind the checkpoint
-    would mechanically look bounded), so every repo-wide plan gate
-    audits the FULL pre-staging dataflow.  Staging only moves a
-    materialization boundary, never the dataflow, so the un-staged
-    plan is the right object for 100 TB boundedness checks; the
-    runtime (staged) shapes are pinned by the focused gates that
-    build their own plans under the ambient conf."""
-    prev = spark.conf.get(_STAGE_KEY, None)
-    spark.conf.set(_STAGE_KEY, "none")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_STAGE_KEY)
-        else:
-            spark.conf.set(_STAGE_KEY, prev)
-
-
 @pytest.fixture(scope="module")
 def all_built(spark, specs):
     """(schema, executed-plan string) for EVERY registered spec, built
@@ -60,9 +35,10 @@ def all_built(spark, specs):
     costs ~0.1 s; sweeps re-building 350+ plans each tripled the
     suite's planning time for no information).  Built with staging
     disabled so the sweeps see the full dataflow (see
-    _staging_disabled)."""
+    ``operators.stage.staging_disabled``); the runtime (staged) shapes
+    are pinned by the focused gates that build their own plans."""
     out = {}
-    with _staging_disabled(spark):
+    with staging_disabled():
         for name, spec in specs.items():
             df = spec.builder(spark, SF_DIR)
             out[name] = (df.schema, plan_of(df))
@@ -1024,7 +1000,7 @@ def hint_forced_plans(spark, specs):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     try:
-        with _staging_disabled(spark):
+        with staging_disabled():
             return {
                 name: plan_of(spec.builder(spark, SF_DIR))
                 for name, spec in specs.items()

@@ -183,12 +183,11 @@ def _stored_rdd_ids(spark) -> set[int]:
 
 def test_staged_scope_releases_blocks_and_restores_conf(spark):
     """Inside a staged_scope the rank helper's staged frame holds
-    stored blocks; on exit they are unpersisted and the
-    stageMaterialization conf is restored — so long-lived sessions
-    don't accumulate pinned full-data copies.  Results computed inside
-    the scope stay correct, and the same helper re-run after the scope
-    (default localCheckpoint mode) still matches."""
-    from idn_area_etl_spark.operators.dedup import staged_scope
+    stored blocks; on exit they are unpersisted — so long-lived
+    sessions don't accumulate pinned full-data copies.  Results
+    computed inside the scope stay correct, and the same helper re-run
+    after the scope (default localCheckpoint mode) still matches."""
+    from idn_area_etl_spark.operators.stage import staged_scope
 
     df = _df(spark, 2000)
     expected = [
@@ -201,14 +200,7 @@ def test_staged_scope_releases_blocks_and_restores_conf(spark):
         ).collect()
     ]
     before = _stored_rdd_ids(spark)
-    assert (
-        spark.conf.get("spark.idnareaetl.stageMaterialization", None) is None
-    )
-    with staged_scope(spark):
-        assert (
-            spark.conf.get("spark.idnareaetl.stageMaterialization")
-            == "persist"
-        )
+    with staged_scope():
         got = [
             (r.id, r.rn)
             for r in global_row_number(df, [F.col("v"), F.col("id")])
@@ -219,9 +211,6 @@ def test_staged_scope_releases_blocks_and_restores_conf(spark):
         assert during - before, "scope ran without storing staged blocks"
     after = _stored_rdd_ids(spark)
     assert after - before == set(), f"leaked staged blocks: {after - before}"
-    assert (
-        spark.conf.get("spark.idnareaetl.stageMaterialization", None) is None
-    )
     assert sorted(got) == sorted(expected)
     # default mode still works after the scope
     re_got = [
@@ -236,15 +225,15 @@ def test_staged_scope_releases_blocks_and_restores_conf(spark):
 def test_staged_scope_nests_and_releases_per_scope(spark):
     """Each scope releases only its own frames; the outer scope's
     staged blocks survive an inner scope's exit."""
-    from idn_area_etl_spark.operators.dedup import staged_scope
+    from idn_area_etl_spark.operators.stage import staged_scope
 
     df = _df(spark, 1000)
     before = _stored_rdd_ids(spark)
-    with staged_scope(spark):
+    with staged_scope():
         global_row_number(df, [F.col("v"), F.col("id")]).count()
         outer = _stored_rdd_ids(spark) - before
         assert outer
-        with staged_scope(spark):
+        with staged_scope():
             global_row_number(
                 df.limit(500), [F.col("v"), F.col("id")]
             ).count()
@@ -294,7 +283,7 @@ def test_staged_scope_is_thread_local(spark):
     the main scope's exit, and B's own exit must release them."""
     import threading
 
-    from idn_area_etl_spark.operators.dedup import staged_scope
+    from idn_area_etl_spark.operators.stage import staged_scope
 
     df_b = _df(spark, 1200)
     df_a = _df(spark, 800)
@@ -303,7 +292,7 @@ def test_staged_scope_is_thread_local(spark):
     b_state: dict = {}
 
     def worker():
-        with staged_scope(spark):
+        with staged_scope():
             got = global_row_number(df_b, [F.col("v"), F.col("id")])
             b_state["rows"] = sorted(
                 (r.id, r.rn) for r in got.select("id", "rn").collect()
@@ -321,7 +310,7 @@ def test_staged_scope_is_thread_local(spark):
         b_blocks = b_state["during"] - before
         assert b_blocks, "worker scope ran without storing staged blocks"
         # main-thread scope while B's scope is still open
-        with staged_scope(spark):
+        with staged_scope():
             global_row_number(df_a, [F.col("v"), F.col("id")]).count()
             during_a = _stored_rdd_ids(spark)
         after_a = _stored_rdd_ids(spark)
@@ -347,41 +336,50 @@ def test_staged_scope_is_thread_local(spark):
     assert b_state["rows"] == expected
 
 
-def test_staged_scope_overlap_restores_conf(spark):
-    """Overlapping scopes on ONE session must leave the session conf
-    exactly as found (r7 ADVICE): without the per-session ref-count,
-    A-enter(prev=None) / B-enter(prev='persist') / A-exit(unset) /
-    B-exit(re-set 'persist') durably flipped the session into persist
-    mode.  Only the outermost live scope may touch the conf."""
+def test_staging_beside_a_scope_leaves_nothing_cached(spark):
+    """A thread that stages while ANOTHER thread holds a scope keeps
+    the default localCheckpoint: nothing it stages lands in the
+    session-wide CacheManager, where no scope would ever release it.
+    After the scope exits, no frame staged by either thread is
+    cached."""
     import threading
 
-    from idn_area_etl_spark.operators.dedup import staged_scope
+    from pyspark.storagelevel import StorageLevel
 
-    key = "spark.idnareaetl.stageMaterialization"
-    assert spark.conf.get(key, None) is None, "test needs a clean conf"
-    b_entered = threading.Event()
-    a_exited = threading.Event()
-    b_done = threading.Event()
+    from idn_area_etl_spark.operators.stage import _stage, staged_scope
 
-    def worker():
-        with staged_scope(spark):
-            b_entered.set()
-            a_exited.wait(120)
-        b_done.set()
+    staged = {}
+    with staged_scope():
+        staged["scope"] = _stage(_df(spark, 600))
+        staged["scope"].count()
 
-    t = threading.Thread(target=worker)
-    with staged_scope(spark):  # A enters first: captures prev=None
-        assert spark.conf.get(key, None) == "persist"
+        def worker():
+            staged["other"] = _stage(_df(spark, 700))
+            staged["other"].count()
+
+        t = threading.Thread(target=worker)
         t.start()
-        assert b_entered.wait(120)
-    # A exited while B is live: conf must STAY persist (B still needs
-    # releasable staging), not be unset out from under B
-    assert spark.conf.get(key, None) == "persist"
-    a_exited.set()
-    assert b_done.wait(120)
-    t.join(120)
-    # outermost (last) exit restores the original state: unset
-    assert spark.conf.get(key, None) is None
+        t.join(120)
+        assert not t.is_alive() and "other" in staged, "worker did not stage"
+        assert staged["scope"].storageLevel == StorageLevel.MEMORY_AND_DISK
+    cached = [k for k, df in staged.items() if df.storageLevel != StorageLevel.NONE]
+    assert cached == [], f"frames left in the CacheManager: {cached}"
+
+
+def test_staging_disabled_returns_the_frame_and_nests(spark):
+    """Inside staging_disabled() _stage is the identity; nested blocks
+    keep it off until the outermost one exits, then staging is back."""
+    from idn_area_etl_spark.operators.stage import _stage, staging_disabled
+
+    df = _df(spark, 100)
+    with staging_disabled():
+        assert _stage(df) is df
+        with staging_disabled():
+            assert _stage(df) is df
+        assert _stage(df) is df
+    staged = _stage(df)
+    assert staged is not df
+    assert "ExistingRDD" in staged._jdf.queryExecution().executedPlan().toString()
 
 
 def test_grouped_running_multi_matches_window(spark):

@@ -572,6 +572,7 @@ def audit_plan_windows(plan: str) -> list[tuple[str, set[str], str, str]]:
 
 def main() -> int:
     sys.path.insert(0, ".")
+    from idn_area_etl_spark.operators.stage import staging_disabled
     from idn_area_etl_spark.plans import all_specs
     from idn_area_etl_spark.session import get_spark
 
@@ -579,12 +580,6 @@ def main() -> int:
     spark = get_spark()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    # Audit the FULL pre-staging dataflow: _stage() replaces a subtree
-    # with an opaque `Scan ExistingRDD` that classify() cannot see
-    # through (a data-scaled frame behind the checkpoint would look
-    # mechanically bounded), so all three passes run with staging off.
-    # Staging moves a materialization boundary, never the dataflow.
-    spark.conf.set("spark.idnareaetl.stageMaterialization", "none")
     flagged: dict[str, list[str]] = {}
     nlj_flagged: dict[str, list[str]] = {}
     win_flagged: dict[str, list[str]] = {}
@@ -592,8 +587,12 @@ def main() -> int:
     n_nlj = 0
     n_win = 0
     for name, spec in sorted(all_specs().items()):
-        df = spec.builder(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        # Audit the FULL pre-staging dataflow: _stage() replaces a
+        # subtree with an opaque `Scan ExistingRDD` that classify()
+        # cannot see through, so all three passes run with staging off.
+        with staging_disabled():
+            df = spec.builder(spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
         for verdict, big, head in audit_plan(plan):
             n_bcast += 1
             if verdict == "unbounded" and name not in BOUNDED_BY_CONSTRUCTION:

@@ -132,7 +132,7 @@ def _curation(docs: DataFrame) -> DataFrame:
     """Flagship curation pipeline over the synthetic corpus (quality
     gate → hash-agg dedup + join-back → split → rollup) — same shape
     as plans/wave12.py's p_curation_pipeline."""
-    from idn_area_etl_spark.operators.dedup import _stage
+    from idn_area_etl_spark.operators.stage import _stage
     from idn_area_etl_spark.operators.text import quality_score_expr
 
     scored = docs.select(
@@ -349,7 +349,7 @@ def run_noop(df: DataFrame) -> float:
 def drop_persisted_blocks(spark) -> None:
     """Unpersist every cached/checkpointed RDD between ops.
 
-    The sketch-stage lazy localCheckpoints (`operators/dedup.py:_stage`)
+    The sketch-stage lazy localCheckpoints (`operators/stage.py:_stage`)
     and the iterative ops' checkpoints live until the session ends; in
     a combined run they pile up in storage memory and inflate later
     ops' timings 1.5-2x vs a dedicated run (measured: winnow_pairs 1M
