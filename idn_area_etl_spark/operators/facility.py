@@ -10,7 +10,7 @@ join candidates to the current coverage vector, compute marginal
 gain = sum of positive similarity improvements, take the argmax.
 The selected set lives in literals (k is small by definition), so no
 state accumulates on executors; cost is O(k) scans of the candidate-
-pair similarity table, which itself is computed once and cached.
+pair similarity table, which itself is computed once and staged.
 
 Greedy argmax chains are not portable SQL (k nested argmaxes over
 recomputed coverage), so the registered query is rows-only; the exact
@@ -28,6 +28,7 @@ from idn_area_etl_spark.operators.similarity import (
     dot_expr,
     norm_expr,
 )
+from idn_area_etl_spark.operators.stage import _stage, staged_scope
 
 
 def facility_location_select(
@@ -75,8 +76,19 @@ def facility_location_select(
                 / (F.col("ni") * F.col("nj"))
             ).alias("sim"),
         )
-        .cache()
     )
+    # the k greedy steps all scan sims: stage it once, release it on
+    # exit even when a step fails
+    with staged_scope():
+        rows = _greedy_steps(_stage(sims), k)
+    return spark.createDataFrame(
+        rows, "step int, selected_id long, objective double"
+    )
+
+
+def _greedy_steps(sims: DataFrame, k: int) -> list[tuple[int, int, float]]:
+    """(step, selected id, objective) for each greedy step over the
+    ``(i, j, sim)`` similarity table."""
     selected: list[int] = []
     rows = []
     for step in range(1, k + 1):
@@ -121,7 +133,4 @@ def facility_location_select(
             .first()["obj"]
         )
         rows.append((step, int(best["j"]), round(float(obj), 6)))
-    sims.unpersist()
-    return spark.createDataFrame(
-        rows, "step int, selected_id long, objective double"
-    )
+    return rows

@@ -13,10 +13,25 @@ values with a fully distributed plan:
    id packs ``(partition_id << 33) | local_row_number`` (documented
    layout of the builtin), so the per-partition position comes free —
    no second exchange for a pid-window.
-3. Per-partition row counts (a ~``numPartitions``-row aggregate) turn
-   into cumulative offsets with a window over that TINY frame — its
-   cardinality is bounded by the cluster's partition count, not the
-   data — and broadcast-join back.
+3. One prefix-offset core (``_prefix_totals``) serves every global
+   rank and running sum: a per-partition row count plus one partial
+   sum per value (a ~``numPartitions``-row aggregate) turns into
+   cumulative offsets, prior-partition sums and grand totals with a
+   window over that TINY frame — its cardinality is bounded by the
+   cluster's partition count, not the data — broadcast-joined back
+   and added to a local running window over ``_lpos``.
+   :func:`global_row_number`, :func:`global_running_sum`,
+   :func:`global_order_stats`, :func:`global_running_multi` and
+   :func:`global_ntile` are projections of it;
+   :func:`global_running_max` combines with ``max`` instead and
+   :func:`grouped_row_number` offsets per group, both on the same
+   ranged frame.
+
+Running sums follow SQL's rule: NULL until the first non-NULL value,
+then the sum of the non-NULL values so far.  The local and prior
+parts combine as ``coalesce(prior + local, prior, local)``, with
+``prior`` summed over strictly earlier partitions, so the answer does
+not depend on where NULLs fall relative to the range boundaries.
 
 The result is bit-identical to the single-partition window whenever
 the order is a total order (unique tiebreaker — the registry-wide
@@ -104,25 +119,69 @@ def _ranged_with_position(
     ).withColumn("_lpos", F.col("_mid").bitwiseAND(F.lit(_LOCAL_MASK)))
 
 
-def _offsets(positioned: DataFrame) -> DataFrame:
-    """Per-partition starting offsets: cumulative counts over the
-    (≤ numPartitions)-row per-partition histogram.  The window here IS
-    partition-less but its input cardinality is bounded by the cluster
-    partition count — the one place a global window is always safe."""
-    counts = positioned.groupBy("_pid").agg(F.count("*").alias("_n"))
-    w = (
-        Window.orderBy("_pid")
+def _prefix_totals(
+    df: DataFrame,
+    order_cols: list[Column],
+    values: dict[str, Column],
+    outputs: dict[str, Column],
+) -> DataFrame:
+    """The prefix-offset core every global rank and running sum reads.
+
+    Returns ``df``'s columns plus ``outputs``, whose expressions read
+    ``_rn`` (1-based global row number), ``_n_total`` (global row
+    count) and, for each ``values`` key ``k``, ``_run_k`` (inclusive
+    running sum) and ``_tot_k`` (grand total).  They come from:
+
+    1. one per-``_pid`` aggregate — a row count plus one partial sum
+       per value;
+    2. one window over that (≤ numPartitions)-row histogram — the row
+       offset, each value's sum over STRICTLY EARLIER partitions
+       (``_prior_k``) and the grand totals.  The window is
+       partition-less, but its input cardinality is bounded by the
+       partition count: the one place a global window is always safe.
+       It is broadcast-joined back on ``_pid``;
+    3. one local running-sum window over ``_lpos``.
+
+    The optimizer prunes what ``outputs`` does not read, so each
+    public helper plans only the aggregates and windows it uses."""
+    d = _ranged_with_position(df, order_cols)
+    for k, v in values.items():
+        d = d.withColumn(f"_v_{k}", v)
+    per = d.groupBy("_pid").agg(
+        F.count("*").alias("_n"),
+        *[F.sum(f"_v_{k}").alias(f"_ps_{k}") for k in values],
+    )
+    w = Window.orderBy("_pid")
+    earlier = w.rowsBetween(Window.unboundedPreceding, -1)
+    every = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    offs = per.select(
+        "_pid",
+        F.coalesce(F.sum("_n").over(earlier), F.lit(0)).alias("_offset"),
+        F.sum("_n").over(every).alias("_n_total"),
+        *[F.sum(f"_ps_{k}").over(earlier).alias(f"_prior_{k}")
+          for k in values],
+        *[F.sum(f"_ps_{k}").over(every).alias(f"_tot_{k}") for k in values],
+    )
+    lw = (
+        Window.partitionBy("_pid")
+        .orderBy("_lpos")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return counts.select(
-        "_pid",
-        (F.sum("_n").over(w) - F.col("_n")).alias("_offset"),
-        F.sum("_n").over(
-            Window.orderBy("_pid").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("_total"),
+    out = d.join(F.broadcast(offs), "_pid").withColumns(
+        {
+            "_rn": F.col("_offset") + F.col("_lpos") + 1,
+            **{f"_local_{k}": F.sum(f"_v_{k}").over(lw) for k in values},
+        }
     )
+    runs = {}
+    for k in values:
+        prior, local = F.col(f"_prior_{k}"), F.col(f"_local_{k}")
+        # SQL running sum: NULL until the first non-NULL value, wherever
+        # the NULLs fall relative to the range partition boundaries
+        runs[f"_run_{k}"] = F.coalesce(prior + local, prior, local)
+    out = out.withColumns(runs).withColumns(outputs)
+    keep = set(df.columns) | set(outputs)
+    return out.drop(*[c for c in out.columns if c not in keep])
 
 
 def global_row_number(
@@ -131,13 +190,7 @@ def global_row_number(
     """``row_number() OVER (ORDER BY order_cols)`` without a
     single-partition sort.  ``order_cols`` must be a total order
     (include a unique tiebreaker) for a deterministic result."""
-    d = _ranged_with_position(df, order_cols)
-    offs = _offsets(d).select("_pid", "_offset")
-    return (
-        d.join(F.broadcast(offs), "_pid")
-        .withColumn(out, (F.col("_offset") + F.col("_lpos") + 1))
-        .drop("_mid", "_pid", "_lpos", "_offset")
-    )
+    return _prefix_totals(df, order_cols, {}, {out: F.col("_rn")})
 
 
 def global_running_sum(
@@ -149,24 +202,8 @@ def global_running_sum(
     """Inclusive ``sum(value) OVER (ORDER BY order_cols ROWS UNBOUNDED
     PRECEDING)`` — local running sum within each range partition plus
     a broadcast per-partition prefix total."""
-    d = _ranged_with_position(df, order_cols).withColumn("_v", value)
-    sums = d.groupBy("_pid").agg(F.sum("_v").alias("_psum"))
-    w = (
-        Window.orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offs = sums.select(
-        "_pid", (F.sum("_psum").over(w) - F.col("_psum")).alias("_prior")
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy("_lpos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        d.join(F.broadcast(offs), "_pid")
-        .withColumn(out, F.col("_prior") + F.sum("_v").over(lw))
-        .drop("_mid", "_pid", "_lpos", "_prior", "_v")
+    return _prefix_totals(
+        df, order_cols, {"v": value}, {out: F.col("_run_v")}
     )
 
 
@@ -218,43 +255,16 @@ def global_order_stats(
     value total — everything a Pareto / cumulative-share query needs,
     from a single range shuffle (the per-partition histogram carries
     counts, partial sums, and grand totals together)."""
-    d = _ranged_with_position(df, order_cols).withColumn("_v", value)
-    per = d.groupBy("_pid").agg(
-        F.count("*").alias("_n"), F.sum("_v").alias("_psum")
-    )
-    w = (
-        Window.orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = (
-        Window.orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    offs = per.select(
-        "_pid",
-        (F.sum("_n").over(w) - F.col("_n")).alias("_offset"),
-        (F.sum("_psum").over(w) - F.col("_psum")).alias("_prior"),
-        F.sum("_n").over(wall).alias("_ntotal"),
-        F.sum("_psum").over(wall).alias("_vtotal"),
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy("_lpos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        d.join(F.broadcast(offs), "_pid")
-        .withColumn(rn_out, F.col("_offset") + F.col("_lpos") + 1)
-        .withColumn(
-            run_out,
-            F.when(
-                F.col("_prior").isNull(), F.sum("_v").over(lw)
-            ).otherwise(F.col("_prior") + F.sum("_v").over(lw)),
-        )
-        .withColumn(count_out, F.col("_ntotal"))
-        .withColumn(total_out, F.col("_vtotal"))
-        .drop("_mid", "_pid", "_lpos", "_offset", "_prior",
-              "_ntotal", "_vtotal", "_v")
+    return _prefix_totals(
+        df,
+        order_cols,
+        {"v": value},
+        {
+            rn_out: F.col("_rn"),
+            run_out: F.col("_run_v"),
+            count_out: F.col("_n_total"),
+            total_out: F.col("_tot_v"),
+        },
     )
 
 
@@ -276,20 +286,10 @@ def grouped_row_number(
     exchange), and adds per-group offsets from the tiny
     ``(#groups × #partitions)`` histogram.  ``count_out`` optionally
     emits the per-group total row count."""
-    pcols = [F.col(c) for c in partition_cols]
-    d = (
-        df.repartitionByRange(
-            _num_range_partitions(df), *pcols, *order_cols
-        )
-        .sortWithinPartitions(*pcols, *order_cols)
-        .withColumn("_mid", F.monotonically_increasing_id())
+    d = _ranged_with_position(
+        df, [*[F.col(c) for c in partition_cols], *order_cols]
     )
-    # materialized for the same layout-stability reason as
-    # _ranged_with_position (offsets join back on _pid)
-    from idn_area_etl_spark.operators.stage import _stage
-
-    d = _stage(d).withColumn("_pid", F.shiftright("_mid", 33))
-    lw = Window.partitionBy("_pid", *partition_cols).orderBy("_mid")
+    lw = Window.partitionBy("_pid", *partition_cols).orderBy("_lpos")
     local = d.withColumn("_lrn", F.row_number().over(lw))
     hist = local.groupBy("_pid", *partition_cols).agg(
         F.count("*").alias("_n")
@@ -315,7 +315,7 @@ def grouped_row_number(
     ).withColumn(out, F.col("_offset") + F.col("_lrn"))
     if count_out is not None:
         res = res.withColumn(count_out, F.col("_gtotal"))
-    return res.drop("_mid", "_pid", "_lrn", "_offset", "_gtotal")
+    return res.drop("_mid", "_pid", "_lpos", "_lrn", "_offset", "_gtotal")
 
 
 def global_running_multi(
@@ -328,45 +328,11 @@ def global_running_multi(
     """Inclusive global running sums AND grand totals for SEVERAL
     value columns in one range shuffle (e.g. the two empirical CDFs a
     KS statistic compares)."""
-    d = _ranged_with_position(df, order_cols)
-    for k, v in values.items():
-        d = d.withColumn(f"_v_{k}", v)
-    per = d.groupBy("_pid").agg(
-        *[F.sum(f"_v_{k}").alias(f"_ps_{k}") for k in values]
-    )
-    w = (
-        Window.orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = (
-        Window.orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    offs = per.select(
-        "_pid",
-        *[
-            (F.sum(f"_ps_{k}").over(w) - F.col(f"_ps_{k}")).alias(
-                f"_prior_{k}"
-            )
-            for k in values
-        ],
-        *[F.sum(f"_ps_{k}").over(wall).alias(f"_tot_{k}") for k in values],
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy("_lpos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = d.join(F.broadcast(offs), "_pid")
+    outputs = {}
     for k in values:
-        out = out.withColumn(
-            f"{run_prefix}{k}",
-            F.col(f"_prior_{k}") + F.sum(f"_v_{k}").over(lw),
-        ).withColumn(f"{total_prefix}{k}", F.col(f"_tot_{k}"))
-    drop = ["_mid", "_pid", "_lpos"]
-    for k in values:
-        drop += [f"_v_{k}", f"_ps_{k}", f"_prior_{k}", f"_tot_{k}"]
-    return out.drop(*[c for c in drop if c in out.columns])
+        outputs[f"{run_prefix}{k}"] = F.col(f"_run_{k}")
+        outputs[f"{total_prefix}{k}"] = F.col(f"_tot_{k}")
+    return _prefix_totals(df, order_cols, values, outputs)
 
 
 def discrete_quantiles(
@@ -562,18 +528,12 @@ def global_ntile(
     row number: with N rows the first ``N % k`` tiles hold
     ``N//k + 1`` rows and the rest ``N//k`` (the SQL ntile contract).
     """
-    d = _ranged_with_position(df, order_cols)
-    offs = _offsets(d)
-    rn = F.col("_offset") + F.col("_lpos") + 1
-    n = F.col("_total")
+    rn = F.col("_rn")
+    n = F.col("_n_total")
     q = F.floor(n / k)
     r = n % k
     big = r * (q + 1)  # rows covered by the (q+1)-sized tiles
     tile = F.when(
         rn <= big, F.ceil(rn / (q + 1))
     ).otherwise(r + F.ceil((rn - big) / q))
-    return (
-        d.join(F.broadcast(offs), "_pid")
-        .withColumn(out, tile.cast("int"))
-        .drop("_mid", "_pid", "_lpos", "_offset", "_total")
-    )
+    return _prefix_totals(df, order_cols, {}, {out: tile.cast("int")})

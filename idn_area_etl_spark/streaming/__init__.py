@@ -1,6 +1,3 @@
-from idn_area_etl_spark.streaming.micro_batch import (
-    run_micro_batch_pipeline,
-    streaming_first_seen_provinces,
-)
+from idn_area_etl_spark.streaming.micro_batch import run_micro_batch_pipeline
 
-__all__ = ["run_micro_batch_pipeline", "streaming_first_seen_provinces"]
+__all__ = ["run_micro_batch_pipeline"]

@@ -13,9 +13,6 @@ and ``_seen_provinces`` dedups provinces across the whole run
   state — each batch anti-joins the already-written codes before
   appending (exactly the semantics of the reference's in-memory set,
   but restart-safe because the state lives in the sink).
-- a pure-streaming variant (:func:`streaming_first_seen_provinces`)
-  uses ``dropDuplicates`` state for engines that want
-  exactly-once streaming dedup without a sink read-back.
 """
 
 from __future__ import annotations
@@ -23,7 +20,6 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.registry import extract_all
 from idn_area_etl_spark.sources.raw import RAW_TABLE_SCHEMA
@@ -85,26 +81,3 @@ def run_micro_batch_pipeline(
         except Exception:  # noqa: BLE001 - zero-output entity
             counts[name] = 0
     return counts
-
-
-def streaming_first_seen_provinces(raw_stream: DataFrame) -> DataFrame:
-    """Pure-streaming stateful first-seen dedup of province codes.
-
-    ``dropDuplicates`` keeps per-key state across micro-batches — the
-    streaming twin of A1.  Key space is tiny (≤ ~40 provinces), so
-    unbounded state is safe (SURVEY.md §2.9).
-
-    Note: table classification needs per-table aggregation, which
-    append-mode streams restrict; this variant applies the row-shape
-    heuristic (code col 0, name col 1, data rows only) — the
-    foreachBatch pipeline above is the full-fidelity path.
-    """
-    code = F.trim(F.get("cells", 0))
-    name = F.trim(F.get("cells", 1))
-    return (
-        raw_stream.filter(F.col("row_no") >= 2)
-        .select("page_no", "table_no", "row_no",
-                code.alias("code"), name.alias("name"))
-        .filter((F.length("code") == 2) & (F.col("name") != ""))
-        .dropDuplicates(["code"])
-    )

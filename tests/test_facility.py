@@ -54,6 +54,16 @@ def test_facility_matches_python_greedy(spark, sf_dir):
     assert got_ids == want_ids
     for r, (_, obj) in zip(rows, trace):
         assert r["objective"] == pytest.approx(obj, rel=1e-4)
+    # the staged similarity table is released, also when a greedy step
+    # fails (a zero vector divides by a zero norm under ANSI mode)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty(), "similarity table left in the CacheManager"
+    zero = emb.limit(3).select(
+        "vec_id", F.transform("embedding", lambda x: x * 0).alias("embedding")
+    )
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        facility_location_select(spark, zero, k=2)
+    assert cache.isEmpty(), "failed selection left its similarity table cached"
 
 
 def test_facility_objective_monotone_diminishing(spark, sf_dir):

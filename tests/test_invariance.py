@@ -69,6 +69,12 @@ INVARIANCE_SPECS = [
     "q_session_window_native", # plain partitioned window (control)
     "q1_pricing_summary",      # plain hash aggregate (control)
     "e_top_eigenvector",       # r4 sweep catch: decimal-sum power iteration
+    "q_max_concurrency",       # global_running_sum
+    "q_skyline_customers",     # global_running_max (exclusive)
+    "a_quantile_sketch",       # global_running_multi
+    "a_cumulative_gains",      # global_ntile
+    "q_quantile_normalize",    # grouped_row_number
+    "w_ntile_customers",       # grouped_running_multi
 ]
 
 _CONFIGS = [

@@ -4,13 +4,20 @@ window equivalents, bit for bit, on data spread over many partitions.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.ranks import (
     global_ntile,
+    global_order_stats,
     global_row_number,
+    global_running_max,
+    global_running_multi,
     global_running_sum,
+    grouped_row_number,
     grouped_topk,
 )
 
@@ -28,20 +35,113 @@ def _df(spark, n=5000):
     )
 
 
+def _null_runs_df(spark, n=4000):
+    """``v`` is NULL on a leading run and on a run of 1,500 rows in the
+    middle of the ``(k, id)`` order.  At 8 range partitions (~500 rows
+    each) the first partition starts with NULLs before any value, the
+    middle run spans at least one all-NULL partition, and a partition
+    starts with NULLs after earlier values — the cases where a running
+    sum must carry the prior total, or stay NULL, across partitions
+    (checked by ``test_null_runs_input_covers_partition_edges``)."""
+    null = (F.col("id") < 60) | F.col("id").between(1000, 2499)
+    return (
+        spark.range(n)
+        .repartition(16)
+        .select(
+            (F.col("id") / 3).cast("long").alias("k"),
+            "id",
+            F.when(null, None).otherwise(F.xxhash64("id") % 97).alias("v"),
+        )
+    )
+
+
+def _spread_df(spark, n=5000):
+    return _df(spark, n).withColumn("k", F.col("v"))
+
+
+# (name, input frame with order key `k`, tiebreaker `id` and value `v`,
+# range partitions or None for the session default)
+_INPUTS = [
+    ("spread", _spread_df, None),
+    ("null_runs", _null_runs_df, 8),
+]
+
+
+def _order():
+    return [F.col("k").asc(), F.col("id").asc()]
+
+
+@contextmanager
+def _shuffle_partitions(spark, n):
+    """``spark.sql.shuffle.partitions`` (the helpers' range partition
+    count) set to ``n`` for the block and restored after it."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    if n is not None:
+        spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
+
+
+def _by_id(df, *cols):
+    return {r["id"]: tuple(r[c] for c in cols) for r in df.collect()}
+
+
+def _assert_matches_window(spark, helper, window, cols, inputs=_INPUTS):
+    """On every input, ``helper(df)`` and the single-partition
+    ``window(df, w)`` (``w`` = ORDER BY k, id) agree on ``cols`` for
+    every row."""
+    w = Window.orderBy("k", "id")
+    for name, build, parts in inputs:
+        with _shuffle_partitions(spark, parts):
+            df = build(spark)
+            got = _by_id(helper(df), *cols)
+            exp = _by_id(window(df, w), *cols)
+        assert got == exp, f"{name}: helper differs from the window"
+
+
+def _upto(w, end=Window.currentRow):
+    return w.rowsBetween(Window.unboundedPreceding, end)
+
+
+def _whole(w):
+    return w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+
+
+def test_null_runs_input_covers_partition_edges(spark):
+    """The NULL-run input really puts NULLs at range partition edges
+    (the layout is read from the same ranged frame the helpers use)."""
+    from idn_area_etl_spark.operators.ranks import _ranged_with_position
+
+    with _shuffle_partitions(spark, 8):
+        d = _ranged_with_position(_null_runs_df(spark), _order())
+        per = {
+            r["_pid"]: r
+            for r in d.groupBy("_pid")
+            .agg(
+                F.count("v").alias("nonnull"),
+                F.min_by("v", "_lpos").alias("first_v"),
+            )
+            .collect()
+        }
+    first = min(per)
+    assert per[first]["first_v"] is None
+    assert any(r["nonnull"] == 0 for r in per.values()), "no all-NULL part"
+    assert any(
+        p != first and r["first_v"] is None and r["nonnull"] > 0
+        for p, r in per.items()
+    ), "no partition starts with NULLs before its values"
+
+
 def test_global_row_number_matches_window(spark):
-    df = _df(spark)
-    order = [F.col("v").asc(), F.col("id").asc()]
-    got = {
-        r["id"]: r["rn"]
-        for r in global_row_number(df, order, out="rn").collect()
-    }
-    exp = {
-        r["id"]: r["rn"]
-        for r in df.withColumn(
-            "rn", F.row_number().over(Window.orderBy("v", "id"))
-        ).collect()
-    }
-    assert got == exp
+    _assert_matches_window(
+        spark,
+        lambda df: global_row_number(df, _order(), out="rn"),
+        lambda df, w: df.withColumn("rn", F.row_number().over(w)),
+        ["rn"],
+    )
 
 
 def test_global_row_number_desc_order(spark):
@@ -62,43 +162,88 @@ def test_global_row_number_desc_order(spark):
 
 
 def test_global_running_sum_matches_window(spark):
-    df = _df(spark)
-    order = [F.col("v").asc(), F.col("id").asc()]
-    got = {
-        r["id"]: r["run"]
-        for r in global_running_sum(
-            df, order, F.col("v").cast("long"), out="run"
-        ).collect()
-    }
-    exp = {
-        r["id"]: r["run"]
-        for r in df.withColumn(
-            "run",
-            F.sum(F.col("v").cast("long")).over(
-                Window.orderBy("v", "id").rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow
-                )
-            ),
-        ).collect()
-    }
-    assert got == exp
+    _assert_matches_window(
+        spark,
+        lambda df: global_running_sum(df, _order(), F.col("v"), out="run"),
+        lambda df, w: df.withColumn("run", F.sum("v").over(_upto(w))),
+        ["run"],
+    )
+
+
+@pytest.mark.parametrize("inclusive", [True, False])
+def test_global_running_max_matches_window(spark, inclusive):
+    end = Window.currentRow if inclusive else -1
+    _assert_matches_window(
+        spark,
+        lambda df: global_running_max(
+            df, _order(), F.col("v"), out="mx", inclusive=inclusive
+        ),
+        lambda df, w: df.withColumn("mx", F.max("v").over(_upto(w, end))),
+        ["mx"],
+    )
+
+
+def test_global_order_stats_matches_window(spark):
+    _assert_matches_window(
+        spark,
+        lambda df: global_order_stats(df, _order(), F.col("v")),
+        lambda df, w: df.select(
+            "id",
+            F.row_number().over(w).alias("rn"),
+            F.sum("v").over(_upto(w)).alias("running"),
+            F.count("*").over(_whole(w)).alias("n_total"),
+            F.sum("v").over(_whole(w)).alias("v_total"),
+        ),
+        ["rn", "running", "n_total", "v_total"],
+    )
+
+
+def test_global_running_multi_matches_window(spark):
+    odd = F.when(F.col("id") % 2 == 1, F.col("v") * 2)
+    _assert_matches_window(
+        spark,
+        lambda df: global_running_multi(
+            df, _order(), {"v": F.col("v"), "odd": odd}
+        ),
+        lambda df, w: df.select(
+            "id",
+            F.sum("v").over(_upto(w)).alias("cum_v"),
+            F.sum(odd).over(_upto(w)).alias("cum_odd"),
+            F.sum("v").over(_whole(w)).alias("tot_v"),
+            F.sum(odd).over(_whole(w)).alias("tot_odd"),
+        ),
+        ["cum_v", "cum_odd", "tot_v", "tot_odd"],
+    )
 
 
 def test_global_ntile_matches_window(spark):
-    for n, k in [(5000, 7), (103, 10), (6, 10), (96, 4)]:
-        df = _df(spark, n)
-        order = [F.col("v").asc(), F.col("id").asc()]
-        got = {
-            r["id"]: r["t"]
-            for r in global_ntile(df, order, k, out="t").collect()
-        }
-        exp = {
-            r["id"]: r["t"]
-            for r in df.withColumn(
-                "t", F.ntile(k).over(Window.orderBy("v", "id"))
-            ).collect()
-        }
-        assert got == exp, f"ntile mismatch at n={n} k={k}"
+    # small inputs make N % k == 0, N % k != 0 and N < k all occur
+    small = [(f"n={n}", lambda s, n=n: _spread_df(s, n), None)
+             for n in (103, 96, 6)]
+    for k in (7, 10, 4):
+        _assert_matches_window(
+            spark,
+            lambda df: global_ntile(df, _order(), k, out="t"),
+            lambda df, w: df.withColumn("t", F.ntile(k).over(w)),
+            ["t"],
+            _INPUTS + small,
+        )
+
+
+def test_grouped_row_number_matches_window(spark):
+    g = F.col("id") % 3
+    _assert_matches_window(
+        spark,
+        lambda df: grouped_row_number(
+            df.withColumn("g", g), ["g"], _order(), count_out="n"
+        ),
+        lambda df, w: df.select(
+            "id",
+            F.row_number().over(w.partitionBy(g)).alias("rn"),
+            F.count("*").over(Window.partitionBy(g)).alias("n"),
+        ),
+        ["rn", "n"],
+    )
 
 
 def test_global_row_number_plan_no_full_data_single_partition(spark):
