@@ -1,6 +1,6 @@
 """Deduplication operators for LLM-data pipelines at scale.
 
-Four strategies, all shuffle-conscious:
+Five strategies, all shuffle-conscious:
 
 - **exact**: content-hash groupBy — one shuffle on the hash, map-side
   partial agg.
@@ -9,7 +9,21 @@ Four strategies, all shuffle-conscious:
 - **MinHash-LSH**: signature → banded bucket join — the 100 TB path:
   candidate generation is equi-join on (band, bucket-hash), never an
   all-pairs product.
+- **prefix-filtered exact Jaccard** (AllPairs/PPJoin): rare-first
+  prefixes → equi-join on a prefix shingle, no false negatives.
 - **SimHash**: 64-bit sign fingerprints; near-dups differ in few bits.
+
+MinHash-LSH and the prefix join are filter-and-verify set-similarity
+joins built on three private pieces, which the batch operators, the
+fuzzy mode of ``curate`` and ``streaming/fuzzy_dedup.py`` all share:
+
+- :func:`_minhash_sketch` — one regex-shingle scan, one explode and one
+  per-doc aggregate: the signature minima and the hashed shingle set;
+- :func:`_band_pairs` — band keys equi-joined on ``(band_no,
+  band_hash)`` into distinct id pairs (the filter);
+- :func:`_verify_jaccard` — candidates joined to both sides' sets:
+  intersection, union, the integer threshold test and the rounded
+  Jaccard (the verify).
 
 Everything is native column expressions (xxhash64, higher-order
 aggregate/transform) — no Python in the row path.
@@ -278,6 +292,168 @@ def _blocked_jaccard(docs: DataFrame, n: int, text_col: str) -> DataFrame:
     )
 
 
+def _minhash_sketch(
+    docs: DataFrame, num_hashes: int, n: int, text_col: str
+) -> DataFrame:
+    """The sketch every MinHash join reads: ``(doc_id, _m0 ..
+    _m{num_hashes-1}, sh)`` — the affine-permutation minima of the
+    signature and the hashed shingle set, from ONE regex-shingle scan,
+    one explode and one per-doc aggregate.
+
+    Plain ``min`` aggregates stay inside whole-stage codegen with
+    map-side partial aggregation; each doc's shingles come from one
+    input row, so the aggregate COMPLETES map-side and the exchange
+    carries one finished row per doc.  (Per-doc higher-order
+    ``transform``+``array_min`` lambdas run interpreted — same
+    pathology, same fix, same ~order-of-magnitude win as
+    :func:`simhash_signatures`.)  ``explode_outer`` keeps a doc with
+    no shingle as one NULL-hash row, whose minima are NULL.
+
+    ``sh`` holds xxhash64 longs, not shingle strings (same trade as
+    :func:`_blocked_jaccard`: exact up to 64-bit collisions, ~35%
+    cheaper intersects) and, load-bearing at scale, raw shingle text
+    is so repetitive that AQE's compressed-size estimate can pick a
+    broadcast whose deserialized form is GBs (seen with
+    :func:`prefix_jaccard_join` at 1M docs); hashed longs compress
+    ~1:1, so AQE's adaptive join choice stays trustworthy.
+    ``collect_set`` drops duplicates and NULLs: shingle arrays are
+    already distinct and xxhash64 never returns NULL, so set semantics
+    are exact.  A caller that selects only the minima gets a plan
+    without the ``collect_set`` (column pruning drops it)."""
+    p = F.lit(MINHASH_PRIME).cast("long")
+    exploded = docs.select(
+        "doc_id",
+        F.explode_outer(
+            F.transform(
+                token_shingles_expr(F.col(text_col), n),
+                lambda s: F.xxhash64(s),
+            )
+        ).alias("_h"),
+    )
+    return exploded.groupBy("doc_id").agg(
+        *[
+            F.min(
+                F.pmod(F.pmod(F.col("_h"), p) * F.lit(a) + F.lit(b), p)
+            ).alias(f"_m{i}")
+            for i, (a, b) in enumerate(_MINHASH_PARAMS[:num_hashes])
+        ],
+        F.collect_set("_h").alias("sh"),
+    )
+
+
+def _signature(num_hashes: int) -> Column:
+    """The sketch minima as one ``signature`` array column."""
+    return F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias(
+        "signature"
+    )
+
+
+def _band_keys(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """``(doc_id, band_no, band_hash)``: one row per band of each
+    ``signature``.
+
+    ``band_hash`` is ``xxhash64(band_no, sig[i..i+r-1])`` over the
+    signature longs, so two docs collide in a band iff their band
+    slices are equal (modulo 2^-64 hash-collision odds).  ``bands`` is
+    a Python constant, so the struct array is plain column expressions
+    (whole-stage codegen), not an interpreted ``transform`` lambda over
+    ``sequence``."""
+    sig = F.col("signature")
+    entries = F.array(
+        *[
+            F.struct(
+                F.lit(bno).alias("band_no"),
+                F.xxhash64(
+                    F.lit(bno),
+                    *[
+                        F.get(sig, bno * rows_per_band + j)
+                        for j in range(rows_per_band)
+                    ],
+                ).alias("band_hash"),
+            )
+            for bno in range(bands)
+        ]
+    )
+    return sigs.select("doc_id", F.explode(entries).alias("band")).select(
+        "doc_id", "band.band_no", "band.band_hash"
+    )
+
+
+def _sets_and_keys(
+    sketch: DataFrame, num_hashes: int, bands: int
+) -> tuple[DataFrame, DataFrame]:
+    """The two views of a sketch the joins read: the verify sets
+    ``(doc_id, sh, nsh)`` and the band keys of :func:`_band_keys`."""
+    sets = sketch.select("doc_id", "sh", F.size("sh").alias("nsh"))
+    sigs = sketch.select("doc_id", _signature(num_hashes))
+    return sets, _band_keys(sigs, bands, num_hashes // bands)
+
+
+def _band_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)`` id pairs, ``doc_a`` from ``left``,
+    ``doc_b`` from ``right``, that collide in at least one band: an
+    equi-join on the compact ``(band_no, band_hash)`` key (a plain
+    shuffle join, never a cross product).  Callers keep the pairs they
+    want with a filter on the two ids; the optimizer pushes it into
+    the join condition."""
+    a, b = left.alias("a"), right.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_no") == F.col("b.band_no"))
+            & (F.col("a.band_hash") == F.col("b.band_hash")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .distinct()
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame, left: DataFrame, right: DataFrame, num: int, den: int
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs.
+
+    ``cand`` has two id columns, matched to ``left``'s and ``right``'s
+    ``(doc_id, sh, nsh)`` sets.  Returns those two columns plus
+    ``n_inter``, ``n_union`` and the rounded ``jaccard`` for the pairs
+    with ``jaccard >= num/den``, tested in exact integers
+    (``inter*den >= union*num``, no float edge)."""
+    id_a, id_b = cand.columns
+    sets_a = left.select(
+        F.col("doc_id").alias(id_a),
+        F.col("sh").alias("sh_a"),
+        F.col("nsh").alias("n_a"),
+    )
+    sets_b = right.select(
+        F.col("doc_id").alias(id_b),
+        F.col("sh").alias("sh_b"),
+        F.col("nsh").alias("n_b"),
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    return (
+        cand.join(sets_a, id_a)
+        .join(sets_b, id_b)
+        .select(
+            id_a,
+            id_b,
+            inter.alias("n_inter"),
+            (F.col("n_a") + F.col("n_b") - inter).alias("n_union"),
+        )
+        .filter(F.col("n_inter") * F.lit(den) >= F.col("n_union") * F.lit(num))
+        .select(
+            id_a,
+            id_b,
+            "n_inter",
+            "n_union",
+            F.round(
+                F.col("n_inter").cast("double") / F.col("n_union"), 6
+            ).alias("jaccard"),
+        )
+    )
+
+
 def minhash_signatures(
     docs: DataFrame,
     num_hashes: int = 32,
@@ -287,64 +463,8 @@ def minhash_signatures(
     """MinHash signatures: min over word-n-gram shingles of affine
     permutations of xxhash64(shingle) mod P.  num_hashes independent
     permutations → E[matching fraction] = Jaccard similarity."""
-    p = F.lit(MINHASH_PRIME).cast("long")
-    hashed = F.transform(
-        token_shingles_expr(F.col(text_col), n),
-        lambda s: F.pmod(F.xxhash64(s), p),
-    )
-    # Execution shape: explode the shingle hashes and take the
-    # num_hashes affine-permutation minima as plain ``min`` aggregates.
-    # Plain mins stay inside whole-stage codegen with map-side partial
-    # aggregation — each doc's shingles come from one input row, so the
-    # aggregation COMPLETES map-side and the exchange carries one
-    # finished num_hashes-column row per doc.  The previous formulation
-    # ran num_hashes higher-order transform+array_min lambdas per doc;
-    # HOF lambdas are interpreted (no codegen) — same pathology, same
-    # fix, and same measured ~order-of-magnitude win as
-    # simhash_signatures below.  explode_outer keeps empty/null-shingle
-    # docs as a single null-hash row; min over only-null is null,
-    # matching array_min on an empty/null array.
-    tok = docs.select("doc_id", F.explode_outer(hashed).alias("_h"))
-    mins = tok.groupBy("doc_id").agg(
-        *[
-            F.min(F.pmod(F.col("_h") * F.lit(a) + F.lit(b), p)).alias(f"_m{i}")
-            for i, (a, b) in enumerate(_MINHASH_PARAMS[:num_hashes])
-        ]
-    )
-    sig = F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])
-    return mins.select("doc_id", sig.alias("signature"))
-
-
-def _band_entries_expr(bands: int, rows_per_band: int):
-    """Exploded ``(band_no, band_hash)`` structs over a ``signature``
-    array column.
-
-    ``band_hash`` is ``xxhash64(band_no, sig[i..i+r-1])`` taken directly
-    over the signature longs — two docs collide in a band iff their
-    band slices are equal (modulo the same 2^-64 hash-collision odds
-    the previous string-join formulation had).  ``bands`` is a Python
-    constant, so the struct array is built as plain column expressions
-    (whole-stage codegen) instead of a higher-order ``transform``
-    lambda over ``sequence`` (interpreted) — and hashing the longs
-    skips the per-band cast-to-string + array_join allocations.
-    """
-    sig = F.col("signature")
-    return F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(bno).alias("band_no"),
-                    F.xxhash64(
-                        F.lit(bno),
-                        *[
-                            F.get(sig, bno * rows_per_band + j)
-                            for j in range(rows_per_band)
-                        ],
-                    ).alias("band_hash"),
-                )
-                for bno in range(bands)
-            ]
-        )
+    return _minhash_sketch(docs, num_hashes, n, text_col).select(
+        "doc_id", _signature(num_hashes)
     )
 
 
@@ -364,29 +484,11 @@ def minhash_candidates(
     shuffle join on a compact key, no cross product), then the full
     signatures estimate similarity.
     """
-    rows_per_band = num_hashes // bands
-    # Materialize the signature stage once (lazy local checkpoint):
-    # four consumers (bucket sides a/b, signature sides sa/sb) would
-    # otherwise each re-run the regex-shingle scan — see
-    # minhash_verified_pairs for the full rationale.
+    # four consumers (key sides a/b, signature sides sa/sb) read the
+    # signatures; staged, the regex-shingle scan runs once
     sigs = _stage(minhash_signatures(docs, num_hashes, n, text_col))
-
-    buckets = sigs.select(
-        "doc_id", _band_entries_expr(bands, rows_per_band).alias("band")
-    ).select("doc_id", "band.band_no", "band.band_hash")
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    keys = _band_keys(sigs, bands, num_hashes // bands)
+    cand = _band_pairs(keys, keys).filter(F.col("doc_a") < F.col("doc_b"))
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a")
     )
@@ -436,110 +538,19 @@ def minhash_verified_pairs(
     Output: ``(doc_a, doc_b, n_inter, n_union, jaccard)`` sorted by
     pair id.
     """
-    rows_per_band = num_hashes // bands
-    # Single corpus pass: one regex-shingle scan + explode feeds ONE
-    # aggregate producing BOTH the num_hashes signature minima and the
-    # exact-verify hash set per doc.  All four downstream consumers
-    # (bucket sides a/b, verify sides ta/tb) read the same groupBy —
-    # their Exchange subtrees are identical, so Spark's ReuseExchange
-    # rule runs the scan + shuffle once instead of the three regex
-    # scans (signature, ta, tb) the previous formulation paid.  The
-    # aggregate still completes map-side (each doc's shingles come
-    # from one input row); downstream joins on doc_a/doc_b inherit the
-    # doc_id hash partitioning, so no re-shuffle of the arrays.
-    #
-    # Verification arrays are xxhash64'd longs, not shingle strings
-    # (same trade as _blocked_jaccard: exact up to 64-bit collisions,
-    # ~35% cheaper intersects) — and, load-bearing at scale: raw
-    # shingle text is so repetitive that AQE's compressed-size
-    # estimate can pick a broadcast whose deserialized form is GBs
-    # (observed with prefix_jaccard_join at 1M docs). Hashed longs
-    # compress ~1:1, so AQE's adaptive join choice stays trustworthy.
-    # collect_set drops duplicates/nulls: shingle arrays are already
-    # distinct and xxhash64 never returns NULL, and array_intersect /
-    # size are order-insensitive, so set semantics are exact here.
-    p = F.lit(MINHASH_PRIME).cast("long")
-    exploded = docs.select(
-        "doc_id",
-        F.explode_outer(
-            F.transform(
-                token_shingles_expr(F.col(text_col), n),
-                lambda s: F.xxhash64(s),
-            )
-        ).alias("_h"),
-    )
-    per_doc = exploded.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.pmod(F.pmod(F.col("_h"), p) * F.lit(a) + F.lit(b), p)
-            ).alias(f"_m{i}")
-            for i, (a, b) in enumerate(_MINHASH_PARAMS[:num_hashes])
-        ],
-        F.collect_set("_h").alias("sh"),
-    )
-    # Stage separation: materialize the per-doc sketch (64 sig longs +
-    # hashed shingle set — tiny next to the text) once and let all four
-    # consumers read the stored blocks.  Without it, Catalyst prunes
-    # each branch differently (buckets keep mins, verify keeps sh), the
-    # canonical subplans diverge, and with broadcast joins the probe
-    # sides stream the un-reused aggregate — four full regex-shingle
-    # scans of the corpus.  This is the same move a 100 TB pipeline
-    # makes by writing the signature stage to a table between jobs;
-    # lazy so plan-building stays action-free.
-    per_doc = _stage(per_doc)
-    sig = F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])
-    sigs = per_doc.select("doc_id", sig.alias("signature"))
-    sh = per_doc.select("doc_id", "sh", F.size("sh").alias("nsh"))
-    buckets = sigs.select(
-        "doc_id", _band_entries_expr(bands, rows_per_band).alias("band")
-    ).select("doc_id", "band.band_no", "band.band_hash")
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    ta = sh.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("nsh").alias("n_a"),
-    )
-    tb = sh.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("nsh").alias("n_b"),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            inter.alias("n_inter"),
-            (F.col("n_a") + F.col("n_b") - inter).alias("n_union"),
-        )
-        .filter(
-            F.col("n_inter") * F.lit(threshold_den)
-            >= F.col("n_union") * F.lit(threshold_num)
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_inter",
-            "n_union",
-            F.round(
-                F.col("n_inter").cast("double") / F.col("n_union"), 6
-            ).alias("jaccard"),
-        )
-    )
+    # Stage separation: the sketch (signature minima + hashed shingle
+    # set, tiny next to the text) feeds four consumers (key sides a/b,
+    # verify sides).  Without staging, Catalyst prunes each branch
+    # differently (keys keep the minima, verify keeps sh), the
+    # canonical subplans diverge, ReuseExchange cannot share them, and
+    # with broadcast joins the probe sides stream the un-reused
+    # aggregate — four full regex-shingle scans of the corpus.  This is
+    # the move a 100 TB pipeline makes by writing the signature stage
+    # to a table between jobs.
+    sketch = _stage(_minhash_sketch(docs, num_hashes, n, text_col))
+    sets, keys = _sets_and_keys(sketch, num_hashes, bands)
+    cand = _band_pairs(keys, keys).filter(F.col("doc_a") < F.col("doc_b"))
+    return _verify_jaccard(cand, sets, sets, threshold_num, threshold_den)
 
 
 def simhash_signatures(
@@ -615,9 +626,8 @@ def simhash_near_pairs(
     64 bits must agree exactly on ≥ 1 of 4 quarters — pigeonhole), so
     candidates come from 4 equi-joins, not a cross product.
     """
-    # Materialize signatures once (lazy local checkpoint): both join
-    # sides would otherwise re-run the explode+sum signature scan —
-    # see minhash_verified_pairs for the stage-sharing rationale.
+    # both join sides read the signatures; staged, the explode+sum
+    # signature scan runs once
     sigs = _stage(simhash_signatures(docs, text_col))
     # 16-bit quarters of the packed signature (shift + mask — no string
     # manipulation in the blocking key either)
@@ -704,10 +714,8 @@ def prefix_jaccard_join(
     n_tokens = F.size(
         F.regexp_extract_all(F.trim(F.col(text_col)), F.lit(r"\S+"), 0)
     )
-    # Materialized once (lazy local checkpoint): tok feeds the df agg,
-    # the prefix build, and both verify sides — without stage sharing
-    # each consumer re-runs the regex-shingle scan (see
-    # minhash_verified_pairs for the rationale).
+    # tok feeds the df agg, the prefix build and both verify sides;
+    # staged, the regex-shingle scan runs once
     tok = (
         docs.filter(n_tokens >= n)
         .select(
@@ -773,37 +781,5 @@ def prefix_jaccard_join(
         )
         .distinct()
     )
-    ta = tok.select(
-        F.col("doc_id").alias("doc1"),
-        F.col("sh").alias("sh1"),
-        F.col("nsh").alias("n1"),
-    ).hint("merge")
-    tb = tok.select(
-        F.col("doc_id").alias("doc2"),
-        F.col("sh").alias("sh2"),
-        F.col("nsh").alias("n2"),
-    ).hint("merge")
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    return (
-        cand.join(ta, "doc1")
-        .join(tb, "doc2")
-        .select(
-            "doc1",
-            "doc2",
-            inter.alias("n_inter"),
-            (F.col("n1") + F.col("n2") - inter).alias("n_union"),
-        )
-        .filter(
-            F.col("n_inter") * F.lit(tau_den)
-            >= F.col("n_union") * F.lit(tau_num)
-        )
-        .select(
-            "doc1",
-            "doc2",
-            "n_inter",
-            "n_union",
-            F.round(
-                F.col("n_inter").cast("double") / F.col("n_union"), 6
-            ).alias("jaccard"),
-        )
-    )
+    sets = tok.hint("merge")
+    return _verify_jaccard(cand, sets, sets, tau_num, tau_den)

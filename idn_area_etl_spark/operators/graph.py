@@ -47,8 +47,7 @@ def co_purchase_edges(
 
     This is THE shared subtree of the whole g_* analytics family —
     distinct (order, part) pairs → self-join on order → pair rollup.
-    Both stages are staged (lazy local checkpoint, the repo's stage
-    separation pattern):
+    Both stages are staged:
 
     - ``op`` (the distinct pair list) feeds both sides of the
       self-join; unstaged, Catalyst plans two full lineitem scans +

@@ -406,6 +406,9 @@ def grouped_running_multi(
     Result equality needs ``group_cols + order_cols`` to be a total
     order (the registry-wide unique-tiebreaker rule).
 
+    NULL values: as in the window, a group's running sum is NULL
+    before its first non-NULL value, and throughout an all-NULL group.
+
     NULL group keys: the offsets frame joins back on ``group_cols``
     with an EQUI join, so rows whose group key is NULL are DROPPED
     (a plain ``partitionBy`` window would keep them as their own
@@ -413,13 +416,18 @@ def grouped_running_multi(
     here would cost a pass over the data, and every fixed-domain
     taxonomy this primitive exists for is non-null by construction.
     """
+    # The global running sum already carries the earlier groups'
+    # totals, so telling a group's leading NULLs from a zero sum takes
+    # a running count of its non-NULL values: one more value per column.
+    counted = {
+        **values,
+        **{f"_nn_{k}": v.isNotNull().cast("long") for k, v in values.items()},
+    }
     reserved = (
         [f"{run_prefix}{k}" for k in values]
         + [f"{total_prefix}{k}" for k in values]
-        + [f"_gcum_{k}" for k in values]
-        + [f"_gprior_{k}" for k in values]
-        + [f"_gt_{k}" for k in values]
-        + [f"tot_{k}" for k in values]
+        + [f"{p}{k}" for p in ("_gcum_", "_gprior_", "_gt_", "tot_")
+           for k in counted]
     )
     clash = [c for c in reserved if c in df.columns]
     if clash:
@@ -433,10 +441,10 @@ def grouped_running_multi(
         )
     gcols = [F.col(c) for c in group_cols]
     g = global_running_multi(
-        df, gcols + list(order_cols), values, run_prefix="_gcum_"
+        df, gcols + list(order_cols), counted, run_prefix="_gcum_"
     )
     tot = df.groupBy(*group_cols).agg(
-        *[F.sum(v).alias(f"_gt_{k}") for k, v in values.items()]
+        *[F.sum(v).alias(f"_gt_{k}") for k, v in counted.items()]
     )
     wprior = Window.orderBy(*group_cols).rowsBetween(
         Window.unboundedPreceding, -1
@@ -447,18 +455,19 @@ def grouped_running_multi(
             F.coalesce(F.sum(f"_gt_{k}").over(wprior), F.lit(0)).alias(
                 f"_gprior_{k}"
             )
-            for k in values
+            for k in counted
         ],
         *[F.col(f"_gt_{k}").alias(f"{total_prefix}{k}") for k in values],
     )
     out = g.join(F.broadcast(offs), list(group_cols))
     for k in values:
+        seen = F.col(f"_gcum__nn_{k}") > F.col(f"_gprior__nn_{k}")
         out = out.withColumn(
             f"{run_prefix}{k}",
-            F.col(f"_gcum_{k}") - F.col(f"_gprior_{k}"),
+            F.when(seen, F.col(f"_gcum_{k}") - F.col(f"_gprior_{k}")),
         )
     drop = []
-    for k in values:
+    for k in counted:
         # _gcum_/_gprior_ are the internal pieces; tot_ is the GLOBAL
         # total global_running_multi emits (callers get gtot_ instead)
         drop += [f"_gcum_{k}", f"_gprior_{k}", f"tot_{k}"]

@@ -129,8 +129,7 @@ def dsir_rollup(docs: DataFrame, target_lang: str = "en") -> DataFrame:
     decimal equals multiplying it by cnt (decimal arithmetic is
     exact; the oracle applies the identical rewrite).
 
-    r8-opt: ``tok`` and ``vocab`` are staged (lazy local checkpoint,
-    the repo's established stage-separation pattern).  Without it the
+    r8-opt: ``tok`` and ``vocab`` are staged.  Without it the
     physical plan holds THREE copies of the scan → token-RLE subtree
     (the scores join probe, the vocab agg feeding ratio, and the
     vocab agg feeding totals) and TWO copies of the vocab aggregate —

@@ -87,7 +87,7 @@ def keep_best_rollup(docs: DataFrame) -> DataFrame:
         F.lit(Decimal(10**19 - 1))
         - F.col("doc_id").cast("decimal(19,0)")
     )
-    # r8-opt: staged (lazy local checkpoint) — clustered feeds both
+    # r8-opt: staged — clustered feeds both
     # the keeper aggregate and the retention rollup; unstaged, the
     # plan re-runs the docs scan + component join per consumer (the
     # pre-r8 plan held THREE copies: 3 scans + 6 doc_id exchanges).

@@ -37,12 +37,15 @@ Design notes (same stance as micro_batch.py's first-seen provinces):
   discarded middle element but not of the retained head is kept
   (no transitive closure — that is the batch CC recipe's job,
   ``operators/graph.py``).
-- **Candidate generation never leaves equi-joins**: batch buckets ⋈
-  store buckets and batch ⋈ batch on the compact (band_no, band_hash)
-  key — identical join shape, and therefore identical 100 TB
-  scaling, to the batch operator.  Verification arrays are xxhash64
-  longs (compress ~1:1, so AQE's size-based join choice stays
-  trustworthy — see operators/dedup.py).
+- **One core with the batch operator**: each micro-batch is sketched
+  once (one regex-shingle scan) by the same private pieces of
+  ``operators/dedup.py`` that ``minhash_verified_pairs`` and
+  ``curate --mode fuzzy`` use; both candidate joins, batch ⋈ store
+  and batch ⋈ batch, are its band-pairs equi-join on the compact
+  (band_no, band_hash) key, and both verify through its exact
+  hashed-shingle Jaccard.  Same join shape, same 100 TB scaling, same
+  answers: a one-batch stream quarantines exactly the ``doc_b`` side
+  of the batch operator's pairs.
 
 Reference anchor: extends the reference's chunked processing loop +
 cross-chunk ``_seen_provinces`` state (reference cli.py:143-183,
@@ -57,77 +60,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.dedup import (
-    _band_entries_expr,
-    minhash_signatures,
-    token_shingles_expr,
+    _band_pairs,
+    _minhash_sketch,
+    _sets_and_keys,
+    _verify_jaccard,
 )
-
-
-def _prep_batch(
-    batch: DataFrame,
-    num_hashes: int,
-    bands: int,
-    n: int,
-    text_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """(docs', buckets') for one micro-batch: hashed shingle sets and
-    exploded LSH band keys — the exact shapes the store persists."""
-    docs = batch.select(
-        "doc_id",
-        F.transform(
-            token_shingles_expr(F.col(text_col), n), lambda s: F.xxhash64(s)
-        ).alias("sh"),
-    ).select("doc_id", "sh", F.size("sh").alias("nsh"))
-    buckets = (
-        minhash_signatures(batch, num_hashes, n, text_col)
-        .select(
-            "doc_id",
-            _band_entries_expr(bands, num_hashes // bands).alias("band"),
-        )
-        .select("doc_id", "band.band_no", "band.band_hash")
-    )
-    return docs, buckets
-
-
-def _verified_matches(
-    cand: DataFrame,
-    new_docs: DataFrame,
-    old_docs: DataFrame,
-    threshold_num: int,
-    threshold_den: int,
-) -> DataFrame:
-    """Exact-Jaccard verification of ``(doc_id, matched_id)``
-    candidates; keeps pairs at or above tau with the jaccard value."""
-    a = new_docs.select(
-        F.col("doc_id"), F.col("sh").alias("sh_a"), F.col("nsh").alias("n_a")
-    )
-    b = old_docs.select(
-        F.col("doc_id").alias("matched_id"),
-        F.col("sh").alias("sh_b"),
-        F.col("nsh").alias("n_b"),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cand.join(a, "doc_id")
-        .join(b, "matched_id")
-        .select(
-            "doc_id",
-            "matched_id",
-            inter.alias("n_inter"),
-            (F.col("n_a") + F.col("n_b") - inter).alias("n_union"),
-        )
-        .filter(
-            F.col("n_inter") * F.lit(threshold_den)
-            >= F.col("n_union") * F.lit(threshold_num)
-        )
-        .select(
-            "doc_id",
-            "matched_id",
-            F.round(
-                F.col("n_inter").cast("double") / F.col("n_union"), 6
-            ).alias("jaccard"),
-        )
-    )
 
 
 def run_fuzzy_dedup_stream(
@@ -177,6 +114,11 @@ def run_fuzzy_dedup_stream(
     def committed() -> list[str]:
         return [p.name for p in commits_dir.iterdir()]
 
+    def committed_rows(
+        sess: SparkSession, path: str, done: list[str]
+    ) -> DataFrame:
+        return sess.read.parquet(path).where(F.col("commit").isin(done))
+
     def write_commit(df: DataFrame, path: str, commit_id: str) -> None:
         # dynamic partition overwrite: a retried epoch replaces exactly
         # its own commit partition — never appends, never touches others
@@ -194,80 +136,48 @@ def run_fuzzy_dedup_stream(
         done = committed()
         if commit_id in done:
             return  # epoch fully committed; redelivery is a no-op
-        new_docs, new_buckets = _prep_batch(
-            batch, num_hashes, bands, n, text_col
+        # one sketch per micro-batch (one regex-shingle scan); the
+        # verify sets and band keys it yields each feed several joins
+        # and a sink
+        sketch = _minhash_sketch(batch, num_hashes, n, text_col)
+        new_docs, new_buckets = _sets_and_keys(
+            sketch.localCheckpoint(eager=True), num_hashes, bands
         )
-        # each side feeds two joins below — materialize once
-        new_docs = new_docs.localCheckpoint(eager=True)
-        new_buckets = new_buckets.localCheckpoint(eager=True)
 
-        # candidates vs the retained store (sink read-back = state);
-        # only COMMITTED epochs count — a crashed attempt's partial
-        # rows must not produce self-matches on retry
-        store_buckets = None
-        store_docs = None
+        # candidates within the batch (smaller doc_id wins) ...
+        within = _band_pairs(new_buckets, new_buckets).filter(
+            F.col("doc_a") > F.col("doc_b")
+        )
+        matches = _verify_jaccard(
+            within, new_docs, new_docs, threshold_num, threshold_den
+        )
+        # ... and vs the retained store (sink read-back = state); only
+        # COMMITTED epochs count — a crashed attempt's partial rows must
+        # not produce self-matches on retry
         if done:
             try:
-                store_buckets = sess.read.parquet(buckets_dir).where(
-                    F.col("commit").isin(done)
-                )
-                store_docs = sess.read.parquet(docs_dir).where(
-                    F.col("commit").isin(done)
-                )
+                store_buckets = committed_rows(sess, buckets_dir, done)
+                store_docs = committed_rows(sess, docs_dir, done)
             except Exception:  # noqa: BLE001 - no store written yet
-                store_buckets = None
-                store_docs = None
-        pairs = []
-        if store_buckets is not None:
-            cand_store = (
-                new_buckets.alias("a")
-                .join(
-                    store_buckets.alias("b"),
-                    (F.col("a.band_no") == F.col("b.band_no"))
-                    & (F.col("a.band_hash") == F.col("b.band_hash")),
+                pass
+            else:
+                matches = matches.unionByName(
+                    _verify_jaccard(
+                        _band_pairs(new_buckets, store_buckets),
+                        new_docs, store_docs, threshold_num, threshold_den,
+                    )
                 )
-                .select(
-                    F.col("a.doc_id").alias("doc_id"),
-                    F.col("b.doc_id").alias("matched_id"),
-                )
-                .distinct()
-            )
-            pairs.append(
-                _verified_matches(
-                    cand_store, new_docs, store_docs,
-                    threshold_num, threshold_den,
-                )
-            )
-        # candidates within the batch (smaller doc_id wins)
-        cand_self = (
-            new_buckets.alias("a")
-            .join(
-                new_buckets.alias("b"),
-                (F.col("a.band_no") == F.col("b.band_no"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") > F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_id"),
-                F.col("b.doc_id").alias("matched_id"),
-            )
-            .distinct()
-        )
-        pairs.append(
-            _verified_matches(
-                cand_self, new_docs, new_docs, threshold_num, threshold_den
-            )
-        )
-        matches = pairs[0]
-        for p in pairs[1:]:
-            matches = matches.unionByName(p)
 
         # one quarantine row per duplicate: smallest verified match,
         # reporting THAT pair's jaccard (a single min-struct keeps the
         # id and the similarity from the same verified pair)
         dups = (
-            matches.groupBy("doc_id")
-            .agg(F.min(F.struct("matched_id", "jaccard")).alias("m"))
+            matches.groupBy(F.col("doc_a").alias("doc_id"))
+            .agg(
+                F.min(
+                    F.struct(F.col("doc_b").alias("matched_id"), "jaccard")
+                ).alias("m")
+            )
             .select(
                 "doc_id",
                 F.col("m.matched_id").alias("matched_id"),
@@ -295,15 +205,9 @@ def run_fuzzy_dedup_stream(
     query.awaitTermination()
 
     done = committed()
-    unique = (
-        spark.read.parquet(docs_dir).where(F.col("commit").isin(done)).count()
-    )
+    unique = committed_rows(spark, docs_dir, done).count()
     try:
-        duplicate = (
-            spark.read.parquet(dups_dir)
-            .where(F.col("commit").isin(done))
-            .count()
-        )
+        duplicate = committed_rows(spark, dups_dir, done).count()
     except Exception:  # noqa: BLE001 - no duplicates ever written
         duplicate = 0
     return {"unique": unique, "duplicate": duplicate}

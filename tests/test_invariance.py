@@ -63,6 +63,7 @@ INVARIANCE_SPECS = [
     "q_ratio_to_report",
     "q_rank_movers",
     "d_minhash_verified",      # staged sketch, banded join
+    "j_jaccard_prefix_join",   # shared verify under merge hints
     "d_dedup_clusters",        # iterative hash-min CC
     "s_dedup_keep_best",       # two hash aggs + join-back
     "p_curation_pipeline",     # flagship composition

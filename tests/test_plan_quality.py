@@ -317,6 +317,23 @@ def test_blocked_self_joins_are_equi_joins(spark, specs, name):
     assert re.search(r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", plan)
 
 
+def test_minhash_candidates_stages_signatures_only(spark, monkeypatch):
+    """minhash_candidates stages a signature-only frame: the shared
+    sketch's ``collect_set`` (the verify sets, which the estimate never
+    reads) is pruned before the stage."""
+    from idn_area_etl_spark.operators import dedup
+
+    staged = []
+    monkeypatch.setattr(dedup, "_stage", lambda df: staged.append(df) or df)
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
+    )
+    dedup.minhash_candidates(docs)
+    assert [df.columns for df in staged] == [["doc_id", "signature"]]
+    plan = staged[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "collect_set" not in plan
+
+
 # --------------------------------------------------------------------------
 # e_cosine_topk: the query side must be the broadcast build side; the
 # corpus must stream (scales to any corpus size).

@@ -568,6 +568,28 @@ def test_grouped_running_multi_matches_window(spark):
     assert got_rows == exp_rows
 
 
+def test_grouped_running_multi_null_runs_match_window(spark):
+    """A group's running sum is NULL until its first non-NULL value,
+    as in the partitioned window: on the NULL-run input, groups 0-2
+    lead with the NULLs of ids < 60 and group 3 (the middle run) is
+    all NULL."""
+    from idn_area_etl_spark.operators.ranks import grouped_running_multi
+
+    g = F.when(F.col("id").between(1000, 2499), 3).otherwise(F.col("id") % 3)
+    _assert_matches_window(
+        spark,
+        lambda df: grouped_running_multi(
+            df.withColumn("g", g), ["g"], _order(), {"v": F.col("v")}
+        ),
+        lambda df, w: df.select(
+            "id",
+            F.sum("v").over(_upto(w.partitionBy(g))).alias("grun_v"),
+            F.sum("v").over(Window.partitionBy(g)).alias("gtot_v"),
+        ),
+        ["grun_v", "gtot_v"],
+    )
+
+
 def test_discrete_quantiles_match_sorted_index(spark):
     """discrete_quantiles returns the stored element at rank ⌈q·n⌉ —
     verified against direct sorted-list indexing, including duplicate

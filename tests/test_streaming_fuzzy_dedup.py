@@ -100,11 +100,16 @@ def test_uncommitted_partial_writes_are_invisible(spark, tmp_path):
     out = tmp_path / "out"
     # simulate the crashed attempt: partial store rows for doc 7 under
     # a commit id that never reached the ledger
-    from idn_area_etl_spark.streaming.fuzzy_dedup import _prep_batch
+    from idn_area_etl_spark.operators.dedup import (
+        _minhash_sketch,
+        _sets_and_keys,
+    )
 
     (out / "_commits").mkdir(parents=True)
     partial = spark.createDataFrame([(7, BASE)], "doc_id long, text string")
-    pdocs, pbuckets = _prep_batch(partial, 64, 32, 3, "text")
+    pdocs, pbuckets = _sets_and_keys(
+        _minhash_sketch(partial, 64, 3, "text"), 64, 32
+    )
     for df, sub in ((pdocs, "docs"), (pbuckets, "buckets")):
         df.withColumn("commit", F.lit("deadbeef-0")).write.mode(
             "append"
@@ -151,3 +156,47 @@ def test_restart_safe_store_is_the_state(result):
         for r in spark.read.parquet(str(root / "out" / "duplicates")).collect()
     }
     assert dups[100] == 1 and dups[101] == 3 and dups[102] == 11
+
+
+def test_one_batch_stream_matches_batch_operator(
+    spark, tmp_path, monkeypatch
+):
+    """Batch and streaming fuzzy dedup share one MinHash/verify core:
+    the planted corpus streamed as ONE micro-batch quarantines exactly
+    the ``doc_b`` side of ``minhash_verified_pairs`` on the same docs,
+    and ``curate(mode="fuzzy")`` keeps the complement.  The micro-batch
+    builds its shingle scan once."""
+    from idn_area_etl_spark.curate import curate
+    from idn_area_etl_spark.operators import dedup
+
+    rows = [r for chunk in CHUNKS for r in chunk]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    docs.coalesce(1).write.parquet(str(in_dir / "chunk.parquet"))
+    scans = []
+    shingles = dedup.token_shingles_expr
+    monkeypatch.setattr(
+        dedup,
+        "token_shingles_expr",
+        lambda *a: scans.append(a) or shingles(*a),
+    )
+    counts = run_fuzzy_dedup_stream(
+        spark, str(in_dir / "*"), str(tmp_path / "out")
+    )
+    monkeypatch.undo()
+    assert len(scans) == 1
+    quarantined = {
+        r.doc_id
+        for r in spark.read.parquet(str(tmp_path / "out" / "duplicates"))
+        .select("doc_id")
+        .collect()
+    }
+    doc_b = {r.doc_b for r in dedup.minhash_verified_pairs(docs).collect()}
+    assert quarantined == doc_b == {2, 10, 20, 21}
+    assert counts == {
+        "unique": len(rows) - len(doc_b),
+        "duplicate": len(doc_b),
+    }
+    kept = {r.doc_id for r in curate(docs, mode="fuzzy").collect()}
+    assert kept == {doc_id for doc_id, _ in rows} - doc_b

@@ -7,11 +7,18 @@ Writes <outdir>/<query>_<suffix>.txt for each query.  Plan-only — no
 job is executed (AQE plans print isFinalPlan=false; that is fine for
 shape auditing: Exchange count, join strategy, PushedFilters,
 ReadSchema, codegen spans, Python eval nodes).
+
+Catalyst expression ids and exchange plan ids are normalized
+(``doc_id#123L`` is written as ``doc_id#L``, ``[plan_id=42]`` as
+``[plan_id=]``): they count up across the session, so without this two
+dumps of the same plan differ on almost every line.  Normalized, dumps
+from two commits can be compared with ``diff``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -35,6 +42,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"
         )
+        plan = re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "#", plan))
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
