@@ -1,248 +1,174 @@
 """Cleansing function library — reference ``utils.py`` semantics as
-**native Catalyst column expressions**.
+**Spark SQL lambdas**: ``clean_name`` (utils.py:23-38),
+``fix_wrapped_name`` (:41-65), ``normalize_words`` (:68-79) and
+``format_coordinate`` (:121-225).
 
-The reference implements these as row-at-a-time Python ``str -> str``
-functions (``/root/reference/src/idn_area_etl/utils.py``):
+Each function is written once, as the SQL text of its body over an
+input expression (``*_sql(x)``), and applied as
+``get(transform(array(col), v -> <body>), 0)`` (:func:`apply_sql`).
+The JVM parses the lambda in one call, so a step costs the same few
+driver round-trips however large its body is, and reaches Catalyst as
+one node: a later projection references it by name instead of copying
+its tree into each use.  Inside a body, a value used more than once is
+bound once with a SQL let (:func:`sql_let`).  Bodies compose as text
+(``clean_name_sql(fix_wrapped_name_sql(x))``) into one lambda; each
+uses its input once and outside its own lambdas, so composed bodies
+cannot capture each other's variables.
 
-- ``clean_name``            (utils.py:36-38, pipeline :23-33)
-- ``fix_wrapped_name``      (utils.py:41-65)
-- ``normalize_words``       (utils.py:68-79)
-- ``format_coordinate``     (utils.py:189-225, helpers :121-186)
-
-Here every one of them — including the multi-line stateful
-``fix_wrapped_name`` and the multi-match ``format_coordinate`` — is a
-pure Column expression built from ``regexp_replace`` chains and
-higher-order array functions (``aggregate`` / ``filter`` /
-``transform``).  That keeps the whole cleansing stage inside Spark's
-whole-stage codegen: no Python serde, no UDF boundary, and it scales
-linearly with executors at 100 TB.
-
-All builders are null-preserving: NULL in → NULL out (callers coalesce
-to '' where the reference guarantees str input).
+``transform``/``filter``/``exists``/``aggregate`` are
+``CodegenFallback``: the cleansing runs interpreted inside the
+generated stage, not compiled by whole-stage codegen, but still in the
+executors' JVM with no Python UDF boundary.  NULL in → NULL out.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# ---------------------------------------------------------------------------
-# Python-string semantics helpers.  Spark's trim() removes only ASCII
-# spaces; Python's str.strip() removes all whitespace (\t \n \r \f \v).
-# ---------------------------------------------------------------------------
+#: a SQL body: input expression text -> output expression text
+Body = Callable[[str], str]
+
+
+def sql_string(s: str) -> str:
+    """Spark SQL string literal for any string.  ``$`` is a unicode
+    escape so that the parser's ``${var}`` substitution never sees it."""
+    escaped = s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    for char, escape in (("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t")):
+        escaped = escaped.replace(char, escape)
+    return f"'{escaped}'"
+
+
+def sql_let(value: str, name: str, body: str) -> str:
+    """Evaluate ``value`` once and bind it to ``name`` inside ``body``."""
+    return f"get(transform(array({value}), {name} -> {body}), 0)"
+
+
+def map_sql(arr: Column, body: Body) -> Column:
+    """``transform(arr, v -> body(v))`` built from one parsed lambda."""
+    return F.call_function("transform", arr, F.expr(f"v -> {body('v')}"))
+
+
+def apply_sql(col: Column, body: Body) -> Column:
+    """``body`` applied to one column, evaluated once per row."""
+    return F.get(map_sql(F.array(col), body), 0)
+
+
+def _replace(x: str, pattern: str, replacement: str = "") -> str:
+    return f"regexp_replace({x}, {sql_string(pattern)}, {sql_string(replacement)})"
+
+
+#: Python ``str.strip()``: all whitespace, where Spark's trim() only removes ' '
+_STRIP = r"^\s+|\s+$"
+_NEWLINE, _WHITESPACE = sql_string("\n"), sql_string(r"\s+")
 
 
 def py_strip(col: Column) -> Column:
     """``str.strip()`` semantics as a column expression."""
-    return F.regexp_replace(col, r"^\s+|\s+$", "")
+    return F.regexp_replace(col, _STRIP, "")
 
 
-def _py_rstrip(col: Column) -> Column:
-    """``str.rstrip()`` semantics."""
-    return F.regexp_replace(col, r"\s+$", "")
+def clean_name_sql(x: str) -> str:
+    """strip → drop ``\\r`` and tab→space → kill leading ``^\\d+\\n`` →
+    kill trailing ``\\n\\d+$`` → collapse ``\\n+`` → kill the leading
+    row-number prefix → collapse 2+ whitespace → strip, in the order of
+    utils.py:24-30 (the row-number rule must run after newlines go)."""
+    x = f"translate({_replace(x, _STRIP)}, {sql_string(chr(9) + chr(13))}, ' ')"
+    for pattern, replacement in [
+        (r"^\d+\n", ""), (r"\n\d+$", ""), (r"\n+", " "), (r"^\d+\s+", ""), (r"\s{2,}", " "),
+    ]:
+        x = _replace(x, pattern, replacement)
+    return _replace(x, _STRIP)
 
 
-# ---------------------------------------------------------------------------
-# clean_name — order-sensitive regex pipeline (utils.py:23-38).
-# ---------------------------------------------------------------------------
+def fix_wrapped_name_sql(x: str, max_line_length: int = 16) -> str:
+    """The reference's walk over the rstripped non-blank lines as an
+    ``aggregate`` fold whose accumulator is the array of accepted lines.
+    A line merges into the previous accepted line ``p`` iff ``p`` has
+    ≥ ``max_line_length`` chars and doesn't end in space/'-', and the
+    line has ≤ 3 chars and starts lowercase.  ``p`` is NULL at first."""
+    rstrip, lowercase = _replace("l", r"\s+$"), sql_string(r"^\p{Ll}$")
+    lines = f"filter(transform(split({x}, {_NEWLINE}), l -> {rstrip}), l -> l != '')"
+    merge = (
+        f"length(p) >= {max_line_length} AND length(line) <= 3 AND right(p, 1)"
+        f" NOT IN (' ', '-') AND left(line, 1) RLIKE {lowercase}"
+    )
+    step = sql_let("get(acc, size(acc) - 1)", "p", (
+        f"CASE WHEN {merge} THEN concat(slice(acc, 1, size(acc) - 1),"
+        " array(concat(p, line))) ELSE concat(acc, array(line)) END"
+    ))
+    return (
+        f"aggregate({lines}, cast(array() AS array<string>), (acc, line) -> {step},"
+        f" acc -> array_join(acc, {_NEWLINE}))"
+    )
+
+
+def normalize_words_sql(x: str) -> str:
+    """"K o d e" -> "Kode": if every whitespace-separated token is one
+    char (or '/', '-'), join the tokens; else the stripped input."""
+    return sql_let(_replace(x, _STRIP), "s", sql_let(
+        f"filter(split(s, {_WHITESPACE}), w -> w != '')", "t",
+        "CASE WHEN exists(t, w -> length(w) > 1 AND w NOT IN ('/', '-'))"
+        " THEN s ELSE array_join(t, '') END",
+    ))
+
+
+# DMS block with an optional leading OR trailing hemisphere (utils.py:177-186).
+# Groups: 1 leading hemi, 2 deg, 3 min, 4 whole sec, 5 fraction, 6 trailing hemi.
+_COORD_PATTERN = (
+    r"(?:([NSEW])\s*)?(\d{1,3})\s*°\s*(\d{1,2})\s*'\s*"
+    r"(\d{1,2})(?:\.(\d+))?\s*\"?\s*([NSEW])?"
+)
+# Indonesian hemisphere words, case-insensitive and word-bounded
+# (utils.py:121-134).  Each target letter is a word mapping to itself, so
+# one pass per letter equals the reference's one pass per word.
+_HEMISPHERES = [("N", "LU|U|N"), ("S", "LS|S"), ("E", "BT|T|E"), ("W", "BB|B|W")]
+
+
+def format_coordinate_sql(x: str) -> str:
+    """Normalize (smart quotes → ASCII, duplicate quotes collapsed,
+    hemisphere words → N/S/E/W, whitespace → one space, stripped), scan
+    the DMS matches once, parse each once and render it as
+    ``DD°MM'SS.ss" H`` (leading hemisphere wins, utils.py:208), then
+    emit the first N/S and first E/W match; if either is missing, the
+    normalized string (so 'U T' -> 'N E')."""
+    ascii_quotes = sql_string("'''\"\"\"")
+    s = _replace(f"translate({x}, '’‘′“”″', {ascii_quotes})", r"([\"'])\1+", "$1")
+    for letter, words in _HEMISPHERES:
+        s = _replace(s, rf"(?i)\b(?:{words})\b", letter)
+    s = "trim({})".format(_replace(s, r"\s+", " "))  # only ' ' is left to strip
+    parse = f"split({_replace('m', _COORD_PATTERN, '$1$6,$2,$3,$4,$5')}, ',')"
+    quote, seconds_mark = sql_string("'"), sql_string('" ')
+    render = (
+        f"concat(g[1], '°', g[2], {quote}, g[3], '.',"
+        f" left(concat(g[4], '00'), 2), {seconds_mark}, left(g[0], 1))"
+    )
+    matches = f"regexp_extract_all(s, {sql_string(_COORD_PATTERN)}, 0)"
+    coords = f"transform(transform({matches}, m -> {parse}), g -> {render})"
+    lat, lon = (
+        f"get(filter(cs, c -> right(c, 1) IN {hemis}), 0)"
+        for hemis in ("('N', 'S')", "('E', 'W')")
+    )
+    return sql_let(s, "s", sql_let(coords, "cs", f"coalesce(concat({lat}, ' ', {lon}), s)"))
 
 
 def clean_name(col: Column) -> Column:
-    """Reference ``clean_name`` (utils.py:36-38).
-
-    strip → drop ``\\r`` → tab→space → kill leading ``^\\d+\\n`` → kill
-    trailing ``\\n\\d+$`` → collapse ``\\n+``→space → kill leading
-    row-number prefix ``^\\d+\\s+`` → collapse 2+ whitespace → final
-    strip.  The order matches utils.py:24-30 exactly (it matters: the
-    row-number-prefix rule must run *after* newlines collapse).
-    """
-    c = py_strip(col)
-    c = F.replace(c, F.lit("\r"), F.lit(""))
-    c = F.replace(c, F.lit("\t"), F.lit(" "))
-    c = F.regexp_replace(c, r"^\d+\n", "")
-    c = F.regexp_replace(c, r"\n\d+$", "")
-    c = F.regexp_replace(c, r"\n+", " ")
-    c = F.regexp_replace(c, r"^\d+\s+", "")
-    c = F.regexp_replace(c, r"\s{2,}", " ")
-    return py_strip(c)
-
-
-# ---------------------------------------------------------------------------
-# fix_wrapped_name — repair PDF line-wrap artifacts (utils.py:41-65).
-#
-# The reference walks lines carrying the previously-accepted line as
-# state.  That fold is expressed natively with aggregate() over the
-# split lines: the accumulator is the array of accepted lines; a short
-# lowercase fragment merges into the tail when the tail is long enough
-# and doesn't end in '-'.
-# ---------------------------------------------------------------------------
+    """Reference ``clean_name`` (utils.py:36-38)."""
+    return apply_sql(col, clean_name_sql)
 
 
 def fix_wrapped_name(col: Column, max_line_length: int = 16) -> Column:
-    """Reference ``fix_wrapped_name`` (utils.py:41-65) as a native fold.
-
-    Merge a trailing fragment line into the previous line iff: previous
-    ≥ ``max_line_length`` chars, fragment ≤ 3 chars, fragment starts
-    with a lowercase letter, and previous doesn't end in space/'-'.
-    Blank lines are dropped; legitimate multi-word breaks are kept.
-    """
-    lines = F.filter(
-        F.transform(F.split(col, "\n"), _py_rstrip),
-        lambda l: l != F.lit(""),
-    )
-
-    def step(acc: Column, x: Column) -> Column:
-        prev = F.element_at(acc, -1)
-        appended = F.concat(acc, F.array(x))
-        merged = F.concat(
-            F.slice(acc, F.lit(1), F.size(acc) - F.lit(1)),
-            F.array(F.concat(prev, x)),
-        )
-        mergeable = (
-            (F.length(prev) >= F.lit(max_line_length))
-            & (F.length(x) <= F.lit(3))
-            & ~F.substring(prev, -1, 1).isin(" ", "-")
-            & F.substring(x, 1, 1).rlike(r"^\p{Ll}$")
-        )
-        # Nested CASE keeps element_at(acc, -1) unevaluated on empty
-        # accumulators (ANSI mode throws on out-of-bounds element_at).
-        return F.when(F.size(acc) == 0, appended).otherwise(
-            F.when(mergeable, merged).otherwise(appended)
-        )
-
-    return F.aggregate(
-        lines,
-        F.array().cast("array<string>"),
-        step,
-        lambda acc: F.array_join(acc, "\n"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# normalize_words — de-space headers parsed as single chars
-# (utils.py:68-79): "K o d e" -> "Kode"; no-op if any multi-char token.
-# ---------------------------------------------------------------------------
+    """Reference ``fix_wrapped_name`` (utils.py:41-65)."""
+    return apply_sql(col, lambda x: fix_wrapped_name_sql(x, max_line_length))
 
 
 def normalize_words(col: Column) -> Column:
-    """Reference ``normalize_words`` (utils.py:68-79).
-
-    If every whitespace-separated token is a single char (or '/', '-'),
-    join tokens with no separator; otherwise return the stripped input.
-    """
-    stripped = py_strip(col)
-    tokens = F.filter(F.split(stripped, r"\s+"), lambda t: t != F.lit(""))
-    has_real_word = F.exists(
-        tokens, lambda t: (F.length(t) > 1) & ~t.isin("/", "-")
-    )
-    return F.when(has_real_word, stripped).otherwise(F.array_join(tokens, ""))
-
-
-# ---------------------------------------------------------------------------
-# format_coordinate — canonicalize DMS coordinates
-# (utils.py:189-225; helpers :121-186).
-#
-# Output: 'DD°MM'SS.ss" N DDD°MM'SS.ss" E' (lat first), else the
-# normalized input string as fallback.
-# ---------------------------------------------------------------------------
-
-# One flexible pattern (mirrors utils.py:177-186): optional leading OR
-# trailing hemisphere around a DMS block.  Group numbers:
-#   1=leading hemi, 2=deg, 3=min, 4=sec, 5=trailing hemi
-_COORD_PATTERN = (
-    r"(?:([NSEW])\s*)?"
-    r"(\d{1,3})\s*°\s*"
-    r"(\d{1,2})\s*'\s*"
-    r"(\d{1,2}(?:\.\d+)?)\s*\"?\s*"
-    r"([NSEW])?"
-)
-
-# Indonesian hemisphere tokens → N/S/E/W (utils.py:121-134).  Two-letter
-# tokens must be replaced before single letters; the final four entries
-# just upper-case bare n/s/e/w.
-_HEMI_REPLACEMENTS = [
-    ("LU", "N"),
-    ("LS", "S"),
-    ("BT", "E"),
-    ("BB", "W"),
-    ("U", "N"),
-    ("T", "E"),
-    ("B", "W"),
-    ("N", "N"),
-    ("S", "S"),
-    ("E", "E"),
-    ("W", "W"),
-]
-
-_QUOTE_REPLACEMENTS = [
-    ("’", "'"),
-    ("‘", "'"),
-    ("′", "'"),
-    ("“", '"'),
-    ("”", '"'),
-    ("″", '"'),
-]
-
-
-def _normalize_quotes(c: Column) -> Column:
-    """Smart quotes/primes → ASCII; collapse duplicated quotes
-    (utils.py:137-150)."""
-    for a, b in _QUOTE_REPLACEMENTS:
-        c = F.replace(c, F.lit(a), F.lit(b))
-    c = F.regexp_replace(c, r'"{2,}', '"')
-    c = F.regexp_replace(c, r"'{2,}", "'")
-    return c
-
-
-def _map_hemispheres(c: Column) -> Column:
-    """Word-bounded, case-insensitive hemisphere token mapping
-    (utils.py:121-134, 158-163)."""
-    for tok, rep in _HEMI_REPLACEMENTS:
-        c = F.regexp_replace(c, r"(?i)\b" + tok + r"\b", rep)
-    return c
-
-
-def _fmt_seconds(sec: Column) -> Column:
-    """Pad/truncate seconds to exactly 2 decimals (utils.py:166-173):
-    '3' -> '3.00', '3.4' -> '3.40', '3.444' -> '3.44'."""
-    whole = F.regexp_extract(sec, r"^(\d+)", 1)
-    frac = F.regexp_extract(sec, r"\.(\d+)$", 1)
-    return F.concat(whole, F.lit("."), F.substring(F.concat(frac, F.lit("00")), 1, 2))
-
-
-def _match_hemi(m: Column) -> Column:
-    """Leading hemisphere wins over trailing (utils.py:208)."""
-    return F.coalesce(
-        F.nullif(F.regexp_extract(m, _COORD_PATTERN, 1), F.lit("")),
-        F.nullif(F.regexp_extract(m, _COORD_PATTERN, 5), F.lit("")),
-    )
-
-
-def _canonical(m: Column) -> Column:
-    """'DD°MM'SS.ss" H' for one regex match string."""
-    deg = F.regexp_extract(m, _COORD_PATTERN, 2)
-    minutes = F.regexp_extract(m, _COORD_PATTERN, 3)
-    secs = _fmt_seconds(F.regexp_extract(m, _COORD_PATTERN, 4))
-    return F.concat(
-        deg, F.lit("°"), minutes, F.lit("'"), secs, F.lit('" '), _match_hemi(m)
-    )
+    """Reference ``normalize_words`` (utils.py:68-79)."""
+    return apply_sql(col, normalize_words_sql)
 
 
 def format_coordinate(col: Column) -> Column:
-    """Reference ``format_coordinate`` (utils.py:189-225), fully native.
-
-    Normalize quotes/hemispheres/spaces, scan all DMS matches, pick the
-    first latitude (N/S) and first longitude (E/W), emit
-    ``lat lon`` canonical form; if either is missing, fall back to the
-    normalized string (which preserves e.g. 'U T' -> 'N E').
-    """
-    s = py_strip(
-        F.regexp_replace(_map_hemispheres(_normalize_quotes(col)), r"\s+", " ")
-    )
-    matches = F.regexp_extract_all(s, F.lit(_COORD_PATTERN), 0)
-    lat_m = F.get(F.filter(matches, lambda m: _match_hemi(m).isin("N", "S")), 0)
-    lon_m = F.get(F.filter(matches, lambda m: _match_hemi(m).isin("E", "W")), 0)
-    return F.when(
-        lat_m.isNotNull() & lon_m.isNotNull(),
-        F.concat(_canonical(lat_m), F.lit(" "), _canonical(lon_m)),
-    ).otherwise(s)
+    """Reference ``format_coordinate`` (utils.py:189-225)."""
+    return apply_sql(col, format_coordinate_sql)

@@ -17,9 +17,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.functions.cleaning import (
-    clean_name,
-    fix_wrapped_name,
-    normalize_words,
+    apply_sql,
+    clean_name_sql,
+    fix_wrapped_name_sql,
+    normalize_words_sql,
     py_strip,
 )
 from idn_area_etl_spark.operators.ordering import first_seen
@@ -54,7 +55,9 @@ def code_name_pairs(routed: DataFrame) -> DataFrame:
       columns — 6-col tables use [1,3], wider use [1,4,5,6]
       (extractors.py:134-140) — cleaned through
       ``normalize_words(clean_name(fix_wrapped_name(s)))``;
-    - keep rows with both code and name non-empty.
+    - keep rows with both code and name non-empty.  The test runs on
+      a one-element array inside ``inline``, so the optimizer cannot
+      push it (and the cleaned name with it) into the routing join.
     """
     area = routed.filter(
         (F.col("extractor") == "area") & (F.col("row_no") >= 2)
@@ -66,18 +69,16 @@ def code_name_pairs(routed: DataFrame) -> DataFrame:
     raw_name = F.when(
         F.col("ncols") == 6, F.coalesce(cand(1), cand(3), F.lit(""))
     ).otherwise(F.coalesce(cand(1), cand(4), cand(5), cand(6), F.lit("")))
-
-    name = F.when(
-        raw_name == "", F.lit("")
-    ).otherwise(normalize_words(clean_name(fix_wrapped_name(raw_name))))
-
-    return (
-        area.select(
-            *_LINEAGE,
-            _cell(1).alias("code"),
-            name.alias("name"),
-        )
-        .filter((F.col("code") != "") & (F.col("name") != ""))
+    name = apply_sql(
+        raw_name,
+        lambda x: normalize_words_sql(clean_name_sql(fix_wrapped_name_sql(x))),
+    )
+    pair = F.struct(_cell(1).alias("code"), name.alias("name"))
+    return area.select(
+        *_LINEAGE,
+        F.inline(F.filter(
+            F.array(pair), lambda p: (p["code"] != "") & (p["name"] != "")
+        )),
     )
 
 

@@ -18,9 +18,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.functions.cleaning import (
-    clean_name,
-    fix_wrapped_name,
+    clean_name_sql,
+    fix_wrapped_name_sql,
     format_coordinate,
+    map_sql,
     py_strip,
 )
 
@@ -61,37 +62,41 @@ def extract_islands(routed: DataFrame) -> DataFrame:
     rows = routed.filter(
         (F.col("extractor") == "island") & (F.col("row_no") > F.col("header_idx"))
     )
+    # P8 rescue cell (extractors.py:279-284): right of the code column
+    cells = rows.select(
+        *_LINEAGE,
+        _val("idx_code").alias("code"),
+        _val("idx_name").alias("name_cell"),
+        _val(F.col("idx_code") + 1).alias("rescue_cell"),
+        _val("idx_coord").alias("coord_cell"),
+        F.upper(_val("idx_status")).alias("status"),
+        F.upper(_val("idx_info")).alias("info"),
+    ).filter(F.col("code").rlike(ISLAND_CODE_PATTERN))
 
-    code = _val("idx_code")
-    base_name = clean_name(fix_wrapped_name(_val("idx_name")))
-    # P8 rescue (extractors.py:279-284): name cell equals the code →
-    # take the cleaned cell right of the code column instead.
-    rescue = clean_name(fix_wrapped_name(_val(F.col("idx_code") + 1)))
+    names = cells.select(
+        *_LINEAGE,
+        "code",
+        map_sql(
+            F.array("name_cell", "rescue_cell"),
+            lambda x: clean_name_sql(fix_wrapped_name_sql(x)),
+        ).alias("names"),
+        format_coordinate(F.col("coord_cell")).alias("coordinate"),
+        "status",
+        "info",
+    )
+    # P8: the cleaned name equals the code → take the cleaned rescue cell
+    code, base_name, rescue = F.col("code"), F.col("names")[0], F.col("names")[1]
     name = F.when(
         (base_name == code) & (rescue != "") & (rescue != code), rescue
     ).otherwise(base_name)
 
-    status = F.upper(_val("idx_status"))
-    info = F.upper(_val("idx_info"))
-
-    return (
-        rows.select(
-            *_LINEAGE,
-            code.alias("code"),
-            name.alias("name"),
-            format_coordinate(_val("idx_coord")).alias("coordinate"),
-            status.alias("status"),
-            info.alias("info"),
-        )
-        .filter(F.col("code").rlike(ISLAND_CODE_PATTERN))
-        .select(
-            *_LINEAGE,
-            "code",
-            island_parent_code(F.col("code")).alias("regency_code"),
-            "coordinate",
-            # P10 (extractors.py:290-291)
-            F.col("status").rlike(r"^\s*BP\b").cast("int").alias("is_populated"),
-            F.col("info").contains("PPKT").cast("int").alias("is_outermost_small"),
-            "name",
-        )
+    return names.select(
+        *_LINEAGE,
+        "code",
+        island_parent_code(code).alias("regency_code"),
+        "coordinate",
+        # P10 (extractors.py:290-291)
+        F.col("status").rlike(r"^\s*BP\b").cast("int").alias("is_populated"),
+        F.col("info").contains("PPKT").cast("int").alias("is_outermost_small"),
+        name.alias("name"),
     )

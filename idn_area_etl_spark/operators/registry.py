@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.functions.cleaning import normalize_words
+from idn_area_etl_spark.functions.cleaning import map_sql, normalize_words_sql
 
 #: classifier precedence, mirroring the reference's extractor list order
 EXTRACTOR_PRECEDENCE = ["area", "island"]
@@ -34,10 +34,10 @@ CLASSIFY_SCAN_ROWS = 3
 HEADER_SCAN_ROWS = 4
 
 
-def _norm_header(cell: Column) -> Column:
+def _norm_headers(cells: Column) -> Column:
     """Header normalization shared by both classifiers
     (extractors.py:117, 188-190): de-space single-char tokens, lower."""
-    return F.lower(normalize_words(cell))
+    return map_sql(cells, lambda x: f"lower({normalize_words_sql(x)})")
 
 
 def _is_island_header(headers: Column) -> Column:
@@ -79,7 +79,7 @@ def classify_tables(raw: DataFrame) -> DataFrame:
         rows,
         lambda r: F.struct(
             r["row_no"].alias("row_no"),
-            F.transform(r["cells"], _norm_header).alias("headers"),
+            _norm_headers(r["cells"]).alias("headers"),
         ),
     )
     g = grouped.select(

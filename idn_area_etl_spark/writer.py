@@ -36,6 +36,31 @@ def _as_csv_cell(column: str) -> Column:
     return F.coalesce(F.col(column).cast("string"), F.lit(""))
 
 
+def sink_query(
+    sinks: list[tuple[DataFrame, list[str]]],
+    order: list[str] | None = None,
+) -> DataFrame:
+    """The one query behind the exact CSV sink: ``(_sink, _values)``
+    rows of every ``(df, headers)`` sink, ``_sink`` being its index;
+    with a non-empty ``order``, in one partition sorted by sink then
+    ``order``."""
+    order = ORDER_COLS if order is None else order
+    rows = reduce(
+        DataFrame.union,
+        [
+            df.select(
+                F.lit(i).alias("_sink"),
+                *order,
+                F.array(*[_as_csv_cell(h) for h in headers]).alias("_values"),
+            )
+            for i, (df, headers) in enumerate(sinks)
+        ],
+    )
+    if order:
+        rows = rows.repartition(1).sortWithinPartitions("_sink", *order)
+    return rows.select("_sink", "_values")
+
+
 def _write_csvs_exact(
     sinks: list[tuple[DataFrame, Path | str, list[str]]],
     order: list[str] | None = None,
@@ -49,20 +74,7 @@ def _write_csvs_exact(
     as asserted by the reference's tests
     (tests/test_extractors.py:735-744).
     """
-    order = ORDER_COLS if order is None else order
-    rows = reduce(
-        DataFrame.union,
-        [
-            df.select(
-                F.lit(i).alias("_sink"),
-                *order,
-                F.array(*[_as_csv_cell(h) for h in headers]).alias("_values"),
-            )
-            for i, (df, _path, headers) in enumerate(sinks)
-        ],
-    )
-    if order:
-        rows = rows.repartition(1).sortWithinPartitions("_sink", *order)
+    rows = sink_query([(df, headers) for df, _path, headers in sinks], order)
     counts = [0] * len(sinks)
     with ExitStack() as stack:
         writers = []
@@ -72,7 +84,7 @@ def _write_csvs_exact(
             )
             writers.append(csv.writer(fh))
             writers[-1].writerow(headers)
-        for sink, values in rows.select("_sink", "_values").toLocalIterator():
+        for sink, values in rows.toLocalIterator():
             writers[sink].writerow(values)
             counts[sink] += 1
     return counts
@@ -88,6 +100,20 @@ def write_entity_csv_exact(
     return _write_csvs_exact([(df, path, headers)], order)[0]
 
 
+def entity_sinks(
+    entities: dict[str, DataFrame], config
+) -> dict[str, tuple[DataFrame, list[str]]]:
+    """Each entity frame with its output headers, its parent column
+    renamed per level (province_code / regency_code / district_code)."""
+    sinks = {}
+    for area, df in entities.items():
+        headers = config.data[area].output_headers
+        if "parent_code" in df.columns:
+            df = df.withColumnRenamed("parent_code", headers[1])
+        sinks[area] = (df, headers)
+    return sinks
+
+
 def write_all_entities(
     entities: dict[str, DataFrame],
     destination: Path | str,
@@ -98,13 +124,8 @@ def write_all_entities(
     one extraction pass.  Returns per-entity row counts."""
     destination = Path(destination)
     destination.mkdir(parents=True, exist_ok=True)
-    sinks = []
-    for area, df in entities.items():
-        dc = config.data[area]
-        if "parent_code" in df.columns:
-            # entity outputs name their parent column per level
-            # (province_code / regency_code / district_code)
-            df = df.withColumnRenamed("parent_code", dc.output_headers[1])
-        target = destination / f"{output_name}.{dc.filename_suffix}.csv"
-        sinks.append((df, target, dc.output_headers))
+    sinks = [
+        (df, destination / f"{output_name}.{config.data[area].filename_suffix}.csv", headers)
+        for area, (df, headers) in entity_sinks(entities, config).items()
+    ]
     return dict(zip(entities, _write_csvs_exact(sinks)))

@@ -4,12 +4,18 @@ report, and statistical identities."""
 from __future__ import annotations
 
 import math
+import shutil
 
+import duckdb
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.plans import all_specs, wave20
 from idn_area_etl_spark.sources.tables import load_table
+from tools.check_oracle import canonical
 
 
 def test_all_wave20_registered():
@@ -51,6 +57,37 @@ def test_quality_checks_catch_planted_violations(spark):
         F.sum((F.col("o_totalprice") <= 0).cast("long")).alias("price"),
     ).collect()[0]
     assert (row.dup, row.status, row.price) == (1, 1, 1)
+
+
+def test_quality_report_duplicate_keys_match_oracle(spark, sf_dir, tmp_path):
+    """sf0.001 with one customer row and one order row duplicated: the
+    RI joins must not let the duplicated key inflate the counts of the
+    referencing tables, nor ``orders_pk_unique`` itself.  The oracle's
+    subqueries are immune to the duplicates.  No NULL keys are planted:
+    a NULL foreign key counts as a violation in the Spark report, while
+    the oracle's ``NOT IN`` yields NULL for it and does not count it."""
+    orders = pq.read_table(f"{sf_dir}/orders.parquet")
+    customer = pq.read_table(f"{sf_dir}/customer.parquet")
+    # the first order (it has line items) and the customer who placed it
+    custkey = orders["o_custkey"][0].as_py()
+    placed_by = customer.filter(pc.equal(customer["c_custkey"], custkey))
+    assert placed_by.num_rows == 1
+    pq.write_table(pa.concat_tables([orders, orders.slice(0, 1)]), tmp_path / "orders.parquet")
+    pq.write_table(pa.concat_tables([customer, placed_by]), tmp_path / "customer.parquet")
+    shutil.copy(f"{sf_dir}/lineitem.parquet", tmp_path / "lineitem.parquet")
+
+    sdf = wave20.q_data_quality_report(spark, str(tmp_path))
+    got = canonical([tuple(r) for r in sdf.collect()], sdf.columns)
+    con = duckdb.connect()
+    try:
+        for table in ("customer", "orders", "lineitem"):
+            con.sql(f"CREATE VIEW {table} AS SELECT * FROM '{tmp_path}/{table}.parquet'")
+        rel = con.sql(wave20.Q_DQ_SQL)
+        want = canonical(rel.fetchall(), rel.columns)
+    finally:
+        con.close()
+    assert got == want
+    assert dict((r.check_name, r.n_violations) for r in sdf.collect())["orders_pk_unique"] == 1
 
 
 def test_benford_shares_sum_to_one(spark, sf_dir):
