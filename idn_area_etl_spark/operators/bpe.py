@@ -10,10 +10,10 @@ merge the most frequent adjacent symbol pair.  Spark-first shape:
   vocabulary, which is orders of magnitude smaller than the corpus
   (Heaps' law), so 100 TB of text trains against a few million rows.
 - Each round is: row-local adjacent-pair explode (weighted by word
-  freq) → one pair-keyed count aggregation → a deterministic top-1
-  (count desc, then lexicographic pair) → an O(1) driver collect of
-  THE winning pair (the k-means-centroid precedent) → a row-local
-  fold that merges leftmost-first non-overlapping occurrences.
+  freq) → one pair-keyed count aggregation, checkpointed with THE
+  winning pair (count desc, then lexicographic pair) observed on it —
+  no separate collect → a row-local fold that merges leftmost-first
+  non-overlapping occurrences, checkpointed at the next round's start.
 - The merge fold is a higher-order ``aggregate`` with
   (out, prev) state — pure codegen, no UDF; determinism does not
   depend on partitioning because pair counts are exact integers and
@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from idn_area_etl_spark.operators.stage import _release, _round
 from idn_area_etl_spark.operators.text import tokens_expr
 
 #: end-of-word marker (standard BPE — keeps merges word-internal).
@@ -95,38 +96,23 @@ def train_bpe(
 ) -> list[dict]:
     """Run n_merges BPE rounds; returns the merge table
     [{round, left, right, merged, pair_count}, ...]."""
-    vocab = vocab_from_docs(docs, text_col).persist()
-    merges: list[dict] = []
-    current = vocab
-    try:
-        for rnd in range(1, n_merges + 1):
-            top = (
-                _pair_counts(current)
-                .orderBy(F.desc("pair_count"), "left", "right")
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break
-            row = top[0]
-            merges.append(
-                {
-                    "round": rnd,
-                    "left": row["left"],
-                    "right": row["right"],
-                    "merged": row["left"] + row["right"],
-                    "pair_count": row["pair_count"],
-                }
-            )
-            current = current.select(
-                "word",
-                "freq",
-                merge_expr(
-                    F.col("symbols"), row["left"], row["right"]
-                ).alias("symbols"),
-            ).localCheckpoint()  # truncate the per-round fold lineage
-    finally:
-        vocab.unpersist()
+    # the most frequent pair, ties → lexicographic (left, right)
+    best = F.min_by(
+        F.struct("left", "right", "pair_count"),
+        F.struct(-F.col("pair_count"), "left", "right"),
+    ).alias("top")
+    current, _ = _round(vocab_from_docs(docs, text_col))
+    counts, merges = None, []
+    for rnd in range(1, n_merges + 1):
+        if merges:  # fold the previous round's winner in
+            symbols = merge_expr(F.col("symbols"), top["left"], top["right"]).alias("symbols")
+            current, _ = _round(current.select("word", "freq", symbols), prev=current)
+        counts, m = _round(_pair_counts(current), [best], prev=counts)
+        top = m["top"]
+        if top is None:
+            break
+        merges.append({"round": rnd, "merged": top["left"] + top["right"], **top.asDict()})
+    _release(current, counts)
     return merges
 
 

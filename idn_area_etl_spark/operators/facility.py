@@ -5,9 +5,10 @@ submodular objective for picking a small DIVERSE-but-representative
 subset (coreset distillation, prompt selection, eval-set curation).
 The greedy maximizer enjoys the classic 1-1/e guarantee.
 
-Scale shape: k driver-steps; each step is ONE distributed pass —
-join candidates to the current coverage vector, compute marginal
-gain = sum of positive similarity improvements, take the argmax.
+Scale shape: k driver-steps; each step joins candidates to the
+current coverage vector, computes marginal gain = sum of positive
+similarity improvements and observes the argmax on the gains'
+checkpoint, then rebuilds the coverage vector with the objective.
 The selected set lives in literals (k is small by definition), so no
 state accumulates on executors; cost is O(k) scans of the candidate-
 pair similarity table, which itself is computed once and staged.
@@ -28,7 +29,7 @@ from idn_area_etl_spark.operators.similarity import (
     dot_expr,
     norm_expr,
 )
-from idn_area_etl_spark.operators.stage import _stage, staged_scope
+from idn_area_etl_spark.operators.stage import _release, _round, _stage, staged_scope
 
 
 def facility_location_select(
@@ -88,17 +89,24 @@ def facility_location_select(
 
 def _greedy_steps(sims: DataFrame, k: int) -> list[tuple[int, int, float]]:
     """(step, selected id, objective) for each greedy step over the
-    ``(i, j, sim)`` similarity table."""
+    ``(i, j, sim)`` similarity table: the choice is observed on the
+    gains' checkpoint, the objective on the coverage vector's."""
+    # ORDER BY gain DESC, j: NaN first, NULL last, ties → smaller id
+    best = F.max_by("j", F.struct("gain", -F.col("j"))).alias("j")
+    objective = (
+        F.sum(F.col("cov").cast("decimal(38,18)")).cast("double").alias("obj")
+    )
     selected: list[int] = []
     rows = []
+    gain = cover = None
     for step in range(1, k + 1):
-        if selected:
-            cover = (
-                sims.filter(F.col("j").isin(selected))
-                .groupBy("i")
-                .agg(F.max("sim").alias("cov"))
+        if cover is None:
+            gains = sims.groupBy("j").agg(
+                F.sum(F.col("sim").cast("decimal(38,18)"))
+                .cast("double").alias("gain")
             )
-            gain = (
+        else:
+            gains = (
                 sims.join(cover, "i")
                 .filter(~F.col("j").isin(selected))
                 .groupBy("j")
@@ -113,24 +121,17 @@ def _greedy_steps(sims: DataFrame, k: int) -> list[tuple[int, int, float]]:
                     ).cast("double").alias("gain")
                 )
             )
-        else:
-            gain = sims.groupBy("j").agg(
-                F.sum(F.col("sim").cast("decimal(38,18)"))
-                .cast("double").alias("gain")
-            )
-        best = gain.orderBy(F.desc("gain"), "j").first()
-        if best is None:  # k exceeds the number of vectors
+        gain, m = _round(gains, [best], prev=gain)
+        if m["j"] is None:  # k exceeds the number of vectors
             break
-        selected.append(best["j"])
-        obj = (
+        selected.append(m["j"])
+        cover, m = _round(
             sims.filter(F.col("j").isin(selected))
             .groupBy("i")
-            .agg(F.max("sim").alias("cov"))
-            .agg(
-                F.sum(F.col("cov").cast("decimal(38,18)"))
-                .cast("double").alias("obj")
-            )
-            .first()["obj"]
+            .agg(F.max("sim").alias("cov")),
+            [objective],
+            prev=cover,
         )
-        rows.append((step, int(best["j"]), round(float(obj), 6)))
+        rows.append((step, int(selected[-1]), round(float(m["obj"]), 6)))
+    _release(gain, cover)
     return rows

@@ -14,9 +14,10 @@ SoCC'14) in pure DataFrame ops:
 - then pointer jumping ``label(v) ← label(label(v))`` — doubles the
   propagation distance per round, so convergence is O(log diameter)
   rounds instead of O(diameter);
-- ``localCheckpoint`` after every round truncates lineage so the
-  logical plan stays O(1) across iterations (iterative joins
-  otherwise stack exponentially in Catalyst);
+- every round is one eager checkpoint (``stage._round``) that
+  truncates lineage, so the logical plan stays O(1) across iterations
+  (iterative joins otherwise stack exponentially in Catalyst), and
+  releases the previous round's blocks;
 - the fixpoint (every node labelled with its component's minimum
   node id) is unique and independent of partitioning or iteration
   order, so results are deterministic and DuckDB-oracle-checkable
@@ -24,8 +25,8 @@ SoCC'14) in pure DataFrame ops:
 
 Scale: each round shuffles O(|E|) rows on a single long key; near-dup
 graphs are forests of tiny cliques (diameter ~2-3), so 2-4 rounds
-close even at 100 TB.  The convergence check is one exact count per
-round — an O(|V|) action, negligible next to the joins.
+close even at 100 TB.  The convergence check is an exact sum of the
+labels, observed on the round's own checkpoint — no extra job.
 
 The reference has no graph operators (SURVEY.md §2.3: joins absent;
 parents derived by prefix slicing, extractors.py:171-175) — this is
@@ -36,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from idn_area_etl_spark.operators.stage import _release, _round, _stage
 
 
 def co_purchase_edges(
@@ -64,8 +67,6 @@ def co_purchase_edges(
     100 TB that converts the family's dominant cost from
     O(consumers) full scans+shuffles to O(1).
     """
-    from idn_area_etl_spark.operators.stage import _stage
-
     op = _stage(lineitem.select("l_orderkey", "l_partkey").distinct())
     a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p1"))
     b = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p2"))
@@ -100,50 +101,41 @@ def connected_components(
     # table: the hash-min join then produces min(own label, neighbor
     # labels) directly — no separate labels-vs-neighbor_min join per
     # round.  Materialize once.
-    sym = sym.union(nodes.select(F.col("node").alias("a"), F.col("node").alias("b")))
-    sym = sym.localCheckpoint(eager=True)
-
-    labels = (
-        nodes.select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
+    sym, _ = _round(
+        sym.union(nodes.select(F.col("node").alias("a"), F.col("node").alias("b")))
     )
     # Labels only ever decrease, so the exact (decimal — no long
     # overflow at any scale) sum of labels strictly decreases until
-    # the fixpoint: convergence is one cheap agg on the round's
-    # checkpointed blocks, no prev-label join or column.
-    def _label_sum(df: DataFrame):
-        return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
-
-    prev_sum = _label_sum(labels)
+    # the fixpoint: convergence is a sum observed on the round's own
+    # checkpoint, no prev-label join or column.
+    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+    labels, m = _round(nodes.select("node", F.col("node").alias("label")), [label_sum])
 
     for _ in range(max_iter):
-        cand = (
+        prev_sum = m["s"]
+        # a round of its own: both sides of the jump below read it
+        cand, _ = _round(
             sym.join(
                 labels.select(F.col("node").alias("b_node"), "label"),
                 F.col("b") == F.col("b_node"),
             )
             .groupBy(F.col("a").alias("node"))
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label")),
+            prev=labels,
         )
-        # Materialize once: both the pointer table and the jump's probe
-        # side read `cand`; without this the hash-min join + agg runs
-        # twice per round (lazy checkpoint — one job per round, the
-        # eager one below drives it).
-        cand = cand.localCheckpoint(eager=False)
         # Pointer jumping: follow one indirection. Labels are always
         # node ids present in `cand`, so the left join always hits;
         # coalesce only guards the type checker's view of it.
         ptr = cand.select(F.col("node").alias("p_node"), F.col("label").alias("p_label"))
-        labels = (
+        labels, m = _round(
             cand.join(ptr, cand["label"] == ptr["p_node"], "left")
-            .select("node", F.coalesce("p_label", "label").alias("label"))
-            .localCheckpoint(eager=True)
+            .select("node", F.coalesce("p_label", "label").alias("label")),
+            [label_sum],
+            prev=cand,
         )
-        new_sum = _label_sum(labels)
-        if new_sum == prev_sum:
+        if m["s"] == prev_sum:
             break
-        prev_sum = new_sum
-
+    _release(sym)
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -170,30 +162,25 @@ def pagerank(
 
     Scale: per round, one shuffle keyed on ``src`` for the
     contribution join and one keyed on ``dst`` for the sum —
-    map-side-combinable, O(|E|) rows; ``localCheckpoint`` keeps the
-    plan O(1) across rounds as in :func:`connected_components`.
+    map-side-combinable, O(|E|) rows; each round is a checkpoint, so
+    the plan stays O(1) across rounds as in :func:`connected_components`.
     Dangling nodes (no out-edges) contribute nothing, matching the
     simple formulation replicated by the SQL oracle.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    e = e.distinct().localCheckpoint(eager=True)
-
-    nodes = (
+    e, _ = _round(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct())
+    nodes, m = _round(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        [F.count(F.lit(1)).alias("n")],
     )
-    n_nodes = nodes.count()
+    n_nodes = m["n"]
     # degree table is static across rounds — materialize it once
-    out_deg = (
-        e.groupBy("src")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
+    out_deg, _ = _round(e.groupBy("src").agg(F.count("*").alias("deg")))
 
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    base = (1.0 - damping) / n_nodes
+    # an empty graph has no ranks to divide among
+    start, base = (1.0 / n_nodes, (1.0 - damping) / n_nodes) if n_nodes else (0.0, 0.0)
+    ranks = nodes.select("node", F.lit(start).alias("rank"))
     for _ in range(iters):
         contrib = (
             e.join(ranks, e.src == ranks.node)
@@ -206,15 +193,16 @@ def pagerank(
         summed = contrib.groupBy("node").agg(
             F.sum(F.col("c").cast("decimal(38,18)")).cast("double").alias("s")
         )
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .select(
+        ranks, _ = _round(
+            nodes.join(summed, "node", "left").select(
                 "node",
                 (
                     F.lit(base)
                     + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            prev=ranks,
         )
+    # after a round, only the returned ranks are still read
+    _release(e, out_deg, nodes if iters else None)
     return ranks

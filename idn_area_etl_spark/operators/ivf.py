@@ -17,7 +17,8 @@ empty-cluster-keep join) — measured as a 6.5 MB physical plan with
 (tools/explain_audit.py).  With driver-side state every round's plan
 is constant-size: scan + broadcast of a k-row literal.
 
-- init: deterministic farthest-point seeding (or the k lowest ids);
+- init: deterministic farthest-point seeding, each seed observed on
+  a round checkpoint;
 - assign: broadcast literal centroids, argmin squared distance as a
   ``min_by`` hash aggregate — the broadcast join leaves each vector's
   k candidate rows co-partitioned, so the partial agg COMPLETES
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.similarity import as_double_vec, dot_expr, norm_expr
+from idn_area_etl_spark.operators.stage import _release, _round
 
 
 def _sq_dist(a, b):
@@ -80,21 +82,13 @@ def kmeans_fit(
     iters: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    init: str = "farthest",
 ) -> DataFrame:
     """Deterministic Lloyd k-means over an embedding column.
 
-    Returns (cluster_id int, centroid array<double>).  Empty clusters
-    keep their previous centroid.  ``init``: "farthest" = farthest-
-    point seeding (k-1 driver rounds — better spread, O(k) jobs);
-    "first" = the k lowest ids (one job — for callers fitting many
-    small codebooks, e.g. product quantization, where Lloyd rounds
-    recover the spread).
+    Returns (cluster_id int, centroid array<double>); no rows for an
+    empty input.  Empty clusters keep their previous centroid.
     """
     spark = emb.sparkSession
-    vectors = emb.select(
-        F.col(id_col).alias("vec_id"), as_double_vec(F.col(vec_col)).alias("_vec")
-    )
 
     def literal_centroids(centers: list[list[float]]) -> DataFrame:
         return spark.createDataFrame(
@@ -102,37 +96,40 @@ def kmeans_fit(
             schema="cluster_id int, centroid array<double>",
         )
 
-    # ---- init: chosen seeds as driver-side (vec_id, vector) pairs ----
-    if init == "first":
-        chosen = [
-            (r["vec_id"], list(r["_vec"]))
-            for r in vectors.orderBy("vec_id").limit(k).collect()
-        ]
-    else:
-        # deterministic farthest-point init (kmeans++-lite): seed with
-        # the lowest id, then repeatedly take the vector maximizing the
-        # min distance to the chosen set (ties broken by vec_id).  The
-        # chosen set re-enters each round as a literal — k driver
-        # rounds, each a constant-size plan.
-        first = vectors.orderBy("vec_id").limit(1).collect()[0]
-        chosen = [(first["vec_id"], list(first["_vec"]))]
-        for _ in range(k - 1):
-            cvecs = spark.createDataFrame(
-                [(v,) for _, v in chosen], schema="_cvec array<double>"
-            )
-            nxt = (
-                vectors.crossJoin(F.broadcast(cvecs))
-                .withColumn("_d", _sq_dist(F.col("_vec"), F.col("_cvec")))
-                .groupBy("vec_id")
-                .agg(F.min("_d").alias("_mind"), F.first("_vec").alias("_vec"))
-                .orderBy(F.desc("_mind"), F.col("vec_id"))
-                .limit(1)
-                .collect()[0]
-            )
-            chosen.append((nxt["vec_id"], list(nxt["_vec"])))
+    # ---- init: farthest-point seeding (kmeans++-lite) ----
+    # the lowest id, then the vector farthest from the chosen set (ties
+    # → smaller vec_id); each round folds only the NEW seed into the
+    # running min.  Chosen vectors stay candidates (at distance 0).
+    vectors, m = _round(
+        emb.select(
+            F.col(id_col).alias("vec_id"), as_double_vec(F.col(vec_col)).alias("_vec")
+        ),
+        [F.min_by(F.struct("vec_id", "_vec"), "vec_id").alias("seed")],
+    )
+    if m["seed"] is None:
+        _release(vectors)
+        return literal_centroids([])
+    farthest = F.max_by(
+        F.struct("vec_id", "_vec"), F.struct("_mind", -F.col("vec_id"))
+    ).alias("seed")
+    chosen = [m["seed"]]
+    cand = vectors.withColumn("_mind", F.lit(None).cast("double"))
+    for _ in range(k - 1):
+        seed = spark.createDataFrame([(chosen[-1]["_vec"],)], "_cvec array<double>")
+        cand, m = _round(
+            cand.crossJoin(F.broadcast(seed)).select(
+                "vec_id",
+                "_vec",
+                F.least("_mind", _sq_dist(F.col("_vec"), F.col("_cvec"))).alias("_mind"),
+            ),
+            [farthest],
+            prev=cand,
+        )
+        chosen.append(m["seed"])
+    _release(cand)
     # cluster ids are assigned by ascending seed vec_id (stable under
     # any selection order), matching the documented determinism
-    centers = [v for _, v in sorted(chosen)]
+    centers = [list(v) for _, v in sorted(chosen)]
 
     # ---- Lloyd rounds: k·dim means collected per round ----
     for _ in range(iters):
@@ -162,6 +159,7 @@ def kmeans_fit(
             else centers[i]
             for i in range(len(centers))
         ]
+    _release(vectors)
     return literal_centroids(centers)
 
 

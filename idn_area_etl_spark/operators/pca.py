@@ -30,6 +30,8 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from idn_area_etl_spark.operators.stage import _release, _round
+
 
 def _dsum(col: Column) -> Column:
     """Order-independent sum of a double column: decimal(38,18)
@@ -52,6 +54,7 @@ def top_principal_component(
     """
     if n_iter < 1:
         raise ValueError("top_principal_component requires n_iter >= 1")
+    schema = "d int, mean double, component double, explained_var_ratio double"
     dims = emb.select(
         F.posexplode(F.col(vec_col)).alias("d", "x")
     ).select("d", F.col("x").cast("double").alias("x"))
@@ -64,41 +67,37 @@ def top_principal_component(
         .orderBy("d")
         .collect()
     )
+    if not stats:
+        return spark.createDataFrame([], schema)
     mu = [r["mu"] for r in stats]
     n_rows = stats[0]["n"]
     dim = len(mu)
-    centered = dims.join(
-        F.broadcast(
-            spark.createDataFrame(
-                [(i, m) for i, m in enumerate(mu)], "d int, mu double"
-            )
-        ),
-        "d",
-    ).select("d", (F.col("x") - F.col("mu")).alias("xc"))
-    # attach a row id per vector so X v can be formed: re-derive from
-    # the source with ids instead (posexplode preserves order per row)
-    # id BEFORE the explode — a generator in the same select would
-    # evaluate monotonically_increasing_id per OUTPUT row and shred
-    # the vectors
-    # localCheckpoint (not cache) pins the generated row ids: cached
+    # attach a row id per vector so X v can be formed.  id BEFORE the
+    # explode — a generator in the same select would evaluate
+    # monotonically_increasing_id per OUTPUT row and shred the vectors.
+    # A checkpoint (not cache) pins the generated row ids: cached
     # partitions can be evicted and silently recomputed with different
     # monotonically_increasing_id values mid-iteration, while a
     # checkpoint materializes the rows once (a lost partition fails
-    # loudly instead of corrupting the iteration)
-    with_id = emb.select(
-        F.monotonically_increasing_id().alias("rid"),
-        F.col(vec_col).alias("_v"),
-    ).localCheckpoint().select(
-        "rid", F.posexplode(F.col("_v")).alias("d", "x")
-    ).join(
-        F.broadcast(
-            spark.createDataFrame(
-                [(i, m) for i, m in enumerate(mu)], "d int, mu double"
-            )
-        ),
-        "d",
-    ).select("rid", "d", (F.col("x") - F.col("mu")).alias("xc"))
-    with_id = with_id.localCheckpoint()
+    # loudly instead of corrupting the iteration).  The total variance
+    # is observed on it.
+    with_id, m = _round(
+        emb.select(
+            F.monotonically_increasing_id().alias("rid"),
+            F.col(vec_col).alias("_v"),
+        ).select(
+            "rid", F.posexplode(F.col("_v")).alias("d", "x")
+        ).join(
+            F.broadcast(
+                spark.createDataFrame(
+                    [(i, x) for i, x in enumerate(mu)], "d int, mu double"
+                )
+            ),
+            "d",
+        ).select("rid", "d", (F.col("x") - F.col("mu")).alias("xc")),
+        [_dsum(F.col("xc") * F.col("xc")).alias("ss")],
+    )
+    total_var = m["ss"] / n_rows
     v = [1.0 / math.sqrt(dim)] * dim
     for _ in range(n_iter):
         vdf = F.broadcast(
@@ -125,12 +124,7 @@ def top_principal_component(
         norm = math.sqrt(sum(x * x for x in w))
         v = [x / norm for x in w]
         lam = norm  # ||Cov v|| with unit v -> eigenvalue estimate
-    # total variance = mean of per-dim variances summed
-    total_var = (
-        centered.select((F.col("xc") * F.col("xc")).alias("x2"))
-        .agg((_dsum(F.col("x2")) / n_rows).alias("tv"))
-        .collect()[0]["tv"]
-    )
+    _release(with_id)
     # sign convention: first nonzero coordinate positive
     sign = 1.0
     for x in v:
@@ -143,5 +137,5 @@ def top_principal_component(
             (i, float(mu[i]), float(sign * v[i]), float(round(evr, 6)))
             for i in range(dim)
         ],
-        "d int, mean double, component double, explained_var_ratio double",
+        schema,
     )

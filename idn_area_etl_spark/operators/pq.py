@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.ivf import _sq_dist
 from idn_area_etl_spark.operators.similarity import as_double_vec
+from idn_area_etl_spark.operators.stage import _round
 
 
 def _explode_subvecs(
@@ -114,7 +115,7 @@ def pq_fit(
             )
         )
         # empty clusters keep their previous centroid
-        centroids = (
+        centroids, _ = _round(
             centroids.alias("old")
             .join(means.alias("new"), ["sub", "cluster_id"], "left")
             .select(
@@ -123,8 +124,8 @@ def pq_fit(
                 F.coalesce(F.col("new.centroid"), F.col("old.centroid")).alias(
                     "centroid"
                 ),
-            )
-            .localCheckpoint()
+            ),
+            prev=centroids,
         )
     return centroids
 

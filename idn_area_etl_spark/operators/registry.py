@@ -20,10 +20,10 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.functions.cleaning import map_sql, normalize_words_sql
+from idn_area_etl_spark.functions.cleaning import normalize_words_sql
 
 #: classifier precedence, mirroring the reference's extractor list order
 EXTRACTOR_PRECEDENCE = ["area", "island"]
@@ -34,29 +34,17 @@ CLASSIFY_SCAN_ROWS = 3
 HEADER_SCAN_ROWS = 4
 
 
-def _norm_headers(cells: Column) -> Column:
-    """Header normalization shared by both classifiers
-    (extractors.py:117, 188-190): de-space single-char tokens, lower."""
-    return map_sql(cells, lambda x: f"lower({normalize_words_sql(x)})")
-
-
-def _is_island_header(headers: Column) -> Column:
-    """Island header rule (extractors.py:193-196): some header contains
-    'kode pulau', OR equals 'kode' while 'pulau' appears anywhere."""
-    joined = F.array_join(headers, " ")
-    return F.exists(
-        headers,
-        lambda h: h.contains("kode pulau")
-        | ((h == F.lit("kode")) & joined.contains("pulau")),
-    )
-
-
-def _find_first_index(headers: Column, pred) -> Column:
-    """1-based index of the first header satisfying ``pred``; NULL if
-    none (reference ``_infer_columns`` find_first, extractors.py:219-223)."""
-    return F.nullif(
-        F.array_position(F.transform(headers, pred), F.lit(True)), F.lit(0)
-    )
+#: column-map inference (extractors.py:205-242): header predicate per index
+_COLUMN_RULES = {
+    "idx_code": "contains(h, 'kode') AND contains(h, 'pulau')",
+    "idx_name": "contains(h, 'nama')",
+    "idx_coord": "contains(h, 'koordinat') OR contains(h, 'kordinat')",
+    "idx_status": (
+        "contains(h, 'bp/tbp') OR h IN ('bp', 'tbp', 'status')"
+        " OR contains(h, 'keterangan')"
+    ),
+    "idx_info": "contains(h, 'keterangan') OR h = 'ket'",
+}
 
 
 def classify_tables(raw: DataFrame) -> DataFrame:
@@ -68,76 +56,56 @@ def classify_tables(raw: DataFrame) -> DataFrame:
       header_idx    island header row_no (NULL for area tables)
       idx_code/idx_name/idx_coord/idx_status/idx_info
                     1-based positions into ``cells`` (island only)
+
+    Every array lambda is SQL text, parsed by the JVM in one call.
     """
     head = raw.filter(F.col("row_no") < HEADER_SCAN_ROWS)
     grouped = head.groupBy("page_no", "table_no").agg(
         F.sort_array(F.collect_list(F.struct("row_no", "cells"))).alias("rows")
     )
-
-    rows = F.col("rows")
-    norm_rows = F.transform(
-        rows,
-        lambda r: F.struct(
-            r["row_no"].alias("row_no"),
-            _norm_headers(r["cells"]).alias("headers"),
-        ),
-    )
-    g = grouped.select(
+    # header normalization shared by both classifiers
+    # (extractors.py:117, 188-190): de-space single-char tokens, lower
+    g = grouped.selectExpr(
         "page_no",
         "table_no",
-        rows[0]["cells"].alias("first_cells"),
-        rows[0]["row_no"].alias("first_row_no"),
-        norm_rows.alias("nrows"),
+        "rows[0].cells AS first_cells",
+        "rows[0].row_no AS first_row_no",
+        "transform(rows, r -> named_struct('row_no', r.row_no, 'headers',"
+        f" transform(r.cells, v -> lower({normalize_words_sql('v')})))) AS nrows",
+    ).selectExpr(
+        "*",
+        # rows passing the island header rule (extractors.py:193-196):
+        # some header contains 'kode pulau', OR equals 'kode' while
+        # 'pulau' appears anywhere.  Built once for the classifier
+        # (first 3 rows) and the header locator (first 4).
+        "filter(nrows, r -> exists(r.headers, h -> contains(h, 'kode pulau')"
+        " OR (h = 'kode' AND contains(array_join(r.headers, ' '), 'pulau'))))"
+        " AS island_rows",
     )
-
-    first_headers = F.col("nrows")[0]["headers"]
     # Area classifier (extractors.py:114-122): table's first row is the
     # header row: col0 == 'kode' and 'nama provinsi' within col1.
     is_area = (
-        (F.col("first_row_no") == 0)
-        & (F.size("first_cells") >= 2)
-        & (first_headers[0] == F.lit("kode"))
-        & first_headers[1].contains("nama provinsi")
+        "first_row_no = 0 AND size(first_cells) >= 2"
+        " AND nrows[0].headers[0] = 'kode'"
+        " AND contains(nrows[0].headers[1], 'nama provinsi')"
     )
-
-    classify_rows = F.filter(
-        F.col("nrows"), lambda r: r["row_no"] < CLASSIFY_SCAN_ROWS
-    )
-    is_island = F.exists(classify_rows, lambda r: _is_island_header(r["headers"]))
-
-    # Island header row located over 4 rows (extractors.py:253-257).
-    header_row = F.get(
-        F.filter(F.col("nrows"), lambda r: _is_island_header(r["headers"])), 0
-    )
-    headers = header_row["headers"]
-
-    meta = g.select(
+    is_island = f"exists(island_rows, r -> r.row_no < {CLASSIFY_SCAN_ROWS})"
+    # 1-based index of the first island header satisfying a rule; NULL
+    # if none (reference ``_infer_columns`` find_first, extractors.py:219-223)
+    headers = "get(island_rows, 0).headers"
+    return g.selectExpr(
         "page_no",
         "table_no",
-        F.when(is_area, F.lit("area"))
-        .when(is_island, F.lit("island"))
-        .alias("extractor"),
-        F.size("first_cells").alias("ncols"),
-        F.when(is_island, header_row["row_no"]).alias("header_idx"),
-        # Column-map inference (extractors.py:205-242).
-        _find_first_index(
-            headers, lambda h: h.contains("kode") & h.contains("pulau")
-        ).alias("idx_code"),
-        _find_first_index(headers, lambda h: h.contains("nama")).alias("idx_name"),
-        _find_first_index(
-            headers, lambda h: h.contains("koordinat") | h.contains("kordinat")
-        ).alias("idx_coord"),
-        _find_first_index(
-            headers,
-            lambda h: h.contains("bp/tbp")
-            | h.isin("bp", "tbp", "status")
-            | h.contains("keterangan"),
-        ).alias("idx_status"),
-        _find_first_index(
-            headers, lambda h: h.contains("keterangan") | (h == F.lit("ket"))
-        ).alias("idx_info"),
+        f"CASE WHEN {is_area} THEN 'area' WHEN {is_island} THEN 'island' END"
+        " AS extractor",
+        "size(first_cells) AS ncols",
+        f"CASE WHEN {is_island} THEN get(island_rows, 0).row_no END AS header_idx",
+        *[
+            f"nullif(array_position(transform({headers}, h -> {rule}), true), 0)"
+            f" AS {name}"
+            for name, rule in _COLUMN_RULES.items()
+        ],
     )
-    return meta
 
 
 def with_routing(raw: DataFrame, meta: DataFrame | None = None) -> DataFrame:

@@ -19,14 +19,18 @@ Persist is not the default because a persisted frame stays in the
 session-wide cache until it is unpersisted and is substituted into
 later queries that contain the same subtree; only a scope that
 unpersists on exit makes it safe.
+
+:func:`_round` materializes one round of a driver-paced loop, with
+its metrics observed and the previous round released.
 """
 
 from __future__ import annotations
 
 import threading
 from contextlib import contextmanager
+from typing import Any, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.storagelevel import StorageLevel
 
 
@@ -52,12 +56,11 @@ def _stage(df: DataFrame) -> DataFrame:
     is GC-hostile; Tungsten-serialized blocks are ~4× smaller.
 
     The default lazy ``localCheckpoint`` pins its blocks until RDD
-    garbage collection or session end (no unpersist hook exists on a
-    lazy plan) and truncates lineage, so losing an executor makes
-    downstream jobs fail instead of recomputing.  That is right for
-    bounded batch jobs; long-lived sessions wrap their calls in
-    :func:`staged_scope`, whose persisted frames keep recomputable
-    lineage and are released on exit."""
+    garbage collection or session end and truncates lineage, so losing
+    an executor makes downstream jobs fail instead of recomputing.
+    That is right for bounded batch jobs; long-lived sessions wrap
+    their calls in :func:`staged_scope`, whose persisted frames keep
+    recomputable lineage and are released on exit."""
     if _STATE.disabled:
         return df
     if _STATE.scopes:
@@ -65,6 +68,35 @@ def _stage(df: DataFrame) -> DataFrame:
         _STATE.scopes[-1].append(staged)
         return staged
     return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+
+
+def _round(
+    df: DataFrame, metrics: Sequence[Column] = (), prev: DataFrame | None = None
+) -> tuple[DataFrame, dict[str, Any]]:
+    """One round of a driver-paced loop: ``df`` checkpointed eagerly
+    with ``metrics`` observed, then ``prev`` released (:func:`_release`).
+
+    The eager checkpoint's own job fills the observed metrics, so a
+    round's convergence value or next choice costs no separate action.
+    A choice is a ``min_by``/``max_by`` over a total-order key: among
+    tied keys they pick arbitrarily.  Returns the checkpoint and the
+    metrics by alias."""
+    obs = Observation()
+    out = (df.observe(obs, *metrics) if metrics else df).localCheckpoint(eager=True)
+    _release(prev)
+    return out, obs.get if metrics else {}
+
+
+def _release(*frames: DataFrame | None) -> None:
+    """Drop the blocks of the :func:`_round` checkpoints among
+    ``frames``; anything else is left alone.  Reading a released
+    checkpoint fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, so
+    release only rounds no later plan reads."""
+    for df in frames:
+        if df is not None:
+            plan = df._jdf.queryExecution().logical()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                plan.rdd().unpersist(True)
 
 
 @contextmanager

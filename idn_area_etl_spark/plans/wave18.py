@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.operators.ranks import global_running_max
+from idn_area_etl_spark.operators.stage import _release, _round
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 
@@ -211,7 +212,7 @@ def _lpa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community sizes after 3 synchronous LPA rounds on the part
     co-order graph (most-frequent neighbor label, ties → smallest)."""
-    edges = _lpa_edges(spark, sf_dir).localCheckpoint()
+    edges, _ = _round(_lpa_edges(spark, sf_dir))
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -221,12 +222,13 @@ def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.col("src").alias("v"), "label")
         counts = neigh.groupBy("v", "label").agg(F.count("*").alias("cnt"))
         w = Window.partitionBy("v").orderBy(F.col("cnt").desc(), F.col("label"))
-        labels = (
+        labels, _ = _round(
             counts.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
-            .select(F.col("v").alias("node"), "label")
-            .localCheckpoint()
+            .select(F.col("v").alias("node"), "label"),
+            prev=labels,
         )
+    _release(edges)
     return (
         labels.groupBy("label")
         .agg(F.count("*").alias("community_size"))

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.stage import _stage
+from idn_area_etl_spark.operators.stage import _round, _stage
 from idn_area_etl_spark.operators.text import tokens_expr
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
@@ -413,27 +413,27 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     Bounded-iteration graph op in the style of
     `operators/graph.py:pagerank` — every round is one
     map-side-combinable degree agg plus two semi joins on the
-    endpoints.  ``localCheckpoint`` truncates the per-round lineage:
+    endpoints.  A checkpoint per round truncates the lineage:
     each round references the surviving edge set three times (degree
     agg reads it twice, the semi joins once more), so threading it
     through as raw lineage triples the plan per round (3^rounds —
     measured 1.3 MB of physical plan at rounds=3).
     """
-    e = edges
+    e, cut = edges, None
     for _ in range(rounds):
         # truncate the previous round's lineage at the START of the
         # round, so each job plans exactly one round of joins over a
         # checkpoint scan (and the returned plan keeps the last
         # round's semi joins visible for the plan-shape gate)
-        e = e.localCheckpoint(eager=True)
+        cut, _ = _round(e, prev=cut)
         deg = (
-            e.select(F.col("a").alias("node"))
-            .unionAll(e.select(F.col("b").alias("node")))
+            cut.select(F.col("a").alias("node"))
+            .unionAll(cut.select(F.col("b").alias("node")))
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= k).select("node")
-        e = e.join(
+        e = cut.join(
             keep.withColumnRenamed("node", "a"), "a", "left_semi"
         ).join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
     return (

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators.stage import _stage
+from idn_area_etl_spark.operators.stage import _release, _round, _stage
 from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 
@@ -160,19 +160,18 @@ def s_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id 0; each round adds the point with max distance to the
     selected set (ties → smaller vec_id).
 
-    Scale shape: greedy k-center is inherently sequential in k (one
-    driver-side ``limit(1).collect()`` per round, like BPE's merge
-    loop), but each round is ONE distributed pass that compares the
-    candidate set against only the round's NEW center (broadcast,
-    1 row) and folds it into the running ``min_d`` — the standard
-    incremental formulation.  Total work is O(k·n) distance evals with
-    no growing ``isin`` literal and no re-scan of prior centers;
-    ``localCheckpoint`` truncates the per-round lineage.
+    Scale shape: greedy k-center is inherently sequential in k, but
+    each round is ONE distributed pass that compares the candidate set
+    against only the round's NEW center (broadcast, 1 row) and folds
+    it into the running ``min_d`` — the standard incremental
+    formulation.  Total work is O(k·n) distance evals with no growing
+    ``isin`` literal and no re-scan of prior centers.  The next center
+    (vector included) is observed on each round's checkpoint.
     """
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    ).localCheckpoint()
+    )
 
     def dist_to(center_vec: str) -> F.Column:
         return F.sqrt(
@@ -183,41 +182,38 @@ def s_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def center_of(vid: int):
-        return F.broadcast(
-            emb.filter(F.col("vec_id") == vid).select(
-                F.col("vec").alias("svec")
-            )
-        )
-
+    # the oracle's ORDER BY min_d DESC, vec_id as a total-order key
+    farthest = F.max_by(
+        F.struct("vec_id", "min_d", "vec"), F.struct("min_d", -F.col("vec_id"))
+    ).alias("top")
     # round 0 seed; candidates carry min distance to the selected set
-    cand = (
+    seed = emb.filter(F.col("vec_id") == 0).select(F.col("vec").alias("svec"))
+    cand, m = _round(
         emb.filter(F.col("vec_id") != 0)
-        .crossJoin(center_of(0))
-        .select("vec_id", "vec", F.round(dist_to("svec"), 9).alias("min_d"))
-        .localCheckpoint()
+        .crossJoin(F.broadcast(seed))
+        .select("vec_id", "vec", F.round(dist_to("svec"), 9).alias("min_d")),
+        [farthest],
     )
     rounds = []
     for rnd in range(1, CORESET_K):
-        top = (
-            cand.orderBy(F.col("min_d").desc(), "vec_id")
-            .limit(1)
-            .collect()[0]
-        )
+        top = m["top"]
         rounds.append((rnd, top["vec_id"], top["min_d"]))
         if rnd < CORESET_K - 1:
-            cand = (
+            center = spark.createDataFrame([(top["vec"],)], "svec array<double>")
+            cand, m = _round(
                 cand.filter(F.col("vec_id") != top["vec_id"])
-                .crossJoin(center_of(top["vec_id"]))
+                .crossJoin(F.broadcast(center))
                 .select(
                     "vec_id",
                     "vec",
                     F.least(
                         F.col("min_d"), F.round(dist_to("svec"), 9)
                     ).alias("min_d"),
-                )
-                .localCheckpoint()
+                ),
+                [farthest],
+                prev=cand,
             )
+    _release(cand)
     return spark.createDataFrame(
         [(0, 0, 0.0)] + rounds,
         "round int, vec_id long, coverage_radius double",

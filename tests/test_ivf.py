@@ -53,6 +53,18 @@ def test_kmeans_recovers_planted_clusters(spark, clustered):
     assert all(r["n_labels"] == 1 for r in purity)
 
 
+def test_kmeans_k_beyond_distinct_vectors_repeats_seeds(spark):
+    """Chosen vectors stay farthest-point candidates (at distance 0),
+    so k beyond the distinct vectors repeats the lowest id among the
+    tied zero distances."""
+    emb = spark.createDataFrame(
+        [(4, [1.0, 2.0]), (9, [1.0, 2.0]), (2, [0.0, 2.0])],
+        "vec_id long, embedding array<float>",
+    )
+    rows = kmeans_fit(emb, k=4, iters=0).orderBy("cluster_id").collect()
+    assert [r["centroid"] for r in rows] == [[0.0, 2.0]] * 3 + [[1.0, 2.0]]
+
+
 def test_ivf_topk_matches_brute_force_in_cluster(spark, clustered):
     centroids = kmeans_fit(clustered, k=3, iters=4)
     queries = clustered.filter("vec_id IN (0, 6, 12)")
