@@ -70,17 +70,22 @@ def py_strip(col: Column) -> Column:
     return F.regexp_replace(col, _STRIP, "")
 
 
+def strip_sql(x: str) -> str:
+    """``str.strip()`` semantics as SQL text."""
+    return _replace(x, _STRIP)
+
+
 def clean_name_sql(x: str) -> str:
     """strip → drop ``\\r`` and tab→space → kill leading ``^\\d+\\n`` →
     kill trailing ``\\n\\d+$`` → collapse ``\\n+`` → kill the leading
     row-number prefix → collapse 2+ whitespace → strip, in the order of
     utils.py:24-30 (the row-number rule must run after newlines go)."""
-    x = f"translate({_replace(x, _STRIP)}, {sql_string(chr(9) + chr(13))}, ' ')"
+    x = f"translate({strip_sql(x)}, {sql_string(chr(9) + chr(13))}, ' ')"
     for pattern, replacement in [
         (r"^\d+\n", ""), (r"\n\d+$", ""), (r"\n+", " "), (r"^\d+\s+", ""), (r"\s{2,}", " "),
     ]:
         x = _replace(x, pattern, replacement)
-    return _replace(x, _STRIP)
+    return strip_sql(x)
 
 
 def fix_wrapped_name_sql(x: str, max_line_length: int = 16) -> str:
@@ -108,7 +113,7 @@ def fix_wrapped_name_sql(x: str, max_line_length: int = 16) -> str:
 def normalize_words_sql(x: str) -> str:
     """"K o d e" -> "Kode": if every whitespace-separated token is one
     char (or '/', '-'), join the tokens; else the stripped input."""
-    return sql_let(_replace(x, _STRIP), "s", sql_let(
+    return sql_let(strip_sql(x), "s", sql_let(
         f"filter(split(s, {_WHITESPACE}), w -> w != '')", "t",
         "CASE WHEN exists(t, w -> length(w) > 1 AND w NOT IN ('/', '-'))"
         " THEN s ELSE array_join(t, '') END",

@@ -4,7 +4,10 @@ Re-expresses the reference ``AreaExtractor`` (extractors.py:103-176)
 as a declarative DataFrame flow over routed long-form raw rows:
 
   header skip (P3) → name coalesce (P4) → non-empty filter (P5) →
-  length-classified split (P9) → first-seen province dedup (A1).
+  length classification (P9) → first-seen province dedup (A1),
+
+every level in one frame tagged by ``entity``, written as Spark SQL
+text (one parse per projection, whatever its size).
 
 Hierarchy is encoded in dotted code strings classified by length —
 province=2, regency=5, district=8, village=13 (utils.py:14-17) — and
@@ -14,16 +17,14 @@ parents derive by prefix slicing (extractors.py:171-175).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from idn_area_etl_spark.functions.cleaning import (
-    apply_sql,
     clean_name_sql,
     fix_wrapped_name_sql,
     normalize_words_sql,
-    py_strip,
+    sql_let,
+    strip_sql,
 )
-from idn_area_etl_spark.operators.ordering import first_seen
 
 PROVINCE_CODE_LENGTH = 2
 REGENCY_CODE_LENGTH = 5
@@ -40,10 +41,13 @@ AREA_LEVELS = [
 
 _LINEAGE = ["page_no", "table_no", "row_no"]
 
+#: the columns of the one area frame, every level in it
+AREA_COLUMNS = ["entity", *_LINEAGE, "code", "parent_code", "name"]
 
-def _cell(i_1based) -> F.Column:
+
+def _cell(idx0: int) -> str:
     """Null-safe positional cell access, stripped ('' for missing)."""
-    return py_strip(F.coalesce(F.get("cells", i_1based - 1), F.lit("")))
+    return strip_sql(f"coalesce(get(cells, {idx0}), '')")
 
 
 def code_name_pairs(routed: DataFrame) -> DataFrame:
@@ -59,67 +63,67 @@ def code_name_pairs(routed: DataFrame) -> DataFrame:
       a one-element array inside ``inline``, so the optimizer cannot
       push it (and the cleaned name with it) into the routing join.
     """
-    area = routed.filter(
-        (F.col("extractor") == "area") & (F.col("row_no") >= 2)
+
+    def cand(idx0: int) -> str:
+        return f"nullif({_cell(idx0)}, '')"
+
+    raw_name = (
+        f"CASE WHEN ncols = 6 THEN coalesce({cand(1)}, {cand(3)}, '')"
+        f" ELSE coalesce({cand(1)}, {cand(4)}, {cand(5)}, {cand(6)}, '') END"
+    )
+    name = sql_let(
+        raw_name, "v", normalize_words_sql(clean_name_sql(fix_wrapped_name_sql("v")))
+    )
+    pair = f"named_struct('code', {_cell(0)}, 'name', {name})"
+    return routed.where("extractor = 'area' AND row_no >= 2").selectExpr(
+        *_LINEAGE, f"inline(filter(array({pair}), p -> p.code != '' AND p.name != ''))"
     )
 
-    def cand(idx0: int) -> F.Column:
-        return F.nullif(py_strip(F.coalesce(F.get("cells", idx0), F.lit(""))), F.lit(""))
 
-    raw_name = F.when(
-        F.col("ncols") == 6, F.coalesce(cand(1), cand(3), F.lit(""))
-    ).otherwise(F.coalesce(cand(1), cand(4), cand(5), cand(6), F.lit("")))
-    name = apply_sql(
-        raw_name,
-        lambda x: normalize_words_sql(clean_name_sql(fix_wrapped_name_sql(x))),
-    )
-    pair = F.struct(_cell(1).alias("code"), name.alias("name"))
-    return area.select(
-        *_LINEAGE,
-        F.inline(F.filter(
-            F.array(pair), lambda p: (p["code"] != "") & (p["name"] != "")
-        )),
-    )
+#: P9 (extractors.py:157-176): the level and the parent prefix by code length
+_ENTITY = " ".join(
+    ["CASE length(code)"]
+    + [f"WHEN {code_len} THEN '{name}'" for name, code_len, _ in AREA_LEVELS]
+    + ["END"]
+)
+_PARENT = " ".join(
+    ["CASE length(code)"]
+    + [
+        f"WHEN {code_len} THEN substring(code, 1, {parent_len})"
+        for _, code_len, parent_len in AREA_LEVELS
+        if parent_len is not None
+    ]
+    + ["END"]
+)
 
 
 def classify_codes(pairs: DataFrame) -> DataFrame:
     """P9 length-based split with parent prefix derivation
-    (extractors.py:157-176) as a single-pass ``when`` chain."""
-    length = F.length("code")
-    entity = F.lit(None).cast("string")
-    parent = F.lit(None).cast("string")
-    for name, code_len, parent_len in reversed(AREA_LEVELS):
-        entity = F.when(length == code_len, F.lit(name)).otherwise(entity)
-        parent_val = (
-            F.lit(None).cast("string")
-            if parent_len is None
-            else F.substring("code", 1, parent_len)
-        )
-        parent = F.when(length == code_len, parent_val).otherwise(parent)
-    return (
-        pairs.withColumn("entity", entity)
-        .withColumn("parent_code", parent)
-        .filter(F.col("entity").isNotNull())
+    (extractors.py:157-176): ``entity`` and ``parent_code`` appended,
+    rows of any other code length dropped."""
+    return pairs.selectExpr("*", f"{_ENTITY} AS entity", f"{_PARENT} AS parent_code").where(
+        "entity IS NOT NULL"
     )
 
 
-def extract_areas(routed: DataFrame) -> dict[str, DataFrame]:
-    """Full area dataflow → four entity DataFrames.
+def extract_areas(routed: DataFrame) -> DataFrame:
+    """Full area dataflow → one frame of every level, ``AREA_COLUMNS``.
 
-    The classified stream is split by four filters off one plan; the
-    exact CSV sink (writer.py) unions the four back into one query, so
-    the shared upstream executes once with nothing persisted
-    (multi-sink fan-out, SURVEY.md §2.1 S6).  Province codes dedup
-    first-seen in document order (A1).
+    Each area row is routed, cleaned and classified once; the levels
+    stay tagged by ``entity`` instead of being split into frames, so
+    the exact CSV sink (writer.py) reads them as one branch of its
+    query.  Province codes dedup first-seen in document order (A1),
+    run-global like the reference's ``_seen_provinces``; other levels
+    keep duplicate codes, as the reference does.  The dedup window
+    shuffles every area row once.
     """
-    classified = classify_codes(code_name_pairs(routed))
-    out: dict[str, DataFrame] = {}
-    for name, _len, parent_len in AREA_LEVELS:
-        df = classified.filter(F.col("entity") == name)
-        if name == "province":
-            df = first_seen(df, ["code"], _LINEAGE)
-            df = df.select(*_LINEAGE, "code", "name")
-        else:
-            df = df.select(*_LINEAGE, "code", "parent_code", "name")
-        out[name] = df
-    return out
+    return (
+        classify_codes(code_name_pairs(routed))
+        .selectExpr(
+            *AREA_COLUMNS,
+            f"row_number() OVER (PARTITION BY entity, code ORDER BY {', '.join(_LINEAGE)})"
+            " AS rn",
+        )
+        .where("entity <> 'province' OR rn = 1")
+        .drop("rn")
+    )

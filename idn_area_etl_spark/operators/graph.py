@@ -95,21 +95,27 @@ def connected_components(
     at least one edge.  Node ids must be castable to ``long``.
     """
     e = edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    nodes = sym.select(F.col("a").alias("node")).distinct()
-    # Self-loops folded into the (static, reused-every-round) edge
-    # table: the hash-min join then produces min(own label, neighbor
-    # labels) directly — no separate labels-vs-neighbor_min join per
-    # round.  Materialize once.
+    # Both directions plus one self-loop per node, in the (static,
+    # reused-every-round) edge table: the hash-min join then produces
+    # min(own label, neighbor labels) directly — no separate
+    # labels-vs-neighbor_min join per round.  Materialize once; its
+    # self-loops are the node list, so the first labels read the
+    # checkpoint, not the input edges.
     sym, _ = _round(
-        sym.union(nodes.select(F.col("node").alias("a"), F.col("node").alias("b")))
+        e.union(e.select("b", "a"))
+        .union(e.select("a", F.col("a").alias("b")))
+        .union(e.select(F.col("b").alias("a"), "b"))
+        .distinct()
     )
     # Labels only ever decrease, so the exact (decimal — no long
     # overflow at any scale) sum of labels strictly decreases until
     # the fixpoint: convergence is a sum observed on the round's own
     # checkpoint, no prev-label join or column.
     label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    labels, m = _round(nodes.select("node", F.col("node").alias("label")), [label_sum])
+    labels, m = _round(
+        sym.where("a <=> b").select(F.col("a").alias("node"), F.col("a").alias("label")),
+        [label_sum],
+    )
 
     for _ in range(max_iter):
         prev_sum = m["s"]

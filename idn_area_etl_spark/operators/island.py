@@ -9,20 +9,21 @@ the classifier metadata (registry.py), and the per-row loop
   rescue → F4 coordinate canonicalization → P10 flag derivation →
   P11 parent-from-code.
 
-Everything is native column expressions — no Python in the row path.
+Everything is Spark SQL text over native expressions — no Python in
+the row path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from idn_area_etl_spark.functions.cleaning import (
     clean_name_sql,
     fix_wrapped_name_sql,
-    format_coordinate,
-    map_sql,
-    py_strip,
+    format_coordinate_sql,
+    sql_let,
+    sql_string,
+    strip_sql,
 )
 
 #: island code shape 'NN.NN.NNNNN' (utils.py:20)
@@ -30,25 +31,22 @@ ISLAND_CODE_PATTERN = r"^\d{2}\.\d{2}\.\d{5}$"
 
 _LINEAGE = ["page_no", "table_no", "row_no"]
 
+_DOT, _BP = sql_string(r"\."), sql_string(r"^\s*BP\b")
 
-def _val(idx_col: str | Column) -> Column:
+
+def _val(idx: str) -> str:
     """Reference ``val(i)`` (extractors.py:269-272): positional cell by
-    1-based index column, stripped, '' when the index is NULL/overflow."""
-    idx = F.col(idx_col) if isinstance(idx_col, str) else idx_col
-    return py_strip(
-        F.coalesce(
-            F.when(idx.isNotNull(), F.get("cells", (idx - 1).cast("int"))),
-            F.lit(""),
-        )
-    )
+    1-based index expression, stripped, '' when the index is NULL/overflow."""
+    return strip_sql(f"coalesce(get(cells, CAST({idx} - 1 AS int)), '')")
 
 
-def island_parent_code(code: Column) -> Column:
+def island_parent_code_sql(code: str) -> str:
     """P11 (extractors.py:244-248): 'NN.NN.NNNNN' → 'NN.NN'; the
     regency-less 'NN.00.NNNNN' form yields '' (serialized NULL)."""
-    return F.when(
-        F.split(code, r"\.")[1] == "00", F.lit("")
-    ).otherwise(F.substring(code, 1, 5))
+    return (
+        f"CASE WHEN split({code}, {_DOT})[1] = '00' THEN ''"
+        f" ELSE substring({code}, 1, 5) END"
+    )
 
 
 def extract_islands(routed: DataFrame) -> DataFrame:
@@ -59,44 +57,36 @@ def extract_islands(routed: DataFrame) -> DataFrame:
     (extractors.py:181, 294-296); flags are ints here and stringified
     only at the CSV sink.
     """
-    rows = routed.filter(
-        (F.col("extractor") == "island") & (F.col("row_no") > F.col("header_idx"))
-    )
+    rows = routed.where("extractor = 'island' AND row_no > header_idx")
     # P8 rescue cell (extractors.py:279-284): right of the code column
-    cells = rows.select(
+    cells = rows.selectExpr(
         *_LINEAGE,
-        _val("idx_code").alias("code"),
-        _val("idx_name").alias("name_cell"),
-        _val(F.col("idx_code") + 1).alias("rescue_cell"),
-        _val("idx_coord").alias("coord_cell"),
-        F.upper(_val("idx_status")).alias("status"),
-        F.upper(_val("idx_info")).alias("info"),
-    ).filter(F.col("code").rlike(ISLAND_CODE_PATTERN))
+        f"{_val('idx_code')} AS code",
+        f"{_val('idx_name')} AS name_cell",
+        f"{_val('idx_code + 1')} AS rescue_cell",
+        f"{_val('idx_coord')} AS coord_cell",
+        f"upper({_val('idx_status')}) AS status",
+        f"upper({_val('idx_info')}) AS info",
+    ).where(f"code RLIKE {sql_string(ISLAND_CODE_PATTERN)}")
 
-    names = cells.select(
+    clean = clean_name_sql(fix_wrapped_name_sql("v"))
+    names = cells.selectExpr(
         *_LINEAGE,
         "code",
-        map_sql(
-            F.array("name_cell", "rescue_cell"),
-            lambda x: clean_name_sql(fix_wrapped_name_sql(x)),
-        ).alias("names"),
-        format_coordinate(F.col("coord_cell")).alias("coordinate"),
+        f"transform(array(name_cell, rescue_cell), v -> {clean}) AS names",
+        f"{sql_let('coord_cell', 'v', format_coordinate_sql('v'))} AS coordinate",
         "status",
         "info",
     )
-    # P8: the cleaned name equals the code → take the cleaned rescue cell
-    code, base_name, rescue = F.col("code"), F.col("names")[0], F.col("names")[1]
-    name = F.when(
-        (base_name == code) & (rescue != "") & (rescue != code), rescue
-    ).otherwise(base_name)
-
-    return names.select(
+    return names.selectExpr(
         *_LINEAGE,
         "code",
-        island_parent_code(code).alias("regency_code"),
+        f"{island_parent_code_sql('code')} AS regency_code",
         "coordinate",
         # P10 (extractors.py:290-291)
-        F.col("status").rlike(r"^\s*BP\b").cast("int").alias("is_populated"),
-        F.col("info").contains("PPKT").cast("int").alias("is_outermost_small"),
-        name.alias("name"),
+        f"CAST(status RLIKE {_BP} AS int) AS is_populated",
+        "CAST(contains(info, 'PPKT') AS int) AS is_outermost_small",
+        # P8: the cleaned name equals the code → take the cleaned rescue cell
+        "CASE WHEN names[0] = code AND names[1] != '' AND names[1] != code"
+        " THEN names[1] ELSE names[0] END AS name",
     )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from idn_area_etl_spark.functions.cleaning import normalize_words_sql
+from idn_area_etl_spark.operators.area import AREA_LEVELS
 
 #: classifier precedence, mirroring the reference's extractor list order
 EXTRACTOR_PRECEDENCE = ["area", "island"]
@@ -118,17 +119,35 @@ def with_routing(raw: DataFrame, meta: DataFrame | None = None) -> DataFrame:
 def extract_all(raw: DataFrame) -> dict[str, DataFrame]:
     """Run the full classify → route → extract dataflow.
 
-    Returns the five entity DataFrames keyed 'province', 'regency',
-    'district', 'village', 'island' (reference Area literal,
-    config.py:7).  They share one routed plan and nothing is cached:
-    the exact CSV sink runs all five as one query (writer.py), and
-    other consumers that act on each frame separately re-execute the
-    shared plan per action (SURVEY.md §2.1 S6).
+    Returns one frame per extractor, keyed by ``EXTRACTOR_PRECEDENCE``:
+    ``'area'`` holds every area level tagged by ``entity``
+    (``area.AREA_COLUMNS``) and ``'island'`` the islands.  Both read
+    one routed plan and nothing is cached: the exact CSV sink reads
+    the two as the two branches of one query (writer.py).
+    :func:`entity_frames` gives the per-entity view.
     """
     from idn_area_etl_spark.operators.area import extract_areas
     from idn_area_etl_spark.operators.island import extract_islands
 
     routed = with_routing(raw)
-    out = extract_areas(routed)
-    out["island"] = extract_islands(routed)
+    return {"area": extract_areas(routed), "island": extract_islands(routed)}
+
+
+def entity_frames(extracted: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """The five entity frames of an :func:`extract_all` result, keyed
+    'province', 'regency', 'district', 'village', 'island' (reference
+    Area literal, config.py:7): each area level is a filter of the one
+    area frame, with ``parent_code`` except for provinces.  Consumers
+    that act on each frame separately re-execute the shared plan per
+    action (SURVEY.md §2.1 S6).
+    """
+    areas = extracted["area"]
+    out = {
+        name: areas.where(f"entity = '{name}'").select(
+            "page_no", "table_no", "row_no", "code",
+            *([] if parent_len is None else ["parent_code"]), "name",
+        )
+        for name, _len, parent_len in AREA_LEVELS
+    }
+    out["island"] = extracted["island"]
     return out

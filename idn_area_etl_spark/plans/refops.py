@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from idn_area_etl_spark.functions.cleaning import clean_name, normalize_words
 from idn_area_etl_spark.operators.area import classify_codes
-from idn_area_etl_spark.operators.island import island_parent_code
+from idn_area_etl_spark.operators.island import island_parent_code_sql
 from idn_area_etl_spark.operators.ordering import first_seen
 from idn_area_etl_spark.operators.registry import extract_all
 from idn_area_etl_spark.plans.registry import QuerySpec
@@ -77,7 +77,7 @@ ORDER BY o_orderkey
 
 def rf_parent_from_code(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P11: parent regency from island code; '00' middle → '' NULL-parent
-    (extractors.py:244-248) — via the production island_parent_code."""
+    (extractors.py:244-248) — via the production island_parent_code_sql."""
     from idn_area_etl_spark.operators.island import ISLAND_CODE_PATTERN
 
     return (
@@ -86,7 +86,7 @@ def rf_parent_from_code(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "o_orderkey",
             "code",
-            island_parent_code(F.col("code")).alias("regency_code"),
+            F.expr(island_parent_code_sql("code")).alias("regency_code"),
         )
     )
 
@@ -274,21 +274,11 @@ def rf_area_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["", "", "", "", "", "", ""],
     ] + [[code, name, "", "", "", "", ""] for code, name in _AREA_FIXTURE_DATA]
     raw = raw_from_cell_grids(spark, [(1, 0, grid)])
-    out = extract_all(raw)
-    prov = out["province"].select(
-        F.lit("province").alias("entity"),
-        "code",
-        F.lit(None).cast("string").alias("parent_code"),
-        "name",
+    return (
+        extract_all(raw)["area"]
+        .select("entity", "code", "parent_code", "name")
+        .orderBy("code", "entity")
     )
-    rest = [
-        out[e].select(F.lit(e).alias("entity"), "code", "parent_code", "name")
-        for e in ("regency", "district", "village")
-    ]
-    df = prov
-    for r in rest:
-        df = df.unionAll(r)
-    return df.orderBy("code", "entity")
 
 
 _AREA_VALUES = ", ".join(

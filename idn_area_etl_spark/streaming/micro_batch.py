@@ -21,7 +21,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from idn_area_etl_spark.operators.registry import extract_all
+from idn_area_etl_spark.operators.registry import entity_frames, extract_all
 from idn_area_etl_spark.sources.raw import RAW_TABLE_SCHEMA
 
 ENTITIES = ["province", "regency", "district", "village", "island"]
@@ -51,7 +51,7 @@ def run_micro_batch_pipeline(
     )
 
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        entities = extract_all(batch)
+        entities = entity_frames(extract_all(batch))
         for name in ENTITIES:
             df = entities[name]
             target = str(out_dir / name)

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from idn_area_etl_spark.operators import classify_tables, extract_all
+from idn_area_etl_spark.operators import classify_tables, entity_frames, extract_all
 from idn_area_etl_spark.operators.registry import with_routing
 from idn_area_etl_spark.sources import raw_from_cell_grids
 
@@ -113,7 +113,7 @@ def test_first_match_wins_precedence(spark):
 
 def test_area_happy_path(spark):
     raw = raw_from_cell_grids(spark, [(1, 0, area_grid())])
-    out = extract_all(raw)
+    out = entity_frames(extract_all(raw))
     assert rows_of(out["province"], ["code", "name"]) == [["11", "Aceh"]]
     assert rows_of(out["regency"], ["code", "parent_code", "name"]) == [
         ["11.01", "11", "Kabupaten Aceh Selatan"]
@@ -143,9 +143,9 @@ def test_area_six_column_variant(spark):
     routed = with_routing(raw, meta)
     from idn_area_etl_spark.operators.area import extract_areas
 
-    out = extract_areas(routed)
-    assert rows_of(out["province"], ["code", "name"]) == [["11", "Aceh"]]
-    assert rows_of(out["regency"], ["code", "parent_code", "name"]) == [
+    areas = extract_areas(routed)
+    assert rows_of(areas.where("entity = 'province'"), ["code", "name"]) == [["11", "Aceh"]]
+    assert rows_of(areas.where("entity = 'regency'"), ["code", "parent_code", "name"]) == [
         ["11.01", "11", "Kabupaten Aceh Selatan"]
     ]
 
@@ -164,7 +164,7 @@ def test_province_first_seen_dedup_across_tables(spark):
         ["12", "Sumatera Utara", "", "", "", "", ""],
     ]
     raw = raw_from_cell_grids(spark, [(1, 0, g1), (2, 0, g2)])
-    out = extract_all(raw)
+    out = entity_frames(extract_all(raw))
     assert rows_of(out["province"], ["code", "name"]) == [
         ["11", "Aceh"],
         ["12", "Sumatera Utara"],
@@ -173,7 +173,7 @@ def test_province_first_seen_dedup_across_tables(spark):
 
 def test_island_extract(spark):
     raw = raw_from_cell_grids(spark, [(1, 0, island_grid())])
-    out = extract_all(raw)["island"]
+    out = entity_frames(extract_all(raw))["island"]
     cols = ["code", "regency_code", "coordinate", "is_populated",
             "is_outermost_small", "name"]
     assert rows_of(out, cols) == [
@@ -190,7 +190,7 @@ def test_island_extract(spark):
 
 def test_island_messy_and_regencyless(spark):
     raw = raw_from_cell_grids(spark, [(1, 0, island_messy_grid())])
-    out = extract_all(raw)["island"]
+    out = entity_frames(extract_all(raw))["island"]
     cols = ["code", "regency_code", "coordinate", "is_populated",
             "is_outermost_small", "name"]
     assert rows_of(out, cols) == [
@@ -208,7 +208,7 @@ def test_island_name_equals_code_rescue(spark):
          "01°18'47.00\" U 124°30'46.00\" T"],
     ]
     raw = raw_from_cell_grids(spark, [(1, 0, grid)])
-    out = extract_all(raw)["island"]
+    out = entity_frames(extract_all(raw))["island"]
     [row] = out.collect()
     assert row["code"] == "12.01.40003"
     assert row["name"] == "Pulau 3"  # taken from idx_code + 1
@@ -223,7 +223,7 @@ def test_island_no_kode_column_yields_nothing(spark):
     raw = raw_from_cell_grids(spark, [(1, 0, grid)])
     # routed island (headers contain 'pulau' & 'kode'? no 'kode' header →
     # island classifier false) → nothing extracted anywhere
-    out = extract_all(raw)
+    out = entity_frames(extract_all(raw))
     assert all(df.count() == 0 for df in out.values())
 
 
@@ -235,7 +235,7 @@ def test_island_invalid_codes_filtered(spark):
         ["11.01.4000X", "Invalid char"],
     ]
     raw = raw_from_cell_grids(spark, [(1, 0, grid)])
-    assert extract_all(raw)["island"].count() == 0
+    assert entity_frames(extract_all(raw))["island"].count() == 0
 
 
 def test_island_status_column_missing_defaults_zero(spark):
@@ -245,9 +245,107 @@ def test_island_status_column_missing_defaults_zero(spark):
         ["2", "12.00.40001", "Pulau B", "03°31'33.49\" U 125°39'37.53\" T", "0", "1"],
     ]
     raw = raw_from_cell_grids(spark, [(1, 0, grid)])
-    out = extract_all(raw)["island"]
+    out = entity_frames(extract_all(raw))["island"]
     cols = ["code", "regency_code", "is_populated", "is_outermost_small"]
     assert rows_of(out, cols) == [
         ["12.01.40003", "12.01", 0, 0],
         ["12.00.40001", "", 0, 0],
     ]
+
+
+def _area_table(*rows: tuple[str, str]) -> list[list[str]]:
+    return [
+        ["K O D E", "NAMA PROVINSI", "", "", "", "", ""],
+        ["", "", "", "", "", "", ""],
+    ] + [[code, name, "", "", "", "", ""] for code, name in rows]
+
+
+def test_regency_code_in_two_tables_yields_two_rows(spark):
+    # the reference dedups provinces only (_seen_provinces)
+    raw = raw_from_cell_grids(spark, [
+        (1, 0, _area_table(("11.01", "Kabupaten Aceh Selatan"))),
+        (1, 1, _area_table(("11.01", "Kabupaten Aceh Selatan Lagi"))),
+    ])
+    out = entity_frames(extract_all(raw))
+    assert rows_of(out["regency"], ["code", "parent_code", "name"]) == [
+        ["11.01", "11", "Kabupaten Aceh Selatan"],
+        ["11.01", "11", "Kabupaten Aceh Selatan Lagi"],
+    ]
+
+
+def test_unclassifiable_code_lengths_are_dropped(spark):
+    raw = raw_from_cell_grids(spark, [(1, 0, _area_table(
+        ("1", "Satu"), ("111", "Tiga"), ("11.0", "Empat"), ("11.01.0", "Tujuh"),
+        ("11.01.01.20011", "Empat Belas"), ("12", "Sumatera Utara"),
+    ))])
+    areas = extract_all(raw)["area"]
+    assert areas.columns == [
+        "entity", "page_no", "table_no", "row_no", "code", "parent_code", "name",
+    ]
+    assert rows_of(areas, ["entity", "code", "parent_code", "name"]) == [
+        ["province", "12", None, "Sumatera Utara"]
+    ]
+
+
+PROVINCE_PAGES = [
+    [1, 0, _area_table(("11", "Aceh"), ("11.01", "Kabupaten Aceh Selatan"))],
+    [1, 1, _area_table(("11", "Aceh Tabel Dua"), ("12", "Sumatera Utara"))],
+    [2, 0, _area_table(("12", "Sumatera Utara Halaman Dua"), ("11", "Aceh Halaman Dua"))],
+]
+
+
+def test_cli_province_first_seen_with_one_page_chunks(spark, tmp_path):
+    import json
+
+    from idn_area_etl_spark.cli import main
+
+    fixture = tmp_path / "tables.json"
+    fixture.write_text(json.dumps(PROVINCE_PAGES))
+    dest = tmp_path / "out"
+    rc = main([
+        "doc.pdf", "-d", str(dest), "-o", "doc", "--chunk-size", "1",
+        "--fixture-json", str(fixture),
+    ])
+    assert rc == 0
+    assert (dest / "doc.province.csv").read_bytes() == (
+        b"code,name\r\n11,Aceh\r\n12,Sumatera Utara\r\n"
+    )
+
+
+#: py4j commands to build ``extract_all`` plus the exact sink query for
+#: the document below, about twice the 300 or so it takes.  Column-built
+#: projections and one area branch per level took ~3,400.
+MAX_BUILD_COMMANDS = 600
+
+
+def test_sink_query_builds_in_few_py4j_commands(spark):
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    from idn_area_etl_spark.config import default_config
+    from idn_area_etl_spark.writer import entity_sink_query
+
+    grids = [(1, 0, area_grid()), (1, 1, island_grid()), (2, 0, island_messy_grid())]
+
+    def build():
+        raw = raw_from_cell_grids(spark, grids)
+        return entity_sink_query(extract_all(raw), default_config())
+
+    build()  # first-use lookups are not part of the steady cost
+    send = ClientServerConnection.send_command
+    commands = []
+
+    def counting(self, command):
+        if not command.startswith("m"):  # GC of Python-side proxies
+            commands.append(command)
+        return send(self, command)
+
+    gc.disable()
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = send
+        gc.enable()
+    assert 0 < len(commands) <= MAX_BUILD_COMMANDS

@@ -97,7 +97,7 @@ def _run_in_group(spark, sf_dir, name):
 
 #: builder + action jobs at sf0.001: each round's convergence value or
 #: choice rides on its checkpoint, with no collect of its own.
-LOOP_JOBS = {"d_dedup_clusters": 31, "s_kcenter_coreset": 14, "g_pagerank_trade": 38}
+LOOP_JOBS = {"d_dedup_clusters": 28, "s_kcenter_coreset": 14, "g_pagerank_trade": 38}
 
 
 @pytest.mark.parametrize("name", sorted(LOOP_JOBS))

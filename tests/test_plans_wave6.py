@@ -87,6 +87,30 @@ def test_cc_random_graph_matches_union_find(spark):
     assert got == expected
 
 
+def test_cc_first_labels_round_reads_the_edge_checkpoint(spark, tmp_path, monkeypatch):
+    """The first labels round derives the nodes from the materialized
+    edge table's self-loops: its plan scans no input edges."""
+    from idn_area_etl_spark.operators import graph
+
+    path = str(tmp_path / "edges.parquet")
+    edges = [(1, 2), (2, 3), (3, 3), (10, 11)]  # (3, 3): an input self-loop
+    spark.createDataFrame(edges, "src long, dst long").write.parquet(path)
+    plans = []
+    checkpoint = graph._round
+
+    def recording(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(graph, "_round", recording)
+    labels = connected_components(spark.read.parquet(path))
+    got = {r.node: r.component for r in labels.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    sym_plan, labels_plan = plans[:2]
+    assert "parquet" in sym_plan
+    assert "parquet" not in labels_plan
+
+
 def test_dedup_clusters_group_planted_duplicates(spark, sf_dir):
     """Every cluster has exactly one representative (its min doc_id)
     and ≥2 members — these are near-dup groups, not singletons."""
