@@ -18,6 +18,14 @@ face of the ``p_curation_pipeline`` spec; every step is the same
 tested operator the query surface uses.  Scale shape: one
 content-hash shuffle (exact) or the banded-LSH equi-joins (fuzzy) —
 no cross products, no driver-side loops.
+
+Every expression is SQL text over column names (the quality score,
+the split bucket of :func:`split_sql`, the MinHash sketch, band keys
+and verify of ``operators/dedup.py``), parsed by the JVM in one call
+each, so building the fuzzy plan costs a few hundred py4j round-trips
+rather than one or more per expression node.  The stats line's counts
+are observed on the partitioned write itself (``count_if`` per
+split), so nothing is read back.
 """
 
 from __future__ import annotations
@@ -26,8 +34,27 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+#: the split names, in the order of their bucket ranges
+SPLITS = ("train", "val", "test")
+
+
+def split_sql(doc_id: str, train_pct: int, val_pct: int) -> str:
+    """SQL text of the deterministic split of column ``doc_id``: its
+    hash bucket in 0..99 (the first 13 hex digits of
+    ``md5('split:' || doc_id)``, mod 100) picks 'train' below
+    ``train_pct``, 'val' below ``train_pct + val_pct``, else 'test'."""
+    bucket = (
+        f"CAST(conv(substring(md5(concat('split:', CAST({doc_id} AS STRING))), 1, 13),"
+        " 16, 10) AS BIGINT) % 100"
+    )
+    return (
+        f"CASE WHEN {bucket} < {train_pct} THEN 'train'"
+        f" WHEN {bucket} < {train_pct + val_pct} THEN 'val' ELSE 'test' END"
+    )
 
 
 def curate(
@@ -46,15 +73,15 @@ def curate(
     from idn_area_etl_spark.operators.dedup import minhash_verified_pairs
     from idn_area_etl_spark.operators.text import quality_score_expr
 
-    scored = docs.withColumn("_q", quality_score_expr(F.col(text_col))).filter(
-        F.col("_q") >= quality_min
+    scored = docs.withColumn("_q", quality_score_expr(text_col)).where(
+        f"_q >= {float(quality_min)!r}D"
     )
 
     if mode == "exact":
-        # struct-min per content hash: map-side combinable, no window
+        # min doc_id per content hash: map-side combinable, no window
         rep = (
-            scored.groupBy(F.md5(text_col).alias("_h"))
-            .agg(F.min("doc_id").alias("doc_id"))
+            scored.groupBy(F.expr(f"md5({text_col}) AS _h"))
+            .agg(F.expr("min(doc_id) AS doc_id"))
             .select("doc_id")
         )
         kept = scored.join(rep, "doc_id", "left_semi")
@@ -65,29 +92,13 @@ def curate(
         pairs = minhash_verified_pairs(
             scored, threshold_num, threshold_den, text_col=text_col
         )
-        dup_ids = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+        dup_ids = pairs.selectExpr("doc_b AS doc_id").distinct()
         kept = scored.join(dup_ids, "doc_id", "left_anti")
     else:  # pragma: no cover - argparse restricts choices
         raise ValueError(f"unknown mode {mode!r}")
 
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    split = (
-        F.when(bucket < train_pct, "train")
-        .when(bucket < train_pct + val_pct, "val")
-        .otherwise("test")
-    )
-    return kept.drop("_q").withColumn("split", split)
+    split = split_sql("doc_id", train_pct, val_pct)
+    return kept.drop("_q").withColumn("split", F.expr(split))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -138,13 +149,15 @@ def main(argv: list[str] | None = None) -> int:
         train_pct=args.train_pct,
         val_pct=args.val_pct,
     )
-    curated.write.mode("overwrite").partitionBy("split").parquet(args.output)
-
-    out = spark.read.parquet(args.output)
-    by_split = {
-        r["split"]: r["n"]
-        for r in out.groupBy("split").agg(F.count("*").alias("n")).collect()
-    }
+    # the per-split counts ride on the write's own job; a split with no
+    # rows writes no directory and is left out, and the largest split
+    # comes first (the order a read-back of the output lists them in)
+    written = Observation()
+    curated.observe(
+        written, *[F.expr(f"count_if(split = '{s}') AS {s}") for s in SPLITS]
+    ).write.mode("overwrite").partitionBy("split").parquet(args.output)
+    counts = sorted(written.get.items(), key=lambda kv: -kv[1])
+    by_split = {s: n for s, n in counts if n}
     n_kept = sum(by_split.values())
     print(
         json.dumps(

@@ -62,7 +62,9 @@ def _replace(x: str, pattern: str, replacement: str = "") -> str:
 
 #: Python ``str.strip()``: all whitespace, where Spark's trim() only removes ' '
 _STRIP = r"^\s+|\s+$"
-_NEWLINE, _WHITESPACE = sql_string("\n"), sql_string(r"\s+")
+_NEWLINE = sql_string("\n")
+#: a whitespace run, as a SQL string literal
+WHITESPACE = sql_string(r"\s+")
 
 
 def py_strip(col: Column) -> Column:
@@ -114,7 +116,7 @@ def normalize_words_sql(x: str) -> str:
     """"K o d e" -> "Kode": if every whitespace-separated token is one
     char (or '/', '-'), join the tokens; else the stripped input."""
     return sql_let(strip_sql(x), "s", sql_let(
-        f"filter(split(s, {_WHITESPACE}), w -> w != '')", "t",
+        f"filter(split(s, {WHITESPACE}), w -> w != '')", "t",
         "CASE WHEN exists(t, w -> length(w) > 1 AND w NOT IN ('/', '-'))"
         " THEN s ELSE array_join(t, '') END",
     ))

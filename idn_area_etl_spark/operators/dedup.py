@@ -26,7 +26,13 @@ fuzzy mode of ``curate`` and ``streaming/fuzzy_dedup.py`` all share:
   Jaccard (the verify).
 
 Everything is native column expressions (xxhash64, higher-order
-aggregate/transform) — no Python in the row path.
+aggregate/transform) — no Python in the row path.  The shingler, the
+sketch's 64 minima, the band keys, the band-pair join and the verify
+are written as SQL text over column names (``selectExpr``,
+``F.expr``, lambdas as in ``functions/cleaning.py:map_sql``): the JVM
+parses each in one call, so building the fuzzy path costs a few
+hundred py4j round-trips rather than one or more per expression
+node.  The shingle helpers take a column name.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from idn_area_etl_spark.functions.cleaning import WHITESPACE, map_sql, sql_string
 from idn_area_etl_spark.operators.stage import _stage
 
 #: Mersenne-ish prime keeping (P-1)*A + B within int64.
@@ -47,7 +54,7 @@ _MINHASH_PARAMS = [
 ]
 
 
-def token_shingles_expr(text: Column, n: int = 3) -> Column:
+def token_shingles_expr(text: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles (w-shingling) — far more
     discriminative than char shingles on shared-vocabulary corpora,
     and ~10× fewer elements per doc.
@@ -65,27 +72,36 @@ def token_shingles_expr(text: Column, n: int = 3) -> Column:
 
     Fewer-than-n-token docs fall back to the whole normalized text
     (one shingle), whitespace-only to ``''``, NULL text to ``[NULL]``
-    — exactly the old semantics.
+    — exactly the old semantics.  ``text`` is a column name.
     """
-    grams = token_ngrams_expr(text, n)
-    norm = _norm_text_expr(text)
-    return F.array_distinct(
-        F.when(F.size(grams) > 0, grams).otherwise(F.array(norm))
+    grams = _ngrams_sql(text, n)
+    return F.expr(
+        f"array_distinct(CASE WHEN size({grams}) > 0 THEN {grams}"
+        f" ELSE array({_norm_text_sql(text)}) END)"
     )
 
 
-def _norm_text_expr(text: Column) -> Column:
+def _norm_text_sql(text: str) -> str:
     """Whitespace-collapsed, trimmed, lowercased text (the shingle
     normalization)."""
-    return F.trim(F.lower(F.regexp_replace(text, r"\s+", " ")))
+    return f"trim(lower(regexp_replace({text}, {WHITESPACE}, ' ')))"
 
 
-def token_ngrams_expr(text: Column, n: int = 3) -> Column:
-    """ALL positional word n-grams (duplicates kept, one per token
-    start) via the same single-regex-scan shape as
-    :func:`token_shingles_expr`; empty for texts with < n tokens."""
+def _ngrams_sql(text: str, n: int) -> str:
     pat = r"(?=(" + " ".join([r"\S+"] * n) + r"))\S+ ?"
-    return F.regexp_extract_all(_norm_text_expr(text), F.lit(pat), 1)
+    return f"regexp_extract_all({_norm_text_sql(text)}, {sql_string(pat)}, 1)"
+
+
+def token_ngrams_expr(text: str, n: int = 3) -> Column:
+    """ALL positional word n-grams of column ``text`` (duplicates kept,
+    one per token start) via the same single-regex-scan shape as
+    :func:`token_shingles_expr`; empty for texts with < n tokens."""
+    return F.expr(_ngrams_sql(text, n))
+
+
+def _hashed_shingles(text: str, n: int) -> Column:
+    """:func:`token_shingles_expr` with each shingle xxhash64'd."""
+    return map_sql(token_shingles_expr(text, n), lambda s: f"xxhash64({s})")
 
 
 def exact_dedup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -122,7 +138,7 @@ def contamination_overlap(
     all-pairs comparison and no shuffle of the corpus text itself.
     """
     sh = docs.select(
-        "doc_id", token_shingles_expr(F.col(text_col), n).alias("shingles")
+        "doc_id", token_shingles_expr(text_col, n).alias("shingles")
     )
     bench = (
         sh.filter(F.col("doc_id") % mod == 0)
@@ -271,9 +287,7 @@ def _blocked_jaccard(docs: DataFrame, n: int, text_col: str) -> DataFrame:
         "doc_id",
         "lang",
         F.floor(F.length(text_col) / 100).cast("int").alias("len_band"),
-        F.transform(
-            token_shingles_expr(F.col(text_col), n), lambda s: F.xxhash64(s)
-        ).alias("shingles"),
+        _hashed_shingles(text_col, n).alias("shingles"),
     )
     # materialize the shingle stage once — both self-join sides read it
     sh = _stage(sh)
@@ -320,32 +334,23 @@ def _minhash_sketch(
     already distinct and xxhash64 never returns NULL, so set semantics
     are exact.  A caller that selects only the minima gets a plan
     without the ``collect_set`` (column pruning drops it)."""
-    p = F.lit(MINHASH_PRIME).cast("long")
+    p = f"CAST({MINHASH_PRIME} AS BIGINT)"
     exploded = docs.select(
-        "doc_id",
-        F.explode_outer(
-            F.transform(
-                token_shingles_expr(F.col(text_col), n),
-                lambda s: F.xxhash64(s),
-            )
-        ).alias("_h"),
+        "doc_id", F.explode_outer(_hashed_shingles(text_col, n)).alias("_h")
     )
     return exploded.groupBy("doc_id").agg(
         *[
-            F.min(
-                F.pmod(F.pmod(F.col("_h"), p) * F.lit(a) + F.lit(b), p)
-            ).alias(f"_m{i}")
+            F.expr(f"min(pmod(pmod(_h, {p}) * {a} + {b}, {p})) AS _m{i}")
             for i, (a, b) in enumerate(_MINHASH_PARAMS[:num_hashes])
         ],
-        F.collect_set("_h").alias("sh"),
+        F.expr("collect_set(_h) AS sh"),
     )
 
 
-def _signature(num_hashes: int) -> Column:
-    """The sketch minima as one ``signature`` array column."""
-    return F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias(
-        "signature"
-    )
+def _signature(num_hashes: int) -> str:
+    """The sketch minima as one ``signature`` array, as SQL text."""
+    minima = ", ".join(f"_m{i}" for i in range(num_hashes))
+    return f"array({minima}) AS signature"
 
 
 def _band_keys(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
@@ -358,23 +363,15 @@ def _band_keys(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     a Python constant, so the struct array is plain column expressions
     (whole-stage codegen), not an interpreted ``transform`` lambda over
     ``sequence``."""
-    sig = F.col("signature")
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(bno).alias("band_no"),
-                F.xxhash64(
-                    F.lit(bno),
-                    *[
-                        F.get(sig, bno * rows_per_band + j)
-                        for j in range(rows_per_band)
-                    ],
-                ).alias("band_hash"),
-            )
-            for bno in range(bands)
-        ]
+    entries = ", ".join(
+        f"named_struct('band_no', {bno}, 'band_hash', xxhash64({bno}, "
+        + ", ".join(
+            f"get(signature, {bno * rows_per_band + j})" for j in range(rows_per_band)
+        )
+        + "))"
+        for bno in range(bands)
     )
-    return sigs.select("doc_id", F.explode(entries).alias("band")).select(
+    return sigs.selectExpr("doc_id", f"explode(array({entries})) AS band").selectExpr(
         "doc_id", "band.band_no", "band.band_hash"
     )
 
@@ -384,8 +381,8 @@ def _sets_and_keys(
 ) -> tuple[DataFrame, DataFrame]:
     """The two views of a sketch the joins read: the verify sets
     ``(doc_id, sh, nsh)`` and the band keys of :func:`_band_keys`."""
-    sets = sketch.select("doc_id", "sh", F.size("sh").alias("nsh"))
-    sigs = sketch.select("doc_id", _signature(num_hashes))
+    sets = sketch.selectExpr("doc_id", "sh", "size(sh) AS nsh")
+    sigs = sketch.selectExpr("doc_id", _signature(num_hashes))
     return sets, _band_keys(sigs, bands, num_hashes // bands)
 
 
@@ -398,14 +395,8 @@ def _band_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
     the join condition."""
     a, b = left.alias("a"), right.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_hash") == F.col("b.band_hash")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+        a.join(b, F.expr("a.band_no = b.band_no AND a.band_hash = b.band_hash"))
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
         .distinct()
     )
 
@@ -421,35 +412,20 @@ def _verify_jaccard(
     with ``jaccard >= num/den``, tested in exact integers
     (``inter*den >= union*num``, no float edge)."""
     id_a, id_b = cand.columns
-    sets_a = left.select(
-        F.col("doc_id").alias(id_a),
-        F.col("sh").alias("sh_a"),
-        F.col("nsh").alias("n_a"),
-    )
-    sets_b = right.select(
-        F.col("doc_id").alias(id_b),
-        F.col("sh").alias("sh_b"),
-        F.col("nsh").alias("n_b"),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    sets_a = left.selectExpr(f"doc_id AS {id_a}", "sh AS sh_a", "nsh AS n_a")
+    sets_b = right.selectExpr(f"doc_id AS {id_b}", "sh AS sh_b", "nsh AS n_b")
+    inter = "size(array_intersect(sh_a, sh_b))"
     return (
         cand.join(sets_a, id_a)
         .join(sets_b, id_b)
-        .select(
-            id_a,
-            id_b,
-            inter.alias("n_inter"),
-            (F.col("n_a") + F.col("n_b") - inter).alias("n_union"),
-        )
-        .filter(F.col("n_inter") * F.lit(den) >= F.col("n_union") * F.lit(num))
-        .select(
+        .selectExpr(id_a, id_b, f"{inter} AS n_inter", f"n_a + n_b - {inter} AS n_union")
+        .where(f"n_inter * {den} >= n_union * {num}")
+        .selectExpr(
             id_a,
             id_b,
             "n_inter",
             "n_union",
-            F.round(
-                F.col("n_inter").cast("double") / F.col("n_union"), 6
-            ).alias("jaccard"),
+            "round(CAST(n_inter AS DOUBLE) / n_union, 6) AS jaccard",
         )
     )
 
@@ -463,7 +439,7 @@ def minhash_signatures(
     """MinHash signatures: min over word-n-gram shingles of affine
     permutations of xxhash64(shingle) mod P.  num_hashes independent
     permutations → E[matching fraction] = Jaccard similarity."""
-    return _minhash_sketch(docs, num_hashes, n, text_col).select(
+    return _minhash_sketch(docs, num_hashes, n, text_col).selectExpr(
         "doc_id", _signature(num_hashes)
     )
 
@@ -488,24 +464,16 @@ def minhash_candidates(
     # signatures; staged, the regex-shingle scan runs once
     sigs = _stage(minhash_signatures(docs, num_hashes, n, text_col))
     keys = _band_keys(sigs, bands, num_hashes // bands)
-    cand = _band_pairs(keys, keys).filter(F.col("doc_a") < F.col("doc_b"))
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a")
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b")
-    )
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda same: same,
-        )
-    ).cast("double") / F.lit(float(num_hashes))
+    cand = _band_pairs(keys, keys).where("doc_a < doc_b")
+    sa = sigs.selectExpr("doc_id AS doc_a", "signature AS sig_a")
+    sb = sigs.selectExpr("doc_id AS doc_b", "signature AS sig_b")
+    same = "filter(zip_with(sig_a, sig_b, (x, y) -> x = y), same -> same)"
+    est = f"CAST(size({same}) AS DOUBLE) / {float(num_hashes)!r}D"
     return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(est, 6).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
+        .selectExpr("doc_a", "doc_b", f"round({est}, 6) AS est_jaccard")
+        .where(f"est_jaccard >= {float(threshold)!r}D")
     )
 
 
@@ -549,7 +517,7 @@ def minhash_verified_pairs(
     # to a table between jobs.
     sketch = _stage(_minhash_sketch(docs, num_hashes, n, text_col))
     sets, keys = _sets_and_keys(sketch, num_hashes, bands)
-    cand = _band_pairs(keys, keys).filter(F.col("doc_a") < F.col("doc_b"))
+    cand = _band_pairs(keys, keys).where("doc_a < doc_b")
     return _verify_jaccard(cand, sets, sets, threshold_num, threshold_den)
 
 
@@ -720,7 +688,7 @@ def prefix_jaccard_join(
         docs.filter(n_tokens >= n)
         .select(
             "doc_id",
-            token_shingles_expr(F.col(text_col), n).alias("sh"),
+            token_shingles_expr(text_col, n).alias("sh"),
         )
         .select("doc_id", "sh", F.size("sh").alias("nsh"))
     )

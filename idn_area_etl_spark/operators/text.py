@@ -12,6 +12,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from idn_area_etl_spark.functions.cleaning import WHITESPACE, sql_string
+
 #: BPE-ish tokenization: word runs or single non-word-non-space chars.
 BPE_TOKEN_PATTERN = r"\w+|[^\w\s]"
 
@@ -44,27 +46,26 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score_expr(text: Column) -> Column:
-    """Composite quality score in [0, 1]:
+def quality_score_expr(text: str) -> Column:
+    """Composite quality score in [0, 1] of column ``text``:
 
     0.4·stopword-ratio + 0.3·length-norm + 0.3·(1 − punct-ratio).
 
     Single per-row IEEE expression (deterministic), rounded to 6 dp to
-    pin the cross-engine comparison.
+    pin the cross-engine comparison.  Built as one parsed SQL string;
+    its constants are ``D`` (double) literals, as a bare ``0.4`` is a
+    decimal in Spark SQL.
     """
-    n_tokens = F.size(_ws_tokens(text))
+    stopwords, punct = sql_string(QUALITY_STOPWORDS), sql_string(r"[^\w\s]")
     stop_ratio = (
-        F.regexp_count(F.lower(text), F.lit(QUALITY_STOPWORDS)).cast("double")
-        / n_tokens
+        f"CAST(regexp_count(lower({text}), {stopwords}) AS DOUBLE)"
+        f" / size(split(trim({text}), {WHITESPACE}))"
     )
-    len_norm = F.least(F.lit(1.0), F.length(text).cast("double") / F.lit(500.0))
-    punct_ratio = (
-        F.regexp_count(text, F.lit(r"[^\w\s]")).cast("double") / F.length(text)
-    )
-    return F.round(
-        F.lit(0.4) * stop_ratio + F.lit(0.3) * len_norm
-        + F.lit(0.3) * (F.lit(1.0) - punct_ratio),
-        6,
+    len_norm = f"least(1.0D, CAST(length({text}) AS DOUBLE) / 500.0D)"
+    punct_ratio = f"CAST(regexp_count({text}, {punct}) AS DOUBLE) / length({text})"
+    return F.expr(
+        f"round(0.4D * ({stop_ratio}) + 0.3D * {len_norm}"
+        f" + 0.3D * (1.0D - {punct_ratio}), 6)"
     )
 
 

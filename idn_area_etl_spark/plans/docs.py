@@ -74,7 +74,7 @@ ORDER BY doc_id
 def d_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     return docs.select(
-        "doc_id", quality_score_expr(F.col("text")).alias("quality")
+        "doc_id", quality_score_expr("text").alias("quality")
     )
 
 

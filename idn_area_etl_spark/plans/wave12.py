@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from idn_area_etl_spark.curate import split_sql
+from idn_area_etl_spark.functions.cleaning import WHITESPACE
 from idn_area_etl_spark.operators.stage import _stage
 from idn_area_etl_spark.operators.text import quality_score_expr
 from idn_area_etl_spark.plans.registry import QuerySpec
@@ -33,9 +35,9 @@ def p_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "text",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
-        quality_score_expr(F.col("text")).alias("quality"),
-    ).filter(F.col("quality") >= QUALITY_MIN)
+        F.expr(f"size(split(trim(text), {WHITESPACE})) AS n_tokens"),
+        quality_score_expr("text").alias("quality"),
+    ).where(f"quality >= {QUALITY_MIN!r}D")
 
     # First-copy representative: min(doc_id) per content hash with a
     # PRIMITIVE agg buffer → HashAggregate with map-side partial
@@ -48,35 +50,20 @@ def p_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort by far more.  The stage keeps the scoring regex to ONE
     # pass, carrying only 4 narrow columns (never the text).
     small = _stage(
-        scored.select(
-            "doc_id", "lang", "n_tokens", F.md5("text").alias("content_hash")
-        )
+        scored.selectExpr("doc_id", "lang", "n_tokens", "md5(text) AS content_hash")
     )
-    reps = small.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
+    reps = small.groupBy("content_hash").agg(F.expr("min(doc_id) AS doc_id"))
     deduped = (
         reps.select("doc_id")
         .join(small, "doc_id")
         .select("doc_id", "lang", "n_tokens")
     )
-
-    v = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-            1,
-            13,
-        ),
-        16,
-        10,
-    ).cast("long")
-    pct = v % 100
-    split = F.when(pct < 80, "train").when(pct < 90, "val").otherwise("test")
-
     return (
-        deduped.select("lang", "n_tokens", split.alias("split"))
+        deduped.selectExpr("lang", "n_tokens", f"{split_sql('doc_id', 80, 10)} AS split")
         .groupBy("split", "lang")
         .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("total_tokens"),
+            F.expr("count(*) AS n_docs"),
+            F.expr("CAST(sum(n_tokens) AS BIGINT) AS total_tokens"),
         )
         .orderBy("split", "lang")
     )

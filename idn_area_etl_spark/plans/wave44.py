@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from idn_area_etl_spark.functions.cleaning import WHITESPACE, sql_string
 from idn_area_etl_spark.operators.dedup import (
     prefix_jaccard_join,
     token_shingles_expr,
@@ -44,10 +45,9 @@ from idn_area_etl_spark.plans.registry import QuerySpec
 from idn_area_etl_spark.sources.tables import load_table
 
 
-def _ws_tokens(col):
-    return F.filter(
-        F.split(F.lower(F.trim(col)), r"\s+"), lambda t: t != F.lit("")
-    )
+def _ws_tokens(text: str) -> str:
+    """SQL text: the lowercased whitespace tokens of ``text``, blanks dropped."""
+    return f"filter(split(lower(trim({text})), {WHITESPACE}), t -> t != '')"
 
 
 # ------------------------------------------------------------------ #
@@ -145,27 +145,18 @@ def dsir_rollup(docs: DataFrame, target_lang: str = "en") -> DataFrame:
     tok = _stage(doc_token_counts(docs))
     vocab = _stage(
         tok.groupBy("w").agg(
-            F.sum("cnt").alias("rc"),
-            F.sum(
-                F.when(F.col("lang") == target_lang, F.col("cnt")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("tc"),
+            F.expr("sum(cnt) AS rc"),
+            F.expr(
+                f"sum(CASE WHEN lang = {sql_string(target_lang)} THEN cnt ELSE 0 END) AS tc"
+            ),
         )
     )
     totals = vocab.agg(
-        F.sum("rc").alias("R"),
-        F.sum("tc").alias("T"),
-        F.count("*").alias("V"),
+        F.expr("sum(rc) AS R"), F.expr("sum(tc) AS T"), F.expr("count(*) AS V")
     )
-    ratio = vocab.crossJoin(F.broadcast(totals)).select(
+    ratio = vocab.crossJoin(F.broadcast(totals)).selectExpr(
         "w",
-        (
-            F.log((F.col("tc") + 1).cast("double") / (F.col("T") + F.col("V")))
-            - F.log(
-                (F.col("rc") + 1).cast("double") / (F.col("R") + F.col("V"))
-            )
-        ).alias("lr"),
+        "ln(CAST(tc + 1 AS DOUBLE) / (T + V)) - ln(CAST(rc + 1 AS DOUBLE) / (R + V)) AS lr",
     )
     # NO broadcast hint on ratio: it has one row per distinct raw token;
     # on a web-scale corpus the whitespace-token vocabulary is billions
@@ -182,22 +173,18 @@ def dsir_rollup(docs: DataFrame, target_lang: str = "en") -> DataFrame:
             # SUM aggregate keeps the ORIGINAL per-occurrence sum's
             # decimal type, so the downstream mean division is
             # bit-identical to the pre-r8 plan
-            F.sum(
-                (
-                    F.col("lr").cast("decimal(27,12)")
-                    * F.col("cnt").cast("decimal(10,0)")
-                ).cast("decimal(27,12)")
-            ).alias("score")
+            F.expr(
+                "sum(CAST(CAST(lr AS DECIMAL(27,12)) * CAST(cnt AS DECIMAL(10,0))"
+                " AS DECIMAL(27,12))) AS score"
+            )
         )
     )
     return (
         scores.groupBy("lang")
         .agg(
-            F.count("*").alias("n_docs"),
-            F.round(
-                (F.sum("score") / F.count("*")).cast("double"), 6
-            ).alias("mean_score"),
-            F.sum((F.col("score") > 0).cast("long")).alias("n_selected"),
+            F.expr("count(*) AS n_docs"),
+            F.expr("round(CAST(sum(score) / count(*) AS DOUBLE), 6) AS mean_score"),
+            F.expr("sum(CAST(score > 0 AS BIGINT)) AS n_selected"),
         )
         .orderBy("lang")
     )
@@ -211,36 +198,16 @@ def doc_token_counts(docs: DataFrame) -> DataFrame:
     Equality with ``explode → groupBy(doc_id, lang, w) → count`` is
     pinned by tests/test_wave44.py (doc_id is unique per input row in
     every caller, so per-row and per-key counting coincide)."""
-    starts = F.filter(
-        F.transform(F.col("st"), lambda _, i: i),
-        lambda i: (i == F.lit(0))
-        | (F.get(F.col("st"), i - 1) != F.get(F.col("st"), i)),
-    )
-    runs = F.transform(
-        F.col("starts"),
-        lambda s, j: F.struct(
-            F.get(F.col("st"), s).alias("w"),
-            (
-                F.coalesce(F.get(F.col("starts"), j + 1), F.size("st")) - s
-            )
-            .cast("long")
-            .alias("cnt"),
-        ),
+    starts = "filter(transform(st, (x, i) -> i), i -> i = 0 OR get(st, i - 1) != get(st, i))"
+    runs = (
+        "transform(starts, (s, j) -> named_struct('w', get(st, s),"
+        " 'cnt', CAST(coalesce(get(starts, j + 1), size(st)) - s AS BIGINT)))"
     )
     return (
-        docs.select(
-            "doc_id",
-            "lang",
-            F.array_sort(_ws_tokens(F.col("text"))).alias("st"),
-        )
-        .select("doc_id", "lang", "st", starts.alias("starts"))
-        .select("doc_id", "lang", F.explode(runs).alias("e"))
-        .select(
-            "doc_id",
-            "lang",
-            F.col("e.w").alias("w"),
-            F.col("e.cnt").alias("cnt"),
-        )
+        docs.selectExpr("doc_id", "lang", f"array_sort({_ws_tokens('text')}) AS st")
+        .selectExpr("doc_id", "lang", "st", f"{starts} AS starts")
+        .selectExpr("doc_id", "lang", f"explode({runs}) AS e")
+        .selectExpr("doc_id", "lang", "e.w AS w", "e.cnt AS cnt")
     )
 
 
@@ -295,11 +262,11 @@ def d_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared regex-scan shingler (>=8-token filter means its
     # whole-text fallback never fires → exactly the 8-gram windows)
     tok = (
-        docs.filter(F.size(_ws_tokens(F.col("text"))) >= 8)
+        docs.where(f"size({_ws_tokens('text')}) >= 8")
         .select(
             "doc_id",
             "lang",
-            token_shingles_expr(F.col("text"), 8).alias("sh"),
+            token_shingles_expr("text", 8).alias("sh"),
         )
     )
     # r9-opt (guide §2.4): ex feeds the duplicate-shingle vocabulary
@@ -394,9 +361,7 @@ def s_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the captured plan); staged, one scan (guide §2.4).
     per_lang = _stage(
         docs.groupBy("lang").agg(
-            F.sum(F.size(_ws_tokens(F.col("text"))).cast("long")).alias(
-                "n_tokens"
-            )
+            F.expr(f"sum(CAST(size({_ws_tokens('text')}) AS BIGINT)) AS n_tokens")
         )
     )
     tot = per_lang.agg(

@@ -123,7 +123,7 @@ def d_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "lang",
             *[
-                token_ngrams_expr(F.col("text"), n).alias(f"g{n}")
+                token_ngrams_expr("text", n).alias(f"g{n}")
                 for n in (1, 2, 3)
             ],
         )

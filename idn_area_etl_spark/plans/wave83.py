@@ -79,7 +79,7 @@ def s_decontaminate_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.filter(F.size("ws") >= 8).select(
             "doc_id",
             "is_test",
-            F.explode(token_shingles_expr(F.col("text"), 8)).alias("s"),
+            F.explode(token_shingles_expr("text", 8)).alias("s"),
         )
     )
     test_shingles = sh.filter(F.col("is_test")).select("s").distinct()

@@ -261,7 +261,7 @@ def d_test_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = base.select(
         "lang",
         "is_test",
-        F.explode(token_shingles_expr(F.col("text"), 2)).alias("g"),
+        F.explode(token_shingles_expr("text", 2)).alias("g"),
     )
     # r9-opt (guide §2.3/§2.4): ONE (lang, gram) rollup carrying
     # test/train membership flags replaces the two distinct passes +

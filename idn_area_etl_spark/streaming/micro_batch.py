@@ -22,6 +22,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from idn_area_etl_spark.operators.registry import entity_frames, extract_all
+from idn_area_etl_spark.operators.stage import _stage, staged_scope
 from idn_area_etl_spark.sources.raw import RAW_TABLE_SCHEMA
 
 ENTITIES = ["province", "regency", "district", "village", "island"]
@@ -51,19 +52,23 @@ def run_micro_batch_pipeline(
     )
 
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        entities = entity_frames(extract_all(batch))
-        for name in ENTITIES:
-            df = entities[name]
-            target = str(out_dir / name)
-            if name == "province":
-                # cross-batch first-seen: codes already in the sink win
-                # (reference _seen_provinces semantics, restart-safe)
-                try:
-                    seen = batch.sparkSession.read.parquet(target).select("code")
-                    df = df.join(seen, "code", "left_anti")
-                except Exception:  # noqa: BLE001 - sink not created yet
-                    pass
-            df.write.mode("append").parquet(target)
+        # the four area levels are filters of one area frame: staged,
+        # the batch is routed, cleaned and classified once, not per level
+        with staged_scope():
+            extracted = extract_all(batch)
+            entities = entity_frames({**extracted, "area": _stage(extracted["area"])})
+            for name in ENTITIES:
+                df = entities[name]
+                target = str(out_dir / name)
+                if name == "province":
+                    # cross-batch first-seen: codes already in the sink win
+                    # (reference _seen_provinces semantics, restart-safe)
+                    try:
+                        seen = batch.sparkSession.read.parquet(target).select("code")
+                        df = df.join(seen, "code", "left_anti")
+                    except Exception:  # noqa: BLE001 - sink not created yet
+                        pass
+                df.write.mode("append").parquet(target)
 
     query = (
         stream.writeStream.foreachBatch(process_batch)

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import gc
 import os
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -34,6 +36,38 @@ def pytest_collection_modifyitems(config, items):
         fixtures = set(getattr(item, "fixturenames", ()))
         if item.module.__name__ in _SLOW_MODULES or fixtures & _SLOW_FIXTURES:
             item.add_marker(skip)
+
+
+@contextmanager
+def _count_py4j_commands():
+    """The py4j commands the block sends to the JVM, collected into the
+    yielded list.  Garbage collection is off for the block and the
+    ``m`` (memory) commands that release Python-side proxies are not
+    counted: when the collector runs is not part of a plan's cost."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    commands: list[str] = []
+
+    def counting(self, command):
+        if not command.startswith("m"):
+            commands.append(command)
+        return send(self, command)
+
+    gc.disable()
+    ClientServerConnection.send_command = counting
+    try:
+        yield commands
+    finally:
+        ClientServerConnection.send_command = send
+        gc.enable()
+
+
+@pytest.fixture(scope="session")
+def py4j_commands():
+    """``with py4j_commands() as commands:`` counts the block's driver
+    round-trips (see :func:`_count_py4j_commands`)."""
+    return _count_py4j_commands
 
 
 @pytest.fixture(scope="session")

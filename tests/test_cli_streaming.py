@@ -91,7 +91,8 @@ def test_cli_zero_rows_exits_1(spark, tmp_path: Path):
     assert rc == 1
 
 
-def test_streaming_micro_batches_dedup_across_chunks(spark, tmp_path: Path):
+def _write_chunks(spark, in_dir: Path) -> None:
+    """Two page-chunks; province '11' appears in both."""
     chunk1 = [
         (1, 0, AREA_GRID),
     ]
@@ -103,14 +104,16 @@ def test_streaming_micro_batches_dedup_across_chunks(spark, tmp_path: Path):
             ["12", "Sumatera Utara", "", "", "", "", ""],
         ]),
     ]
-    in_dir = tmp_path / "raw_stream"
     in_dir.mkdir()
-    raw_from_cell_grids(spark, chunk1).coalesce(1).write.parquet(
-        str(in_dir / "chunk1.parquet")
-    )
-    raw_from_cell_grids(spark, chunk2).coalesce(1).write.parquet(
-        str(in_dir / "chunk2.parquet")
-    )
+    for name, chunk in (("chunk1", chunk1), ("chunk2", chunk2)):
+        raw_from_cell_grids(spark, chunk).coalesce(1).write.parquet(
+            str(in_dir / f"{name}.parquet")
+        )
+
+
+def test_streaming_micro_batches_dedup_across_chunks(spark, tmp_path: Path):
+    in_dir = tmp_path / "raw_stream"
+    _write_chunks(spark, in_dir)
     counts = run_micro_batch_pipeline(
         spark, str(in_dir / "*" ), str(tmp_path / "out")
     )
@@ -122,6 +125,39 @@ def test_streaming_micro_batches_dedup_across_chunks(spark, tmp_path: Path):
         for r in spark.read.parquet(str(tmp_path / "out" / "province")).collect()
     }
     assert provinces == {"11": "Aceh", "12": "Sumatera Utara"}
+
+
+def test_streaming_micro_batch_materializes_its_area_rows_once(
+    spark, tmp_path: Path, monkeypatch
+):
+    """The four area-level writes of a micro-batch read one staged area
+    frame: a probe filter on the area rows counts every row it
+    evaluates, so each of the 5 area rows (3 in chunk 1, 2 in chunk 2)
+    is seen once, not once per level.  The probe is nondeterministic,
+    so no level filter can be pushed below it."""
+    from pyspark.sql import functions as F
+
+    from idn_area_etl_spark.streaming import micro_batch
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(code):
+        seen.add(1)
+        return True
+
+    probe = F.udf(count_row, "boolean").asNondeterministic()
+    extract_all = micro_batch.extract_all
+
+    def probed(batch):
+        extracted = extract_all(batch)
+        return {**extracted, "area": extracted["area"].where(probe("code"))}
+
+    monkeypatch.setattr(micro_batch, "extract_all", probed)
+    in_dir = tmp_path / "raw_stream"
+    _write_chunks(spark, in_dir)
+    counts = run_micro_batch_pipeline(spark, str(in_dir / "*"), str(tmp_path / "out"))
+    assert (counts["province"], counts["regency"], counts["district"]) == (2, 1, 1)
+    assert seen.value == 5
 
 
 # ---------------------------------------------------------------------------

@@ -126,7 +126,7 @@ def test_token_shingles_edge_semantics(spark):
         r.doc_id: r.sh
         for r in rows.select(
             "doc_id",
-            F.array_sort(token_shingles_expr(F.col("text"), 3)).alias("sh"),
+            F.array_sort(token_shingles_expr("text", 3)).alias("sh"),
         ).collect()
     }
     assert got[1] == ["a b c", "b c d", "c d e"]

@@ -318,11 +318,7 @@ def test_cli_province_first_seen_with_one_page_chunks(spark, tmp_path):
 MAX_BUILD_COMMANDS = 600
 
 
-def test_sink_query_builds_in_few_py4j_commands(spark):
-    import gc
-
-    from py4j.clientserver import ClientServerConnection
-
+def test_sink_query_builds_in_few_py4j_commands(spark, py4j_commands):
     from idn_area_etl_spark.config import default_config
     from idn_area_etl_spark.writer import entity_sink_query
 
@@ -333,19 +329,6 @@ def test_sink_query_builds_in_few_py4j_commands(spark):
         return entity_sink_query(extract_all(raw), default_config())
 
     build()  # first-use lookups are not part of the steady cost
-    send = ClientServerConnection.send_command
-    commands = []
-
-    def counting(self, command):
-        if not command.startswith("m"):  # GC of Python-side proxies
-            commands.append(command)
-        return send(self, command)
-
-    gc.disable()
-    ClientServerConnection.send_command = counting
-    try:
+    with py4j_commands() as commands:
         build()
-    finally:
-        ClientServerConnection.send_command = send
-        gc.enable()
     assert 0 < len(commands) <= MAX_BUILD_COMMANDS

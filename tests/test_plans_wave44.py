@@ -90,7 +90,7 @@ def test_doc_token_counts_equals_groupby_rollup(spark, sf_dir):
             docs.select(
                 "doc_id",
                 "lang",
-                F.explode(wave44._ws_tokens(F.col("text"))).alias("w"),
+                F.explode(F.expr(wave44._ws_tokens("text"))).alias("w"),
             )
             .groupBy("doc_id", "lang", "w")
             .agg(F.count("*").cast("long").alias("cnt"))

@@ -32,7 +32,7 @@ def test_token_stats(spark):
 def test_quality_score_bounds(spark):
     docs = make_docs(spark, ["the of and to in is a " * 20, "zzz!!!"])
     rows = {r["doc_id"]: r["q"] for r in docs.select(
-        "doc_id", quality_score_expr(F.col("text")).alias("q")).collect()}
+        "doc_id", quality_score_expr("text").alias("q")).collect()}
     assert 0.0 <= rows[1] < rows[0] <= 1.1
 
 

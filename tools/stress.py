@@ -140,7 +140,7 @@ def _curation(docs: DataFrame) -> DataFrame:
         F.lit("syn").alias("lang"),
         "text",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
-        quality_score_expr(F.col("text")).alias("quality"),
+        quality_score_expr("text").alias("quality"),
     ).filter(F.col("quality") >= 0.0)
     small = _stage(
         scored.select(
