@@ -4,8 +4,11 @@ Prints exactly ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query executes fully via the noop sink (no driver collect, no
-column pruning of the measured expressions).  Set SPARK_GRAFT_QUERIES
-to a comma-separated subset to bench specific queries.
+column pruning of the measured expressions).  Additive keys: ``spread``
+(max - min of a query's five timed runs) and ``codegen_compiles``
+(generated classes compiled during them; 0 once the warm-ups have
+filled the codegen cache).  Set SPARK_GRAFT_QUERIES to a
+comma-separated subset to bench specific queries.
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from idn_area_etl_spark.plans import all_specs  # noqa: E402
-from idn_area_etl_spark.session import get_spark  # noqa: E402
+from idn_area_etl_spark.session import compiled_classes, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -45,6 +48,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in names:
         builder = specs[name].builder
         # two untimed warmups, then best-of-5: C2 JIT of generated
@@ -56,6 +60,7 @@ def main() -> None:
         for _ in range(2):
             builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
         runs = []
+        compiles_before = compiled_classes(spark)
         for _ in range(5):
             df = builder(spark, sf_dir)
             start = time.perf_counter()
@@ -67,6 +72,7 @@ def main() -> None:
         # (VERDICT r8 item 7).  Additive top-level key — the `queries`
         # map stays exactly query -> best-of-5 seconds.
         spreads[name] = round(max(runs) - min(runs), 3)
+        compiles[name] = compiled_classes(spark) - compiles_before
 
     total = round(sum(timings.values()), 3)
     print(
@@ -77,6 +83,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "spread": spreads,
+                "codegen_compiles": compiles,
                 "sf": sf,
             }
         )

@@ -22,10 +22,10 @@ no cross products, no driver-side loops.
 Every expression is SQL text over column names (the quality score,
 the split bucket of :func:`split_sql`, the MinHash sketch, band keys
 and verify of ``operators/dedup.py``), parsed by the JVM in one call
-each, so building the fuzzy plan costs a few hundred py4j round-trips
-rather than one or more per expression node.  The stats line's counts
-are observed on the partitioned write itself (``count_if`` per
-split), so nothing is read back.
+each, so building the fuzzy plan costs under two hundred py4j
+round-trips rather than one or more per expression node.  The stats
+line's counts are observed on the partitioned write itself
+(``count_if`` per split), so nothing is read back.
 """
 
 from __future__ import annotations

@@ -29,10 +29,11 @@ Everything is native column expressions (xxhash64, higher-order
 aggregate/transform) — no Python in the row path.  The shingler, the
 sketch's 64 minima, the band keys, the band-pair join and the verify
 are written as SQL text over column names (``selectExpr``,
-``F.expr``, lambdas as in ``functions/cleaning.py:map_sql``): the JVM
-parses each in one call, so building the fuzzy path costs a few
-hundred py4j round-trips rather than one or more per expression
-node.  The shingle helpers take a column name.
+``F.expr``, lambdas as in ``functions/cleaning.py:map_sql``, and the
+sketch's aggregate as one ``spark.sql`` statement): the JVM parses
+each in one call, so building the fuzzy path costs under two hundred
+py4j round-trips rather than one or more per expression node.  The
+shingle helpers take a column name.
 """
 
 from __future__ import annotations
@@ -314,14 +315,20 @@ def _minhash_sketch(
     signature and the hashed shingle set, from ONE regex-shingle scan,
     one explode and one per-doc aggregate.
 
-    Plain ``min`` aggregates stay inside whole-stage codegen with
-    map-side partial aggregation; each doc's shingles come from one
-    input row, so the aggregate COMPLETES map-side and the exchange
-    carries one finished row per doc.  (Per-doc higher-order
-    ``transform``+``array_min`` lambdas run interpreted — same
-    pathology, same fix, same ~order-of-magnitude win as
-    :func:`simhash_signatures`.)  ``explode_outer`` keeps a doc with
-    no shingle as one NULL-hash row, whose minima are NULL.
+    The aggregate is one SQL statement over the exploded frame (one
+    parse instead of a py4j ``F.expr`` per aggregate), and its
+    optimized plan is the bare ``Aggregate`` over the ``Generate``.
+    Because ``collect_set`` is an object aggregate, both the partial
+    and the final aggregate run as ``ObjectHashAggregate``, outside
+    whole-stage codegen, and a task holding more than
+    ``spark.sql.objectHashAggregate.sortBased.fallbackThreshold``
+    (128) docs switches to sort-based aggregation.  Each doc's
+    shingles come from one input row, so the partial aggregate
+    already holds one finished row per doc and the exchange carries
+    that row.  (Per-doc ``transform``+``array_min`` lambdas instead
+    would run interpreted, as in :func:`simhash_signatures`.)
+    ``explode_outer`` keeps a doc with no shingle as one NULL-hash
+    row, whose minima are NULL.
 
     ``sh`` holds xxhash64 longs, not shingle strings (same trade as
     :func:`_blocked_jaccard`: exact up to 64-bit collisions, ~35%
@@ -338,12 +345,13 @@ def _minhash_sketch(
     exploded = docs.select(
         "doc_id", F.explode_outer(_hashed_shingles(text_col, n)).alias("_h")
     )
-    return exploded.groupBy("doc_id").agg(
-        *[
-            F.expr(f"min(pmod(pmod(_h, {p}) * {a} + {b}, {p})) AS _m{i}")
-            for i, (a, b) in enumerate(_MINHASH_PARAMS[:num_hashes])
-        ],
-        F.expr("collect_set(_h) AS sh"),
+    minima = ", ".join(
+        f"min(pmod(pmod(_h, {p}) * {a} + {b}, {p})) AS _m{i}"
+        for i, (a, b) in enumerate(_MINHASH_PARAMS[:num_hashes])
+    )
+    return docs.sparkSession.sql(
+        f"SELECT doc_id, {minima}, collect_set(_h) AS sh FROM {{t}} GROUP BY doc_id",
+        t=exploded,
     )
 
 

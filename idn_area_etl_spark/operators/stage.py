@@ -3,8 +3,13 @@
 :func:`_stage` materializes a frame once so several downstream
 consumers read stored blocks instead of re-running an expensive
 lineage (regex shingle scans, Python fingerprint passes), or so they
-all see ONE physical layout (the rank helpers in ``ranks.py``).  It
-stays lazy, so plan building remains action-free.
+all see ONE physical layout (the rank helpers in ``ranks.py``).
+
+Staging is not action-free.  The default lazy ``localCheckpoint``
+plans its subtree when it is called, and planning the adaptive plan
+runs the subtree's shuffle stages there and then: a fuzzy
+``curate()`` call runs two Spark jobs for the MinHash sketch, so a
+builder that stages holds execution time, not only plan building.
 
 The calling thread picks the mode:
 

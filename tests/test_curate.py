@@ -130,12 +130,13 @@ def test_cli_stats_match_the_written_output(spark, tmp_path, capsys):
 
 @pytest.mark.parametrize(
     "name, budget",
-    [("curate", 1200), ("p_curation_pipeline", 300), ("d_dsir_weights", 300)],
+    [("curate", 300), ("p_curation_pipeline", 300), ("d_dsir_weights", 300)],
 )
 def test_builds_in_few_py4j_commands(spark, sf_dir, py4j_commands, name, budget):
     """Building the fuzzy curation plan and the two curation specs
     costs few driver round-trips: their expressions are parsed SQL
-    text.  Column-built, they took ~8,100, 662 and 1,142."""
+    text.  Column-built, they took ~8,100, 662 and 1,142; with one
+    ``F.expr`` per MinHash aggregate, ``curate`` took 438."""
     from idn_area_etl_spark.plans import all_specs
     from idn_area_etl_spark.sources.tables import load_table
 
@@ -170,3 +171,31 @@ def test_fuzzy_plan_shape_is_pinned(corpus):
 
     assert plan.count("lambdafunction") == 4
     assert (nodes("Generate"), nodes("Join"), nodes("Aggregate")) == (6, 4, 6)
+
+
+def test_repeated_corpus_pass_compiles_no_classes(spark, sf_dir):
+    """A long-lived session keeps the generated classes of the queries
+    it repeats: the second pass of fuzzy curation plus the three
+    curation specs compiles nothing.  At Spark's default codegen cache
+    of 100 entries the second pass recompiled 54 classes."""
+    from idn_area_etl_spark.plans import all_specs
+    from idn_area_etl_spark.session import compiled_classes
+    from idn_area_etl_spark.sources.tables import load_table
+
+    specs = all_specs()
+    docs = load_table(spark, sf_dir, "documents")
+
+    def one_pass():
+        frames = [curate(docs, "fuzzy")] + [
+            specs[name].builder(spark, sf_dir)
+            for name in ("p_curation_pipeline", "d_dedup_exact", "d_dsir_weights")
+        ]
+        for df in frames:
+            df.write.format("noop").mode("overwrite").save()
+
+    first = compiled_classes(spark)
+    one_pass()
+    second = compiled_classes(spark)
+    one_pass()
+    assert second > first
+    assert compiled_classes(spark) == second

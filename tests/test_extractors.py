@@ -332,3 +332,31 @@ def test_sink_query_builds_in_few_py4j_commands(spark, py4j_commands):
     with py4j_commands() as commands:
         build()
     assert 0 < len(commands) <= MAX_BUILD_COMMANDS
+
+
+def test_repeated_cli_run_compiles_no_classes(spark, tmp_path):
+    """A second ``cli.main`` run on the same document finds every
+    generated class of the ETL path in the session's codegen cache."""
+    import contextlib
+    import io
+    import json
+
+    from idn_area_etl_spark.cli import main
+    from idn_area_etl_spark.session import compiled_classes
+
+    fixture = tmp_path / "tables.json"
+    fixture.write_text(json.dumps(
+        [[1, 0, area_grid()], [1, 1, island_grid()], [2, 0, island_messy_grid()]]
+    ))
+
+    def run(dest):
+        with contextlib.redirect_stdout(io.StringIO()):
+            assert main([
+                "doc.pdf", "-d", str(tmp_path / dest), "-o", "doc",
+                "--fixture-json", str(fixture),
+            ]) == 0
+
+    run("first")
+    before = compiled_classes(spark)
+    run("second")
+    assert compiled_classes(spark) == before
